@@ -60,82 +60,10 @@ def _ordered(names: list[str]) -> list[str]:
     return out
 
 
-# Queries whose registered implementation already appends its own
-# evidence record per evaluation (warehouse _run_union) — wrapping them
-# again would double the log entry and re-run their composed oracle.
-_SELF_CENSUS = {
-    "warehouse_maintenance",
-    "warehouse_lifecycle",
-    "warehouse_streaming",
-}
-
-
-def _with_census(name: str, fn):
-    """Round 15 (VERDICT r14 Next #2): every evaluation reached through
-    this module — the driver's correctness harness and
-    tools/check_oracle.py both call ``queries()`` — self-evidences via
-    the compact census (fingerprint + per-column digests + the local
-    DuckDB oracle half, no row payloads), the instrumentation that
-    adjudicated the warehouse and daily_change_pct driver-red classes.
-    A future driver ``hash_match:false`` on ANY query is then
-    self-attributing on first occurrence: the failing process's own
-    eval-log entry shows whether repo-Spark and repo-DuckDB agreed at
-    that moment.
-
-    bench.py and the pytest/plan-audit suites import ``QUERIES`` from
-    the plans modules directly, so TIMED runs and plan inspection never
-    pay the census (the r14 evidence-rent lesson — VERDICT r14 Next
-    #4). ``SPARK_GRAFT_CENSUS=0`` disables it here too. The census must
-    never break an evaluation: any failure returns the un-instrumented
-    result.
-
-    Scale note: the census collects the result to the driver, which is
-    sound HERE because every registered query returns an
-    evaluation-sized frame (audit rows, date-grain series, bounded
-    top-k) by the suite's own design — at production scale the same
-    instrument would census aggregates (fingerprint of partial digests
-    computed executor-side), not row payloads."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-        import os
-
-        out = fn(spark, sf_dir, **kw)
-        if os.environ.get("SPARK_GRAFT_CENSUS", "1") == "0":
-            return out
-        try:
-            from polygon_daily_market_data_pipeline_spark.evidence import log_eval
-
-            ck = out.localCheckpoint(eager=True)
-            log_eval(
-                name,
-                sf_dir,
-                ck.columns,
-                [tuple(r) for r in ck.collect()],
-                oracle_sql=ORACLES.get(name),
-                detail=False,
-            )
-            return ck
-        except Exception as exc:  # noqa: BLE001 — evidence must never break an eval
-            # loud breadcrumb (ADVICE r15): a silent fallback would let
-            # a census regression surface only as a driver red with no
-            # eval-log entry and no hint the census itself failed
-            print(
-                f"CENSUS-SKIP {name}: {type(exc).__name__}: {exc}",
-                file=sys.stderr,
-            )
-            return out
-
-    return wrapped
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {
-        n: (QUERIES[n] if n in _SELF_CENSUS else _with_census(n, QUERIES[n]))
-        for n in _ordered(list(QUERIES))
-    }
+    """One entry per implemented operator from SURVEY.md §2, in driver
+    order; each returns its plain lazy plan."""
+    return {n: QUERIES[n] for n in _ordered(list(QUERIES))}
 
 
 def oracle_sql() -> dict[str, str]:

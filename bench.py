@@ -24,16 +24,8 @@ os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("MKL_NUM_THREADS", "1")
 
-# The warehouse queries' self-evidencing log (evidence.py) would also
-# run each evaluation's DuckDB oracle INSIDE the timed window; bench's
-# per-row dual artifact (tools/warehouse_rows.py, below) already records
-# both sides at both scale factors, so the timed runs skip the in-eval
-# oracle — the suite timing stays a SPARK measurement.
-os.environ.setdefault("WAREHOUSE_ORACLE_EVAL", "0")
-
 _REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(_REPO))
-sys.path.insert(0, str(_REPO / "tools"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -107,11 +99,6 @@ def main() -> None:
         except Exception:
             pass
 
-    # The warehouse queries return eagerly-checkpointed frames; keep the
-    # latest one per query so the per-row artifact below can collect its
-    # audit rows without re-running the whole branch script.
-    warehouse_dfs: dict[str, object] = {}
-
     # Per-query Spark-job counts (round 16, VERDICT r15 #4): the
     # DAGScheduler's monotone job counter, sampled around each serial
     # query run, so a scheduler-latency regression (the trio's ~0.8 s
@@ -132,8 +119,6 @@ def main() -> None:
         try:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            if name.startswith("warehouse_"):
-                warehouse_dfs[name] = df
             j1 = _n_jobs()
             if j0 >= 0 and j1 >= j0 and not name.startswith("zz_canary"):
                 # re-timed queries overwrite with the latest sample
@@ -236,44 +221,6 @@ def main() -> None:
     branches = dict(warehouse_ops.BRANCH_TIMES)
     if branches:
         full["warehouse_branches"] = branches
-
-    # Per-row spark-vs-oracle evidence (tools/warehouse_rows.py): the
-    # bench-SF rows come free from the timed runs' checkpointed frames;
-    # the sf0.01 section re-runs the branches at the driver's
-    # correctness SF so the next CORRECTNESS red row is diffable by
-    # name. Failures here must never lose the bench numbers.
-    try:
-        import warehouse_rows as _wr
-
-        spark_rows = {
-            name: {
-                r["check_name"]: (r["n_rows"], r["n_aux"], r["val"])
-                for r in df.collect()
-            }
-            for name, df in warehouse_dfs.items()
-        }
-        rows_art = {
-            "bench_sf": _wr.compare(sf_dir, spark_rows=spark_rows),
-        }
-        sf001 = "/root/testdata/sf0.01"
-        if Path(sf001).exists() and sf001 != sf_dir:
-            rows_art["sf0.01"] = _wr.compare(sf001, spark=spark)
-        n = 1 + max(
-            (
-                int(p.stem.split("_r")[-1])
-                for p in _REPO.glob("BENCH_r*.json")
-                if p.stem.split("_r")[-1].isdigit()
-            ),
-            default=0,
-        )
-        (_REPO / f"WAREHOUSE_ROWS_r{n:02d}.json").write_text(
-            json.dumps(rows_art, indent=1)
-        )
-        full["warehouse_rows_all_match"] = all(
-            sec["all_match"] for sec in rows_art.values()
-        )
-    except Exception as exc:  # noqa: BLE001
-        print(f"WAREHOUSE-ROWS-FAIL: {exc}", file=sys.stderr)
 
     (_REPO / "BENCH_FULL.json").write_text(json.dumps(full, indent=1))
     print(json.dumps(out))

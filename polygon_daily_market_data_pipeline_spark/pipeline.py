@@ -196,22 +196,28 @@ def backfill(
     )
     for k, v in (datasource_options or {}).items():
         reader = reader.option(k, v)
-    feed = reader.load()
-
-    # one header-ed CSV dir per date: partition column duplicated so the
-    # in-file layout keeps the reference's (trade_date, symbol, ...) order
-    (
-        feed.withColumn("_pdate", F.col("trade_date"))
-        .write.partitionBy("_pdate")
-        .option("header", True)
-        .mode("overwrite")
-        .csv(landing_root)
-    )
-
-    dates = sorted(
-        r[0].isoformat()
-        for r in feed.select("trade_date").distinct().collect()
-    )
+    # persisted for its two actions (the landing write, then the date
+    # list) so each date is fetched from the API once: a second read
+    # would spend rate-limited quota and could see a different answer
+    # than the one that landed
+    feed = reader.load().persist()
+    try:
+        # one header-ed CSV dir per date: partition column duplicated so
+        # the in-file layout keeps the reference's (trade_date, symbol,
+        # ...) order
+        (
+            feed.withColumn("_pdate", F.col("trade_date"))
+            .write.partitionBy("_pdate")
+            .option("header", True)
+            .mode("overwrite")
+            .csv(landing_root)
+        )
+        dates = sorted(
+            r[0].isoformat()
+            for r in feed.select("trade_date").distinct().collect()
+        )
+    finally:
+        feed.unpersist()
     for d in dates:
         run_eod_pipeline(
             spark,

@@ -227,11 +227,8 @@ def daily_change_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is replaced by ``date_sk`` (``yyyymmdd`` BIGINT, the F7
     shim ``functions.calendar.date_sk`` — merge_dim_date.sql:8), so no
     value class a driver-side date formatter could render differently
-    survives to the hash. The r14 inline census (eager checkpoint +
-    collect + oracle per call) moved to the suite-wide wrapper in
-    ``__spark_entry__`` — every driver evaluation of EVERY query now
-    self-evidences there, and this function returns the pure lazy plan
-    (bench times one execution, no evidence rent).
+    survives to the hash. The function returns the pure lazy plan;
+    ``tools/check_oracle.py`` is its differential.
 
     Scale: daily grain after aggregation is small; the un-partitioned
     window is fine *post-agg*. At 100 TB the pre-agg does the heavy

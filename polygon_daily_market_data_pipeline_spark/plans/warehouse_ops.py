@@ -1766,8 +1766,9 @@ def _streaming_mv_rows(
 # pays only for the CTEs its fragments use), ``_CHECK_SQL`` one SELECT
 # fragment per check_name. ``_oracle_for`` composes the oracle for any
 # subset: each registered warehouse query carries exactly its rows'
-# arithmetic, and tools/warehouse_rows.py runs single checks standalone
-# when a driver mismatch needs localizing to one branch.
+# arithmetic, and a single branch's checks can be compared standalone
+# (``_oracle_for(checks_for([branch]))``) when a mismatch needs
+# localizing to one branch.
 _ORACLE_PRELUDE = f"""
 
     WITH off AS (
@@ -2988,8 +2989,8 @@ def _wap_rows(
 # signal for 22 components, and when it hash-mismatched nothing in the
 # artifact said which row diverged. The union is now split into three
 # queries of ≤15 audit rows each — a branch regression reds a SMALL
-# query — and tools/warehouse_rows.py persists per-row spark-vs-oracle
-# values every bench run so the next mismatch is diffable post-hoc.
+# query, and ``_run_union(..., [branch])`` against
+# ``_oracle_for(checks_for([branch]))`` narrows it to one branch.
 # ---------------------------------------------------------------------------
 
 # Per-branch wall-clock of the LAST timed build across the three
@@ -4297,9 +4298,8 @@ def build_maintenance_union(
 
 # Reentrant, process-wide session-conf pins (round 10): session conf is
 # SHARED state, and evaluations overlap — the driver may run queries
-# concurrently in one session (the `_run_union` docstring's
-# harness-threads hypothesis; tools/chaos_eval.py exercises it) and the
-# branch scripts run in parallel threads within one evaluation. A plain
+# concurrently in one session (driver harness threads, see
+# `_run_union`) and the branch scripts run in parallel threads within one evaluation. A plain
 # pin/restore per scope means scope A's restore can land MID-FLIGHT in
 # scope B: for the TZ pin B's remaining `_CUT` literals would parse
 # under the restored (possibly non-UTC) zone and shift real row values
@@ -4402,6 +4402,8 @@ def _run_union(
     a per-call scratch dir, eagerly checkpoint the (tiny) audit rows,
     then restore the TZ and remove the scratch before returning — a
     caller's session and filesystem come back exactly as they were.
+    ``name`` is kept for existing callers and does not affect the
+    result.
 
     The scratch name carries pid AND a fresh uuid: two concurrent runs
     in the SAME process (driver harness threads, a concurrent bench)
@@ -4409,14 +4411,9 @@ def _run_union(
     and same-pid scratch collision was one of the few candidate causes
     that could not be excluded from the artifact alone.
 
-    EVERY evaluation is self-evidencing (round-10, VERDICT r9 #1): the
-    checkpointed audit rows are collected here — a second collect of a
-    14-row localCheckpoint is free, and it reads the SAME materialized
-    partitions the caller's collect will read — and appended, raw plus
-    driver-normalized plus fingerprint, to ``WAREHOUSE_EVAL_LOG.jsonl``
-    via :mod:`..evidence`. The next driver-side hash mismatch is
-    therefore diffable to a named row from the committed log without
-    any reproduction attempt."""
+    The DuckDB twin of any branch subset is
+    ``_oracle_for(checks_for(branches))``; ``tools/check_oracle.py``
+    compares the two by fingerprint."""
     # the date-cut literals compare against TIMESTAMP columns: pin the
     # session to UTC so a non-UTC driver session cannot shift the
     # boundary relative to the naive-UTC DuckDB oracle (same contract
@@ -4448,21 +4445,7 @@ def _run_union(
             ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    out = out.orderBy("check_name")
-    from polygon_daily_market_data_pipeline_spark.evidence import log_eval
-
-    log_eval(
-        name,
-        sf_dir,
-        out.columns,
-        [tuple(r) for r in out.collect()],
-        # round 11 (VERDICT r10 #2): the evaluation's own DuckDB twin
-        # runs locally too, so the log carries BOTH halves of what the
-        # repo computed — a later driver-side mismatch is then
-        # attributable to the driver's oracle/hasher, not ours
-        oracle_sql=_oracle_for(checks_for(branches)),
-    )
-    return out
+    return out.orderBy("check_name")
 
 
 @register(

@@ -8,19 +8,6 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# Route warehouse eval-log appends to a per-run tmp file unless the
-# caller explicitly chose a sink: a plain pytest run must not append
-# throwaway sf0.001 records to the committed repo-root evidence log or
-# dirty the working tree (ADVICE r10). Tests that exercise the log set
-# the env themselves via monkeypatch and win over this default.
-import os as _os  # noqa: E402
-import tempfile as _tempfile  # noqa: E402
-
-if "WAREHOUSE_EVAL_LOG" not in _os.environ:
-    _os.environ["WAREHOUSE_EVAL_LOG"] = _os.path.join(
-        _tempfile.gettempdir(), f"wh_eval_log_pytest_{_os.getpid()}.jsonl"
-    )
-
 from polygon_daily_market_data_pipeline_spark.session import get_spark  # noqa: E402
 
 

@@ -62,56 +62,13 @@ def test_oracle_column_aliases_match_shape():
         assert "AS " in sql or "as " in sql or name == "zz_sentinel_tail", name
 
 
-def test_census_wrapper_logs_one_entry_per_eval(spark, tmp_path, monkeypatch):
-    """Round 15 (VERDICT r14 Next #2): every evaluation through
-    queries() appends ONE compact census record — fingerprint,
-    per-column digests, and the local DuckDB oracle half with
-    oracle_match — so a driver red on any query is self-attributing
-    from the committed log."""
-    import json
-
-    log = tmp_path / "census.jsonl"
-    monkeypatch.setenv("WAREHOUSE_EVAL_LOG", str(log))
-    monkeypatch.delenv("SPARK_GRAFT_CENSUS", raising=False)
-    ent = _entry()
-    df = ent.queries()["pricing_summary"](spark, "/root/testdata/sf0.001")
-    assert df.count() > 0  # the returned (checkpointed) frame still serves
-    recs = [json.loads(line) for line in log.read_text().splitlines()]
-    assert len(recs) == 1
-    rec = recs[0]
-    assert rec["query"] == "pricing_summary"
-    assert rec["col_digests"] and "rows" not in rec  # compact mode
-    assert rec["oracle_match"] is True
-
-
-def test_census_wrapper_env_opt_out(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CENSUS=0 returns the un-instrumented plan and logs
-    nothing — the contract bench.py/plan_audit rely on."""
-    log = tmp_path / "census_off.jsonl"
-    monkeypatch.setenv("WAREHOUSE_EVAL_LOG", str(log))
-    monkeypatch.setenv("SPARK_GRAFT_CENSUS", "0")
-    ent = _entry()
-    df = ent.queries()["pricing_summary"](spark, "/root/testdata/sf0.001")
-    assert df.count() > 0
-    assert not log.exists()
-    # and the plan is a real plan, not a checkpoint scan
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" not in plan, plan
-
-
-def test_census_wrapper_skips_self_logging_warehouse_queries():
-    """The warehouse queries log via _run_union already — wrapping them
-    again would double the entry and re-run their composed oracle."""
+def test_queries_are_the_registered_plans():
+    """queries() hands the harness the registered functions themselves:
+    plain lazy plans, with no wrapper between the driver and the query."""
     from polygon_daily_market_data_pipeline_spark.plans.analytics import QUERIES
 
     ent = _entry()
     qs = ent.queries()
-    for wh in (
-        "warehouse_maintenance",
-        "warehouse_lifecycle",
-        "warehouse_streaming",
-    ):
-        assert qs[wh] is QUERIES[wh]
-    assert qs["pricing_summary"] is not QUERIES["pricing_summary"]
-    # wraps preserve identity metadata for any introspecting harness
-    assert qs["pricing_summary"].__name__ == "pricing_summary"
+    assert set(qs) == set(QUERIES)
+    for n in qs:
+        assert qs[n] is QUERIES[n], n

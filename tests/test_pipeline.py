@@ -152,6 +152,59 @@ def test_backfill_range_via_datasource(spark, tmp_path):
     assert wh.read("fact_daily_price", schemas.FACT_DAILY_PRICE).count() == 2 * 120
 
 
+def test_backfill_fetches_each_date_once(spark, tmp_path):
+    """The landing write and the returned date list share ONE read of
+    the feed: over HTTP each calendar day costs exactly one GET."""
+    import collections
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from polygon_daily_market_data_pipeline_spark.pipeline import backfill
+    from polygon_daily_market_data_pipeline_spark.sources.polygon_datasource import (
+        synthetic_day_body,
+    )
+
+    gets: collections.Counter = collections.Counter()
+    lock = threading.Lock()
+
+    class Stub(BaseHTTPRequestHandler):
+        def do_GET(self):
+            day = self.path.split("?")[0].rstrip("/").rsplit("/", 1)[-1]
+            with lock:
+                gets[day] += 1
+            body = synthetic_day_body(day).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Stub)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    try:
+        dates = backfill(
+            spark, str(tmp_path / "wh"), str(tmp_path / "landing"),
+            "2024-01-05", "2024-01-08",
+            datasource_options={
+                "transport": "http",
+                "base_url": f"http://127.0.0.1:{server.server_address[1]}",
+            },
+            fixed_ts=TS,
+        )
+    finally:
+        server.shutdown()
+        server.server_close()
+        thread.join()
+    assert dates == ["2024-01-05", "2024-01-08"]
+    assert dict(gets) == {
+        "2024-01-05": 1, "2024-01-06": 1, "2024-01-07": 1, "2024-01-08": 1,
+    }
+
+
 def test_partition_compaction(spark, tmp_path):
     from polygon_daily_market_data_pipeline_spark.operators.compaction import (
         compact_table,

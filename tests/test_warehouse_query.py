@@ -243,9 +243,8 @@ def test_concurrent_unions_share_one_tz_pin(spark):
     """Two warehouse evaluations OVERLAPPING in one non-UTC session:
     the reentrant _utc_pin must hold UTC until the last one exits (a
     per-query pin/restore lets A's restore land mid-flight in B's
-    build, shifting B's _CUT literals — the only-under-concurrency
-    flake class tools/chaos_eval.py exercises at full scale), and the
-    session TZ must come back as the caller set it. Row values are
+    build, shifting B's _CUT literals — a flake class that shows only
+    under concurrency), and the session TZ must come back as the caller set it. Row values are
     asserted identical to a serial run."""
     import threading
 

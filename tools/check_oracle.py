@@ -9,6 +9,7 @@ an order-insensitive value hash. Usage:
 
 from __future__ import annotations
 
+import hashlib
 import sys
 from pathlib import Path
 
@@ -21,6 +22,16 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings".split()
 )
+
+
+def connect(sf_dir: str) -> "duckdb.DuckDBPyConnection":
+    """A DuckDB connection with one view per testdata table in sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
 
 
 def _norm(v, spark_side=False):
@@ -55,28 +66,53 @@ def _norm(v, spark_side=False):
     return str(v)
 
 
-def fingerprint(cols, rows, spark_side=False):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "|".join(_norm(r[i], spark_side) for i in order) for r in rows
-    )
-    import hashlib
-
+def _digest(lines) -> str:
     h = hashlib.sha256()
-    for line in lines:
+    for line in sorted(lines):
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
 
 
+def fingerprint(cols, rows, spark_side=False):
+    """Order-insensitive value hash: columns sorted by name, each cell
+    normalized, the joined lines sorted, sha256 (16 hex chars)."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return _digest("|".join(_norm(r[i], spark_side) for i in order) for r in rows)
+
+
+def col_digests(cols, rows, spark_side=False) -> "dict[str, str]":
+    """Per-column fingerprint: sha256 over that column's sorted
+    normalized values. On a hash mismatch the differing digests name
+    the column that moved. Each column is sorted on its own, so values
+    re-paired across rows move the row fingerprint while every column
+    digest stays equal."""
+    return {
+        c: _digest(_norm(r[i], spark_side) for r in rows)
+        for i, c in enumerate(cols)
+    }
+
+
+def column_diffs(scols, srows, ocols, orows) -> "list[str]":
+    """Name the columns whose digests differ between the Spark rows and
+    the DuckDB rows (same column set assumed), one line per column with
+    both digests."""
+    sd = col_digests(scols, srows, spark_side=True)
+    od = col_digests(ocols, orows)
+    out = [
+        f"column {c} spark={sd[c]} duckdb={od[c]}"
+        for c in sorted(sd)
+        if sd[c] != od[c]
+    ]
+    return out or ["all column digests equal: values re-paired across rows"]
+
+
 def run_suite(
     spark, con, sf_dir: str, only: "set[str] | None" = None,
-    label: str = "",
 ) -> "tuple[int, list[str]]":
     """One differential pass over the registered suite in driver order:
     run each Spark query, run its DuckDB oracle, compare count/columns/
-    value hash. Returns (checked, failures). Reused by main() and by
-    tools/chaos_eval.py --driver-seq (the full-sequence chaos mode)."""
+    value hash. Returns (checked, failures)."""
     import __spark_entry__ as ent
 
     qs, oracles = ent.queries(), ent.oracle_sql()
@@ -91,18 +127,18 @@ def run_suite(
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {label}{name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
         if name not in oracles:
-            print(f"weak  {label}{name}: rows-only ({len(srows)} rows)")
+            print(f"weak  {name}: rows-only ({len(srows)} rows)")
             continue
         try:
             orel = con.sql(oracles[name])
             ocols = [c.lower() for c in orel.columns]
             orows = orel.fetchall()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {label}{name}: duckdb error: {e}")
+            print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
             continue
         scols_l = [c.lower() for c in scols]
@@ -116,11 +152,12 @@ def run_suite(
             oh = fingerprint(ocols, orows)
             if sh != oh:
                 problems.append(f"hash spark={sh} duckdb={oh}")
+                problems.extend(column_diffs(scols_l, srows, ocols, orows))
         if problems:
-            print(f"FAIL  {label}{name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems))
             failures.append(name)
         else:
-            print(f"ok    {label}{name} ({len(srows)} rows)")
+            print(f"ok    {name} ({len(srows)} rows)")
     return checked, failures
 
 
@@ -133,12 +170,7 @@ def main() -> int:
     spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("WARN")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    checked, failures = run_suite(spark, con, sf_dir, only or None)
+    checked, failures = run_suite(spark, connect(sf_dir), sf_dir, only or None)
     print(f"\n{checked - len(failures)}/{checked} ok")
     return 1 if failures else 0
 

@@ -125,14 +125,6 @@ def count_signals(jvm, root) -> dict[str, int]:
 
 
 def audit(sf_dir: str) -> list[dict]:
-    import os
-
-    # round 15: __spark_entry__.queries() wraps every entry with the
-    # eval census (eager localCheckpoint + collect + local oracle) —
-    # exactly what a PLAN audit must not see (a checkpoint scan audits
-    # as a blank plan). Opt out; the census belongs to driver-style
-    # evaluations, not plan inspection.
-    os.environ["SPARK_GRAFT_CENSUS"] = "0"
     import __spark_entry__ as ent
     from polygon_daily_market_data_pipeline_spark.session import get_spark
 
