@@ -138,10 +138,16 @@ def test_col_digests_name_the_column_that_moved():
     ]
 
 
-def test_spark_matches_duckdb_twin_at_sf0_001(spark, capsys):
-    """The tier-1 Spark-vs-DuckDB differential: one registered query
-    through ``queries()`` and one warehouse branch against its composed
-    oracle."""
+def test_queries_match_duckdb_twin_at_sf0_001(spark, capsys):
+    """A registered query through ``queries()`` against its DuckDB twin."""
+    con = check_oracle.connect(SF)
+    checked, failures = check_oracle.run_suite(spark, con, SF, {"pricing_summary"})
+    assert (checked, failures) == (1, []), capsys.readouterr().out
+
+
+def test_run_union_matches_composed_oracle_at_sf0_001(spark):
+    """One warehouse branch through ``_run_union`` against its composed
+    DuckDB oracle, compared by fingerprint."""
     from polygon_daily_market_data_pipeline_spark.plans.warehouse_ops import (
         _oracle_for,
         _run_union,
@@ -149,9 +155,6 @@ def test_spark_matches_duckdb_twin_at_sf0_001(spark, capsys):
     )
 
     con = check_oracle.connect(SF)
-    checked, failures = check_oracle.run_suite(spark, con, SF, {"pricing_summary"})
-    assert (checked, failures) == (1, []), capsys.readouterr().out
-
     df = _run_union(spark, SF, ["packing"])
     rows = [tuple(r) for r in df.collect()]
     rel = con.sql(_oracle_for(checks_for(["packing"])))
