@@ -44,13 +44,13 @@ _EXPORTS = {
     "eval_ngram_set": "decontam",
     # dedupe
     "latest_by_key": "dedupe",
-    # governance
+    # governance (its ``governance()`` reader is not re-exported: the
+    # submodule import binds that package attribute to the module)
     "set_masking_policy": "governance",
     "drop_masking_policy": "governance",
     "set_row_access_policy": "governance",
     "drop_row_access_policy": "governance",
     "read_governed": "governance",
-    "governance": "governance",
     "governed_columns": "governance",
     "access_history": "governance",
     "k_anonymity_violations": "governance",
@@ -143,7 +143,6 @@ _EXPORTS = {
     "scan_version_with_stats": "versioned",
     "vacuum": "versioned",
     "versioned_stream_sink": "versioned",
-    "versioned_enrich_sink": "versioned",
     "write_json_sidecar": "versioned",
 }
 
@@ -202,7 +201,6 @@ __all__ = [
     "scan_version_with_stats",
     "vacuum",
     "versioned_stream_sink",
-    "versioned_enrich_sink",
     "write_json_sidecar",
     # round-13 continuation surfaces
     "bm25_postings", "bm25_topk", "rrf_fuse", "mmr_rerank",
@@ -226,7 +224,7 @@ __all__ = [
     "train_quality_model", "quality_model_scores",
     "filter_by_quality_model",
     "set_masking_policy", "drop_masking_policy", "set_row_access_policy",
-    "drop_row_access_policy", "read_governed", "governance",
+    "drop_row_access_policy", "read_governed",
     "governed_columns", "access_history", "k_anonymity_violations",
     "enforce_k_anonymity",
 ]

@@ -1,6 +1,6 @@
 """Z-order (Morton) data layout — multi-dimensional file pruning.
 
-Compaction (`compaction.py`) fixes file COUNT; this fixes file
+Compaction (`versioned.optimize_compact`) fixes file COUNT; this fixes file
 CONTENT: a table queried by more than one predicate column (events by
 user AND by time; lineitem by part AND by supplier) can only cluster
 one of them with a plain sort. Interleaving the bits of both columns

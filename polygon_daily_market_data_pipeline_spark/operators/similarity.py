@@ -719,7 +719,7 @@ def quantizer_index(
                 pq[:, s] = _sq_dists(sub, b_b.value[s]).argmin(axis=1)
             sq = np.rint(
                 np.clip((mat - b_lo.value) * b_sc.value, 0.0, 255.0)
-            ).astype(np.int32)
+            ).astype(np.int64)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
@@ -733,7 +733,7 @@ def quantizer_index(
     return df.select(id_col, vec_col).mapInPandas(
         run,
         f"{id_col} long, {vec_col} array<double>, cell int, "
-        "pq_code array<int>, sq_code array<int>",
+        "pq_code array<int>, sq_code array<long>",
     )
 
 
@@ -1015,7 +1015,11 @@ def cosine_topk_ivf(
     ``assigned``: a pre-assigned ``(id_col, vec_col, cell)`` frame —
     e.g. a ``quantizer_index`` slice over the SAME centroids — replaces
     the in-line corpus assign pass; cells are the identical argmin, so
-    the candidate set and scores are unchanged."""
+    the candidate set and scores are unchanged. It requires
+    ``centroids``: cells built against other centroids than the probes
+    would silently collapse recall."""
+    if assigned is not None and centroids is None:
+        raise ValueError("assigned= needs the centroids its cells were built with")
     if centroids is None:
         centroids = kmeans_centroids(corpus, id_col, vec_col, k=n_clusters)
     spark = corpus.sparkSession
@@ -1434,7 +1438,15 @@ def cosine_topk_ivfpq(
     Shuffle shape: one Arrow indexing pass (cell + code, both
     broadcast-side models), a broadcast join of the exploded query
     probes on cell id, a vectorized ADC gather per candidate row, and
-    the shared hit-sized exact rerank."""
+    the shared hit-sized exact rerank.
+
+    ``indexed`` requires the ``centroids`` and ``codebooks`` it was
+    built with: recomputing either would mismatch the pre-built cells
+    or codes and silently collapse recall."""
+    if indexed is not None and (centroids is None or codebooks is None):
+        raise ValueError(
+            "indexed= needs the centroids and codebooks it was built with"
+        )
     if centroids is None:
         centroids = kmeans_centroids(corpus, id_col, vec_col, k=n_clusters)
     if codebooks is None:
@@ -1692,7 +1704,15 @@ def cosine_topk_ivfsq(
     ``cosine_topk_ivfpq``: one Arrow indexing pass (cell + code, both
     models broadcast), a broadcast join of the exploded query probes
     on cell id, vectorized scoring per candidate row, hit-sized
-    rerank."""
+    rerank.
+
+    ``indexed`` requires the ``centroids`` and ``bounds`` it was built
+    with: recomputing either would mismatch the pre-built cells or
+    codes and silently collapse recall."""
+    if indexed is not None and (centroids is None or bounds is None):
+        raise ValueError(
+            "indexed= needs the centroids and bounds it was built with"
+        )
     if centroids is None:
         centroids = kmeans_centroids(corpus, id_col, vec_col, k=n_clusters)
     if bounds is None:

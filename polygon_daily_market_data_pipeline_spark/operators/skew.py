@@ -77,9 +77,7 @@ def two_phase_distinct_count(
     )
 
 
-def heavy_hitters(
-    df: DataFrame, col: str, k: int = 16, stats_out: "dict | None" = None
-) -> "list[tuple]":
+def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> "list[tuple]":
     """EXACT heavy hitters — every value with frequency > n/(k+1) and
     its exact count, via the two-pass Misra-Gries pattern (round 13):
 
@@ -130,11 +128,6 @@ def heavy_hitters(
         .distinct()
         .collect()
     ]
-    if stats_out is not None:
-        # probe instrumentation (tools/scaling_probe.py): the candidate
-        # set is the driver-bounded quantity — ≤ k·partitions whatever
-        # the row count
-        stats_out["n_candidates"] = len(cands)
     if not cands:
         return []
     agg = (

@@ -1119,54 +1119,6 @@ def write_json_sidecar(path: str, payload: dict) -> None:
     os.replace(tmp, path)
 
 
-def versioned_enrich_sink(
-    out_dir: str,
-    dim_dir: str,
-    on,
-    how: str = "left",
-    stats_cols: "list[str] | None" = None,
-):
-    """Stream-static enrichment against a VERSIONED dim that refreshes
-    per micro-batch (round 13): each batch joins the dim at the latest
-    version RESOLVED AT BATCH TIME — explicit where Spark's
-    stream-static join leaves the static side's refresh semantics to
-    the source — and the enriched batch commits exactly-once (batch
-    watermark) with the dim version it used recorded as the commit's
-    ``_dim_version`` partition tag. That tag is the audit AND the
-    reprocessing lever: "which batches were enriched against dim v3"
-    is a partition-pruned metadata read, and re-enriching them is a
-    ``drop_partitions`` + replay, never a table rewrite.
-
-    Replay determinism falls out of exactly-once: a replayed batch id
-    is SKIPPED, so the output permanently reflects the dim version
-    each batch FIRST used — a crash can never silently re-enrich old
-    rows against a newer dim. The dim is broadcast (enrichment dims
-    are planner-small; for a big dim, pre-join with
-    ``plan_join_with_stats`` semantics instead)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        wm = last_committed_batch(out_dir)
-        if wm is not None and batch_id <= wm:
-            return  # replay: the original enrichment stands
-        versions = _manifests(dim_dir)
-        if not versions:
-            raise FileNotFoundError(f"no versions in {dim_dir}")
-        dv = versions[-1]
-        dim = read_version(batch_df.sparkSession, dim_dir, version=dv)
-        out = batch_df.join(F.broadcast(dim), on, how)
-        commit_version(
-            out,
-            out_dir,
-            mode="append",
-            stats_cols=stats_cols,
-            batch_id=batch_id,
-            partition_values={"_dim_version": str(dv)},
-            retries=2,
-        )
-
-    return sink
-
-
 _BLOOM_SIDECAR = "_bloom.json"
 _BLOOM_MAX_BITS = 1 << 23  # 1 MiB bitmap cap per (file, column)
 
@@ -5079,76 +5031,6 @@ def fast_count(table_dir: str, version: int | None = None) -> "int | None":
     return total
 
 
-def fast_count_by_partition(
-    table_dir: str,
-    col: str,
-    version: "int | None" = None,
-) -> "dict | None":
-    """Per-partition COUNT(*) from manifest metadata alone — the
-    GROUP BY twin of ``fast_count`` (round 12): for a partition-tagged
-    table (``commit_version(partition_values=...)``, the daily-append
-    layout) returns ``{partition_value: rows}`` with zero data IO and
-    zero Spark jobs — the per-day row-count dashboard at a 100 TB table
-    is a driver-side manifest walk. Deletion-vector cardinalities are
-    attributed to their directory's partition and subtracted. Returns
-    ``None`` whenever exactness cannot be proven: a pending
-    equality-delete list, any directory untagged or lacking ``col`` in
-    its tag (its rows belong to no provable group), any file without
-    recorded rows (commit with ``stats_cols`` — any column — to record
-    footer row counts, same requirement as ``fast_count``), or a dv
-    sidecar whose directory cannot be resolved.
-
-    ``col`` may also name a TRANSFORM-partitioned column (round 13,
-    ``commit_version(partition_transform=...)``): a dir whose
-    transform tag covers exactly ONE unit (lo == hi — the daily-append
-    shape at the transform's grain) groups under that unit string
-    (e.g. ``{"2024-01-02": rows}``); a dir SPANNING units cannot
-    attribute its rows without a scan, so the whole group-by is
-    unprovable — same asymmetry as everywhere else on this surface. A
-    scalar tag for ``col`` wins when both exist on a dir."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    v = versions[-1] if version is None else version
-    m = _load_manifest(table_dir, v)
-    if m.get("eqdel"):
-        return None
-    from polygon_daily_market_data_pipeline_spark.operators.layout import (
-        list_parquet_files,
-    )
-
-    parts = m.get("partitions") or {}
-    stats = m.get("files") or {}
-    dir_of_value: "dict[str, object]" = {}
-    out: "dict" = {}
-    for d in m["dirs"]:
-        tag = parts.get(d)
-        if tag is None:
-            return None  # rows of an untagged dir belong to no group
-        if col in tag:
-            val = tag[col]
-        elif _T_PREFIX + col in tag:
-            tent = tag[_T_PREFIX + col]
-            if tent["lo"] != tent["hi"]:
-                return None  # dir spans units: unattributable rows
-            val = tent["lo"]
-        else:
-            return None
-        dir_of_value[os.path.normpath(d)] = val
-        dir_path = d if os.path.isabs(d) else os.path.join(table_dir, d)
-        for f in list_parquet_files(dir_path):
-            ent = stats.get(os.path.relpath(f, table_dir))
-            if ent is None:
-                return None
-            out[val] = out.get(val, 0) + ent["rows"]
-    for rel, ent in (m.get("dv") or {}).items():
-        val = dir_of_value.get(os.path.normpath(os.path.dirname(rel)))
-        if val is None:
-            return None  # unattributable vector: unprovable
-        out[val] = out.get(val, 0) - ent["n"]
-    return out
-
-
 def fast_aggregate(
     table_dir: str,
     col: str,
@@ -6119,115 +6001,6 @@ def histogram_bounds(
             lo_rows += n
         hi_rows += n
     return lo_rows, hi_rows
-
-
-def describe_histogram(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    version: "int | None" = None,
-) -> DataFrame:
-    """DESCRIBE HISTOGRAM: the column's sidecar histogram as a
-    DataFrame — one row per bucket (``bucket``, ``lo``, ``hi``,
-    ``n_rows``) with the below/above tails as buckets -1 and B (their
-    open side closed by the exact min/max envelope) and a trailing
-    ``nan`` bucket when NaN rows were recorded. Metadata-only (zero
-    scan jobs) — the dashboard surface over ``analyze_version``'s
-    counts, the way ``describe_statistics`` surfaces the envelope.
-    Raises KeyError when the column was never analyzed or carries no
-    histogram (non-numeric / NaN extrema / hist_buckets=0)."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    v = versions[-1] if version is None else version
-    analyzed = [
-        pv for pv in versions
-        if pv <= v and os.path.exists(_stats_path(table_dir, pv))
-    ]
-    if not analyzed:
-        raise KeyError(f"no ANALYZE sidecar at or before v{v} in {table_dir}")
-    with open(_stats_path(table_dir, analyzed[-1])) as f:
-        stats = json.load(f)
-    st = stats["columns"].get(col)
-    h = (st or {}).get("hist")
-    if h is None:
-        raise KeyError(f"column {col!r} has no histogram in {table_dir}")
-    edges = h["edges"]
-    mn = _stat_from_json(st["min"]) if st.get("min") is not None else None
-    mx = _stat_from_json(st["max"]) if st.get("max") is not None else None
-    rows = []
-    if h["below"]:
-        rows.append((-1, float(mn), float(edges[0]), h["below"]))
-    for i in range(len(edges) - 1):
-        rows.append((i, float(edges[i]), float(edges[i + 1]), h["counts"][i]))
-    b = len(edges) - 1
-    if h["above"]:
-        rows.append((b, float(edges[-1]), float(mx), h["above"]))
-    if h.get("nan", 0):
-        rows.append((b + 1, None, None, h["nan"]))
-    return spark.createDataFrame(
-        rows, "bucket int, lo double, hi double, n_rows long"
-    )
-
-
-def quantile_bracket(
-    table_dir: str,
-    col: str,
-    q: float,
-    version: "int | None" = None,
-) -> "tuple[float, float] | None":
-    """PROVABLE bracket ``(lo, hi)`` containing the q-quantile of the
-    column's non-null values, from the ANALYZE sidecar alone — zero
-    Spark jobs, O(buckets) work. The quantile is the k-th smallest
-    value with k = max(1, ceil(q·n)); exact per-segment counts locate
-    the segment it falls in, and the recorded min/max envelopes close
-    the otherwise-open tails, so the bracket is always finite and the
-    true quantile PROVABLY lies inside it (an approximate percentile
-    whose error bar is a guarantee, not a confidence interval — the
-    posture every stats surface here keeps).
-
-    Same validity discipline as ``histogram_bounds``: None unless a
-    sidecar exists at exactly ``version``, the column has a histogram,
-    and no NaN rows were recorded."""
-    if not 0.0 <= q <= 1.0:
-        raise ValueError(f"quantile must be in [0, 1], got {q}")
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    v = versions[-1] if version is None else version
-    if not os.path.exists(_stats_path(table_dir, v)):
-        return None
-    with open(_stats_path(table_dir, v)) as f:
-        stats = json.load(f)
-    st = stats["columns"].get(col)
-    h = (st or {}).get("hist")
-    if h is None or h.get("nan", 0):
-        return None
-    if st.get("min") is None or st.get("max") is None:
-        return None
-    mn, mx = _stat_from_json(st["min"]), _stat_from_json(st["max"])
-    if not isinstance(mn, (int, float)) or not isinstance(mx, (int, float)):
-        return None
-    edges = h["edges"]
-    # segment value brackets, tails closed by the exact min/max
-    # envelope (values below edges[0] still satisfy v >= min; values
-    # above edges[-1] satisfy v <= max)
-    segs = [(float(mn), float(edges[0]), h["below"])]
-    for i in range(len(edges) - 1):
-        segs.append((float(edges[i]), float(edges[i + 1]), h["counts"][i]))
-    segs.append((float(edges[-1]), float(mx), h["above"]))
-    n = sum(s[2] for s in segs)
-    if n == 0:
-        return None
-    import math
-
-    k = max(1, math.ceil(q * n))
-    cum = 0
-    for lo, hi, cnt in segs:
-        cum += cnt
-        if cum >= k:
-            return (lo, hi)
-    return (segs[-1][0], segs[-1][1])  # unreachable: cum == n >= k
 
 
 def _stats_path(table_dir: str, v: int) -> str:

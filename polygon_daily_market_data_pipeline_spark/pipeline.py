@@ -83,14 +83,18 @@ class Warehouse:
 
     def overwrite_partitions(self, df: DataFrame, table: str, partition_by: str):
         """Dynamic partition overwrite — only the partitions present in
-        ``df`` are replaced (idempotent per-date re-load)."""
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        ``df`` are replaced (idempotent per-date re-load). The mode is a
+        per-write option, so the session conf is left as it was."""
         if not self.exists(table):
             self.overwrite(df, table, partition_by)
             return
-        df.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
-            partition_by
-        ).parquet(self._path(table))
+        (
+            df.localCheckpoint(eager=True)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_by)
+            .parquet(self._path(table))
+        )
 
 
 def run_eod_pipeline(
@@ -204,11 +208,13 @@ def backfill(
     try:
         # one header-ed CSV dir per date: partition column duplicated so
         # the in-file layout keeps the reference's (trade_date, symbol,
-        # ...) order
+        # ...) order; dynamic overwrite replaces only the fetched dates'
+        # dirs, whatever the session's partitionOverwriteMode
         (
             feed.withColumn("_pdate", F.col("trade_date"))
             .write.partitionBy("_pdate")
             .option("header", True)
+            .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .csv(landing_root)
         )

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polygon_daily_market_data_pipeline_spark.functions.calendar import calendar_attributes, date_sk
@@ -118,7 +118,3 @@ def fact_source_rows(
 def fact_upsert(fact: DataFrame, source: DataFrame) -> DataFrame:
     """FACT upsert on (security_id, date_sk) — merge_facts_daily.sql:21-37."""
     return merge_upsert(fact, source, keys=["security_id", "date_sk"])
-
-
-def empty_like(spark: SparkSession, schema) -> DataFrame:
-    return spark.createDataFrame([], schema)

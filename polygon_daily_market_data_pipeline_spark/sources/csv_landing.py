@@ -73,14 +73,3 @@ def typed_raw_load(
         F.col("_metadata.file_path").alias("_src_file"),          # METADATA$FILENAME
         ts.alias("_ingest_ts"),                                   # CURRENT_TIMESTAMP
     )
-
-
-def write_raw_partition(df: DataFrame, warehouse_path: str) -> None:
-    """Append/overwrite the RAW table's date partition — idempotent
-    re-load (FORCE=TRUE analog) via dynamic partition overwrite."""
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        df.write.mode("overwrite")
-        .partitionBy("trade_date")
-        .parquet(f"{warehouse_path}/raw_eod_prices")
-    )

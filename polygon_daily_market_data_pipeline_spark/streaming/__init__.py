@@ -1,9 +1,9 @@
 """Structured Streaming front end.
 
-The reference is a strictly daily batch (cron ``0 0 * * *`` —
-``/root/reference/dags/get_securities_data.py:73``); this package is its
-streaming re-expression per SURVEY.md §2.9: the landing directory becomes
-a file source, the daily run becomes ``Trigger.AvailableNow``, idempotent
-re-loads become the file-sink commit log + checkpoint, and the analytics
-that would re-run per day become watermarked incremental aggregations.
+The reference is a strictly daily batch (cron ``0 0 * * *`` in its
+``dags/get_securities_data.py:73``); this package holds
+the streaming operators a continuous ingest of the same data needs
+(SURVEY.md §2.9): watermarked incremental aggregations, the stateful
+sessionizer and incremental corpus dedup. The daily landing→RAW→CORE
+load itself has one path, ``pipeline.run_eod_pipeline``.
 """

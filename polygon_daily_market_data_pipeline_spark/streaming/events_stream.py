@@ -246,132 +246,6 @@ def sessionize_stream(events: DataFrame, watermark: str = "2 hours") -> DataFram
     )
 
 
-def sessionize_stream_tws(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """The same gap-session operator on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (typed state handles + explicit
-    event-time timers instead of a single state tuple + timeout conf).
-
-    Kept alongside ``sessionize_stream`` rather than replacing it: both
-    produce identical sessions (differential-tested against
-    ``sessionize_batch``), but the TWS form is where new stateful
-    features land (state TTL, multiple state variables, timer lists) —
-    at 100 TB the interesting delta is that state variables are
-    per-name, so a processor can evolve its state schema additively.
-
-    Timer discipline: one live timer per key at ``session_end + gap``.
-    Stale timers (superseded by a later event extending the session)
-    are deleted on re-registration, so ``handleExpiredTimer`` only ever
-    fires for a genuinely idle session — same eviction semantics as the
-    EventTimeTimeout path in ``_sessionize_group``.
-
-    Import-guarded: the TWS state server speaks protobuf
-    (``pyspark.sql.streaming.proto``), so the ``protobuf`` package must
-    be installed — absent it, the driver-side pre-init worker crashes
-    with an opaque STREAM_FAILED; we fail fast with the dependency name
-    instead. ``sessionize_stream`` (applyInPandasWithState) has no such
-    dependency and is the registered/benched implementation.
-
-    Guard re-verified against pyspark 4.1.2 (2026-08): the vendored
-    ``pyspark.sql.streaming.proto.StateMessage_pb2`` still hard-imports
-    ``google.protobuf`` (descriptor/symbol_database/builder), which
-    pyspark declares as an optional extra, not a dependency — so the
-    guard is load-bearing wherever protobuf isn't shipped, and the
-    parity test runs the full TWS differential wherever it is.
-    """
-    try:
-        import google.protobuf  # noqa: F401, PLC0415
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's TWS state-server protocol), which this "
-            "environment does not ship; use sessionize_stream "
-            "(applyInPandasWithState) or install protobuf."
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_us = int(SESSION_GAP.total_seconds() * 1_000_000)
-
-    def _emit(user_id: int, start_us: int, end_us: int, n: int, sv: float):
-        return pd.DataFrame(
-            [
-                {
-                    "user_id": user_id,
-                    "session_start": pd.Timestamp(start_us, unit="us"),
-                    "session_end": pd.Timestamp(end_us, unit="us"),
-                    "n_events": n,
-                    "sum_value": sv,
-                }
-            ]
-        )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            # Same epoch-micros state encoding as _STATE_SCHEMA (see the
-            # host-timezone note above — longs are timezone-free).
-            self._session = handle.getValueState(
-                "session",
-                "session_start_us long, session_end_us long, "
-                "n_events int, sum_value double",
-            )
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            (user_id,) = key
-            pdfs = [pdf for pdf in rows]
-            batch = pd.concat(pdfs).sort_values("ts")
-            if self._session.exists():
-                start_us, end_us, n, sv = self._session.get()
-                old_timer = end_us // 1000 + gap_us // 1000
-            else:
-                start_us = end_us = None
-                n, sv = 0, 0.0
-                old_timer = None
-            for r in batch.itertuples(index=False):
-                ts_us = int(r.ts.value // 1000)
-                if start_us is None:
-                    start_us, end_us, n, sv = ts_us, ts_us, 1, float(r.value)
-                elif ts_us - end_us <= gap_us:
-                    end_us = max(end_us, ts_us)
-                    n, sv = n + 1, sv + float(r.value)
-                else:
-                    yield _emit(user_id, start_us, end_us, n, sv)
-                    start_us, end_us, n, sv = ts_us, ts_us, 1, float(r.value)
-            self._session.update((start_us, end_us, n, sv))
-            new_timer = end_us // 1000 + gap_us // 1000
-            if old_timer is not None and old_timer != new_timer:
-                self._handle.deleteTimer(old_timer)
-            self._handle.registerTimer(new_timer)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            (user_id,) = key
-            if self._session.exists():
-                start_us, end_us, n, sv = self._session.get()
-                self._session.clear()
-                yield _emit(user_id, start_us, end_us, n, sv)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(),
-            outputStructType=SESSION_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    )
-
-
 def sessionize_batch(events: DataFrame, gap: dt.timedelta = SESSION_GAP) -> DataFrame:
     """Batch twin of ``sessionize_stream`` (gaps-and-islands with a lag
     window): same output on bounded data, and the form a SQL oracle can

@@ -246,52 +246,6 @@ def test_fast_aggregate_truncated_string_envelope_unprovable(spark, tmp_path):
     assert (agg["count"], agg["min"], agg["max"]) == (20, 0, 19)
 
 
-def test_fast_count_by_partition(spark, tmp_path):
-    """Per-partition COUNT from the manifest alone (the per-day
-    row-count dashboard): daily partition-tagged appends, a dv delete
-    attributed to its day, zero Spark jobs — and None for anything
-    unprovable (untagged dir)."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        fast_count_by_partition,
-    )
-
-    slim = _slim(spark).select("o_orderkey", "o_custkey")
-    tdir = str(tmp_path / "vt")
-    sizes = {}
-    for i, day in enumerate(["2024-01-01", "2024-01-02", "2024-01-03"]):
-        part = slim.where(F.col("o_orderkey") % 3 == i)
-        sizes[day] = part.count()
-        commit_version(
-            part.coalesce(2),
-            tdir,
-            mode="append" if i else "overwrite",
-            partition_values={"day": day},
-            stats_cols=["o_orderkey"],  # records per-file row counts
-        )
-    sc = spark.sparkContext
-    before = sc.statusTracker().getJobIdsForGroup(None)
-    got = fast_count_by_partition(tdir, "day")
-    assert sc.statusTracker().getJobIdsForGroup(None) == before
-    assert got == sizes
-    # a dv delete lands on its day's count
-    delete_version_vectors(
-        spark, tdir,
-        (F.col("o_orderkey") % 3 == 1) & (F.col("o_custkey") % 2 == 1),
-    )
-    got2 = fast_count_by_partition(tdir, "day")
-    hit = slim.where(
-        (F.col("o_orderkey") % 3 == 1) & (F.col("o_custkey") % 2 == 1)
-    ).count()
-    assert got2["2024-01-02"] == sizes["2024-01-02"] - hit
-    assert got2["2024-01-01"] == sizes["2024-01-01"]
-    # an untagged append makes the whole group-by unprovable
-    commit_version(
-        slim.limit(7).coalesce(1), tdir, mode="append",
-        stats_cols=["o_orderkey"],
-    )
-    assert fast_count_by_partition(tdir, "day") is None
-
-
 def test_fast_aggregate_null_predicate_rows_unprovable(spark, tmp_path):
     """A file wholly inside the range by ENVELOPE can still hold NULL
     predicate rows the predicate rejects — the envelope covers only

@@ -270,41 +270,6 @@ def test_access_history_audit(spark, gov_table):
     assert hist[1]["gen"] == 2
 
 
-def test_describe_histogram_surface(spark, tmp_path):
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        analyze_incremental,
-        analyze_version,
-        describe_histogram,
-    )
-
-    tdir = str(tmp_path / "t")
-    commit_version(
-        spark.createDataFrame(
-            [(i, float(10 + i)) for i in range(40)], "id long, v double"
-        ),
-        tdir,
-    )
-    analyze_version(spark, tdir, ["v"], hist_buckets=4)
-    rows = describe_histogram(spark, tdir, "v").collect()
-    assert [r["bucket"] for r in rows] == [0, 1, 2, 3]
-    assert sum(r["n_rows"] for r in rows) == 40
-    assert rows[0]["lo"] == 10.0 and rows[-1]["hi"] == 49.0
-    # growth outside the sticky edges surfaces as envelope-closed tails
-    commit_version(
-        spark.createDataFrame([(99, 500.0), (98, -7.0)], "id long, v double"),
-        tdir,
-        mode="append",
-    )
-    analyze_incremental(spark, tdir)
-    rows2 = describe_histogram(spark, tdir, "v").collect()
-    assert [r["bucket"] for r in rows2] == [-1, 0, 1, 2, 3, 4]
-    below, above = rows2[0], rows2[-1]
-    assert (below["lo"], below["hi"], below["n_rows"]) == (-7.0, 10.0, 1)
-    assert (above["lo"], above["hi"], above["n_rows"]) == (49.0, 500.0, 1)
-    with pytest.raises(KeyError):
-        describe_histogram(spark, tdir, "id")
-
-
 def test_concurrent_policy_attachments_both_survive(spark, gov_table):
     """ADVICE r13 (medium): the read→publish cycle raced — two
     concurrent attachments could both read gen N and the last writer

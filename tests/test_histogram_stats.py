@@ -17,6 +17,7 @@ Laws pinned here:
 
 from __future__ import annotations
 
+import json
 import random
 
 from pyspark.sql import functions as F
@@ -28,6 +29,8 @@ from polygon_daily_market_data_pipeline_spark.operators.cbo import (
 )
 from polygon_daily_market_data_pipeline_spark.operators.versioned import (
     _histograms,
+    _stat_from_json,
+    _stats_path,
     analyze_incremental,
     analyze_version,
     commit_version,
@@ -37,6 +40,11 @@ from polygon_daily_market_data_pipeline_spark.operators.versioned import (
 from polygon_daily_market_data_pipeline_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
+
+
+def _sidecar(tdir, v):
+    with open(_stats_path(tdir, v)) as f:
+        return json.load(f)
 
 
 def _orders(spark):
@@ -92,6 +100,38 @@ def test_incremental_merge_equals_recount_at_base_edges(spark, tmp_path):
         recount = _histograms(spark, full, {c: base_edges})[c]
         assert merged["columns"][c]["hist"] == recount
         assert recount["below"] > 0 and recount["above"] > 0
+
+
+def test_incremental_growth_outside_sticky_edges(spark, tmp_path):
+    """Appends beyond the analyzed extrema keep the base edges, land in
+    the below/above tails, and widen the sidecar's min/max envelope —
+    the envelope is what closes the otherwise-open tails."""
+    tdir = str(tmp_path / "t")
+    commit_version(
+        spark.createDataFrame(
+            [(i, float(10 + i)) for i in range(40)], "id long, v double"
+        ),
+        tdir,
+    )
+    analyze_version(spark, tdir, ["v"], hist_buckets=4)
+    h0 = _sidecar(tdir, 0)["columns"]["v"]["hist"]
+    assert len(h0["counts"]) == 4 and sum(h0["counts"]) == 40
+    assert (h0["edges"][0], h0["edges"][-1]) == (10.0, 49.0)
+    assert h0["below"] == 0 and h0["above"] == 0
+    commit_version(
+        spark.createDataFrame([(99, 500.0), (98, -7.0)], "id long, v double"),
+        tdir,
+        mode="append",
+    )
+    assert analyze_incremental(spark, tdir)["mode"] == "incremental"
+    grown = _sidecar(tdir, 1)["columns"]["v"]
+    h1 = grown["hist"]
+    assert h1["edges"] == h0["edges"] and h1["counts"] == h0["counts"]
+    assert (h1["below"], h1["above"]) == (1, 1)
+    assert _stat_from_json(grown["min"]) == -7.0
+    assert _stat_from_json(grown["max"]) == 500.0
+    # a column never analyzed carries no histogram
+    assert "id" not in _sidecar(tdir, 1)["columns"]
 
 
 def test_histogram_bounds_contain_true_count(spark, tmp_path):
@@ -215,36 +255,6 @@ def test_histogram_refinement_flips_broadcast(spark, tmp_path):
         broadcast_threshold_rows=1_000,
     )
     assert decision2["strategy"] == "merge"
-
-
-def test_quantile_bracket_contains_true_quantile(spark, tmp_path):
-    import math
-
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        quantile_bracket,
-    )
-
-    tdir = str(tmp_path / "t")
-    df = _orders(spark)
-    commit_version(df.repartition(2), tdir, stats_cols=["o_orderkey"])
-    analyze_version(spark, tdir, ["o_totalprice"], hist_buckets=16)
-    vals = sorted(
-        r[0] for r in df.select("o_totalprice").collect() if r[0] is not None
-    )
-    n = len(vals)
-    for q in (0.0, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0):
-        bracket = quantile_bracket(tdir, "o_totalprice", q)
-        assert bracket is not None
-        true_q = vals[max(1, math.ceil(q * n)) - 1]
-        assert bracket[0] <= true_q <= bracket[1], (q, bracket, true_q)
-    # extremes collapse onto the envelope endpoints
-    b0 = quantile_bracket(tdir, "o_totalprice", 0.0)
-    b1 = quantile_bracket(tdir, "o_totalprice", 1.0)
-    assert b0[0] == vals[0] and b1[1] == vals[-1]
-    # freshness discipline: a later commit voids the proof
-    commit_version(df.limit(3), tdir, mode="append", stats_cols=["o_orderkey"])
-    assert quantile_bracket(tdir, "o_totalprice", 0.5) is None
-    assert quantile_bracket(tdir, "o_totalprice", 0.5, version=0) is not None
 
 
 def test_star_ordering_consumes_histogram_bound(spark, tmp_path):

@@ -1191,10 +1191,11 @@ def test_quantizer_index_matches_per_method_encoders(spark):
     ).repartition(5)
     cents, books = train_quantizers(emb, k=8, m=8, ksub=16, iters=2)
     bounds = sq_train_bounds(emb)
-    idx = {
-        r["vec_id"]: r
-        for r in quantizer_index(emb, cents, books, bounds).collect()
-    }
+    qi = quantizer_index(emb, cents, books, bounds)
+    assert qi.schema["sq_code"].dataType == (
+        sq_encode(emb, bounds).schema["code"].dataType
+    )
+    idx = {r["vec_id"]: r for r in qi.collect()}
     cells = {r["vec_id"]: r["cell"] for r in ivf_assign(emb, cents).collect()}
     pq = {r["vec_id"]: list(r["code"]) for r in pq_encode(emb, books).collect()}
     sq = {r["vec_id"]: list(r["code"]) for r in sq_encode(emb, bounds).collect()}
@@ -1206,6 +1207,53 @@ def test_quantizer_index_matches_per_method_encoders(spark):
         assert list(r["sq_code"]) == sq[vid]
         assert list(r["embedding"]) == raw[vid]  # exact float64 round-trip
     assert np.array_equal(bounds, np.asarray(bounds, dtype=np.float64))
+
+
+def test_prebuilt_ann_index_requires_its_quantizers(spark):
+    """A pre-built index without the quantizers it was built with would
+    be probed with freshly trained ones that match none of its cells or
+    codes: each ANN variant refuses instead of returning bad recall."""
+    import numpy as np
+    import pytest
+
+    from polygon_daily_market_data_pipeline_spark.operators.similarity import (
+        cosine_topk_ivf,
+        cosine_topk_ivfpq,
+        cosine_topk_ivfsq,
+        quantizer_index,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.5, 0.2]), (2, [0.0, 1.0, 0.1, 0.9])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = np.array([[1.0, 0.0, 0.5, 0.2], [0.0, 1.0, 0.1, 0.9]])
+    books = np.zeros((2, 2, 2))  # m=2 subspaces, 2 centers, dsub=2
+    bounds = np.array([[0.0] * 4, [1.0] * 4])
+    idx = quantizer_index(emb, cents, books, bounds)
+    # sizes are valid for training, so a call that retrains instead of
+    # refusing returns a frame and the raises-check fails
+    with pytest.raises(ValueError, match="centroids"):
+        cosine_topk_ivf(
+            emb, emb, k=1, n_clusters=2,
+            assigned=idx.select("vec_id", "embedding", "cell"),
+        )
+    pq_idx = idx.select("vec_id", "cell", F.col("pq_code").alias("code"))
+    with pytest.raises(ValueError, match="codebooks"):
+        cosine_topk_ivfpq(
+            emb, emb, k=1, m=2, ksub=2, centroids=cents, indexed=pq_idx
+        )
+    with pytest.raises(ValueError, match="centroids"):
+        cosine_topk_ivfpq(
+            emb, emb, k=1, n_clusters=2, codebooks=books, indexed=pq_idx
+        )
+    sq_idx = idx.select("vec_id", "cell", F.col("sq_code").alias("code"))
+    with pytest.raises(ValueError, match="bounds"):
+        cosine_topk_ivfsq(emb, emb, k=1, centroids=cents, indexed=sq_idx)
+    with pytest.raises(ValueError, match="centroids"):
+        cosine_topk_ivfsq(
+            emb, emb, k=1, n_clusters=2, bounds=bounds, indexed=sq_idx
+        )
 
 
 def test_ivf_maintenance_argmin_margin_dwarfs_float_noise():

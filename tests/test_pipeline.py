@@ -205,74 +205,26 @@ def test_backfill_fetches_each_date_once(spark, tmp_path):
     }
 
 
-def test_partition_compaction(spark, tmp_path):
-    from polygon_daily_market_data_pipeline_spark.operators.compaction import (
-        compact_table,
-        data_file_count,
-    )
+def test_backfill_keeps_landing_and_conf_in_static_session(spark, tmp_path):
+    """Under Spark's default (static) partitionOverwriteMode, a second
+    backfill must replace only its own landing dir, and neither run may
+    leave the session's overwrite mode changed."""
+    from polygon_daily_market_data_pipeline_spark.pipeline import backfill
 
-    root = str(tmp_path / "tbl")
-    df = spark.range(0, 1000).selectExpr(
-        "cast(date_add('2024-01-05', cast(id % 2 as int)) as date) as trade_date",
-        "id", "id * 1.5 as v",
-    )
-    # fragment: 8 writer tasks per partition
-    df.repartition(8).write.partitionBy("trade_date").parquet(root)
-    before = data_file_count(root + "/trade_date=2024-01-05")
-    assert before >= 8
-
-    n = compact_table(spark, root, "trade_date")
-    assert n == 2
-    assert data_file_count(root + "/trade_date=2024-01-05") == 1
-    out = spark.read.parquet(root)
-    assert out.count() == 1000
-    assert out.selectExpr("sum(v)").first()[0] == sum(i * 1.5 for i in range(1000))
-
-
-def test_delete_where_partition_scoped(spark, tmp_path):
-    from pyspark.sql import functions as SF
-
-    from polygon_daily_market_data_pipeline_spark.operators.delete import (
-        delete_where,
-        drop_partitions,
-    )
-
-    root = str(tmp_path / "deltbl")
-    df = spark.createDataFrame(
-        [("2024-01-05", "AAPL", 1.0), ("2024-01-05", "MSFT", 2.0),
-         ("2024-01-08", "AAPL", 3.0), ("2024-01-09", "GOOG", 4.0)],
-        "trade_date string, symbol string, close double",
-    )
-    df.write.partitionBy("trade_date").parquet(root)
-
-    # row-level: delete AAPL everywhere — rewrites only the 2 partitions
-    # containing it; the GOOG partition's files are untouched
-    import os
-    goog_dir = root + "/trade_date=2024-01-09"
-    mtime_before = max(os.path.getmtime(os.path.join(goog_dir, f))
-                       for f in os.listdir(goog_dir))
-    n = delete_where(spark, root, "trade_date", SF.col("symbol") == "AAPL")
-    assert n == 2
-    left = spark.read.parquet(root)
-    assert {(r.symbol, r.close) for r in left.collect()} == {("MSFT", 2.0), ("GOOG", 4.0)}
-    mtime_after = max(os.path.getmtime(os.path.join(goog_dir, f))
-                      for f in os.listdir(goog_dir))
-    assert mtime_before == mtime_after
-
-    # partition-level: metadata-only drop
-    assert drop_partitions(root, "trade_date", ["2024-01-09"]) == 1
-    assert {r.symbol for r in spark.read.parquet(root).collect()} == {"MSFT"}
-
-    # predicate on the partition column itself works row-level too
-    df2 = spark.createDataFrame(
-        [("2024-02-01", "X", 1.0), ("2024-02-02", "Y", 2.0)],
-        "trade_date string, symbol string, close double",
-    )
-    root2 = str(tmp_path / "deltbl2")
-    df2.write.partitionBy("trade_date").parquet(root2)
-    n = delete_where(spark, root2, "trade_date", SF.col("trade_date") == "2024-02-01")
-    assert n == 1
-    assert {r.symbol for r in spark.read.parquet(root2).collect()} == {"Y"}
+    key = "spark.sql.sources.partitionOverwriteMode"
+    wh, landing = str(tmp_path / "wh"), tmp_path / "landing"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "static")
+        backfill(spark, wh, str(landing), "2024-01-05", "2024-01-05", fixed_ts=TS)
+        spark.conf.set(key, "static")
+        backfill(spark, wh, str(landing), "2024-01-08", "2024-01-08", fixed_ts=TS)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    assert sorted(p.name for p in landing.glob("_pdate=*")) == [
+        "_pdate=2024-01-05", "_pdate=2024-01-08",
+    ]
 
 
 def test_schema_evolution_merge_schema_read(spark, tmp_path):

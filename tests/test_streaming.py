@@ -1,6 +1,6 @@
-"""Structured Streaming tests: exactly-once landing→RAW ingest,
-streaming merge into CORE, batch-vs-stream parity of the windowed
-aggregate and of the stateful sessionizer (SURVEY §2.9 behaviors)."""
+"""Structured Streaming tests: batch-vs-stream parity of the windowed
+aggregate and of the stateful sessionizer, and the exactly-once
+versioned/incremental sinks (SURVEY §2.9 behaviors)."""
 
 from __future__ import annotations
 
@@ -9,15 +9,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from polygon_daily_market_data_pipeline_spark.streaming.eod_stream import (
-    stream_landing_to_raw,
-)
 from polygon_daily_market_data_pipeline_spark.streaming.events_stream import (
     hourly_event_counts,
     sessionize_batch,
     sessionize_stream,
 )
-from tests.conftest import GOOD_DAY
 
 
 def _events_df(spark, rows):
@@ -34,35 +30,6 @@ def _stream_events(spark, df, tmp_path):
     src = str(tmp_path / "ev_src")
     df.write.parquet(src)
     return spark.readStream.schema(df.schema).parquet(src)
-
-
-def test_landing_to_raw_exactly_once(spark, tmp_path, landing_csv):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "eod_prices_2024-01-05.csv").write_text(
-        "trade_date,symbol,open,high,low,close,volume\n" + "\n".join(GOOD_DAY) + "\n"
-    )
-    raw = str(tmp_path / "raw")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = stream_landing_to_raw(spark, str(landing), raw, ckpt)
-    q.awaitTermination()
-    n1 = spark.read.parquet(raw).count()
-    assert n1 == len(GOOD_DAY)
-
-    # Re-run with the same checkpoint: the already-processed file is NOT
-    # re-ingested (exactly-once), a new file IS.
-    (landing / "eod_prices_2024-01-08.csv").write_text(
-        "trade_date,symbol,open,high,low,close,volume\n"
-        "2024-01-08,AAPL,182.0,183.0,181.0,182.5,48000000\n"
-    )
-    q = stream_landing_to_raw(spark, str(landing), raw, ckpt)
-    q.awaitTermination()
-    out = spark.read.parquet(raw)
-    assert out.count() == n1 + 1
-    assert out.where("trade_date = '2024-01-08'").count() == 1
-    # typed projection applied: decimals + date partition column
-    assert dict(out.dtypes)["close"] == "decimal(18,6)"
 
 
 def test_hourly_counts_stream_matches_batch(spark, tmp_path):
@@ -235,113 +202,6 @@ def test_sessionize_state_spans_micro_batches(spark, tmp_path):
     # one merged session across both batches: 3 events, minutes 0..20
     assert u1[0].n_events == 3 and u1[0].sum_value == 7.0
     assert u1[0].session_start.minute == 0 and u1[0].session_end.minute == 20
-
-
-def test_stream_landing_to_core_foreachbatch_merge(spark, tmp_path, landing_csv):
-    """The streaming MERGE path: landing CSVs → foreachBatch keyed
-    upsert into CORE. Two days arrive across two stream runs; the
-    second run also REPLAYS day 1 with revised prices — the keyed merge
-    must converge (update, not duplicate)."""
-    import datetime as dt2
-
-    from polygon_daily_market_data_pipeline_spark import schemas
-    from polygon_daily_market_data_pipeline_spark.pipeline import Warehouse
-    from polygon_daily_market_data_pipeline_spark.plans import star
-    from polygon_daily_market_data_pipeline_spark.streaming.eod_stream import (
-        stream_landing_to_core,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "d1.csv").write_text(
-        "trade_date,symbol,open,high,low,close,volume\n"
-        "2024-01-05,AAPL,1,2,0.5,1.5,100\n"
-        "2024-01-05,MSFT,3,4,2.5,3.5,200\n"
-    )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-
-    def merge_batch(batch_df):
-        for d in [r[0] for r in batch_df.select("trade_date").distinct().collect()]:
-            src = star.core_source_rows(
-                batch_df, d, load_ts=dt2.datetime(2024, 1, 5, 23)
-            )
-            core = wh.read("eod_prices", schemas.CORE_EOD_PRICES)
-            merged = star.core_upsert(core.where(F.col("trade_date") == d), src)
-            wh.overwrite_partitions(merged, "eod_prices", "trade_date")
-
-    q = stream_landing_to_core(
-        spark, str(landing), merge_batch, str(tmp_path / "ckpt1")
-    )
-    q.awaitTermination()
-    core = wh.read("eod_prices", schemas.CORE_EOD_PRICES)
-    assert core.count() == 2
-
-    # day 2 arrives + day 1 replayed with a revised AAPL close
-    (landing / "d2.csv").write_text(
-        "trade_date,symbol,open,high,low,close,volume\n"
-        "2024-01-08,GOOG,5,6,4.5,5.5,300\n"
-        "2024-01-05,AAPL,1,2,0.5,9.9,100\n"
-    )
-    q = stream_landing_to_core(
-        spark, str(landing), merge_batch, str(tmp_path / "ckpt1")
-    )
-    q.awaitTermination()
-    core = wh.read("eod_prices", schemas.CORE_EOD_PRICES)
-    assert core.count() == 3  # AAPL updated in place, not duplicated
-    aapl = core.where("symbol = 'AAPL'").first()
-    assert float(aapl.close) == 9.9
-
-
-def test_sessionize_tws_matches_batch_and_legacy(spark, tmp_path):
-    """The transformWithStateInPandas sessionizer (Spark 4 successor
-    API: typed state handles + explicit event-time timers) produces the
-    same sessions as the batch gaps-and-islands twin AND the
-    applyInPandasWithState implementation, including the
-    open-session-withheld and timer-eviction semantics.
-
-    TWS needs the protobuf package (state-server protocol); without it
-    the operator must fail fast with the dependency named, and the
-    differential body is skipped (it runs wherever protobuf ships)."""
-    import pytest
-
-    from polygon_daily_market_data_pipeline_spark.plans.streaming_queries import (
-        run_available_now,
-    )
-    from polygon_daily_market_data_pipeline_spark.streaming.events_stream import (
-        sessionize_stream_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            sessionize_stream_tws(_events_df(spark, [(0, 1, 1.0)]))
-        pytest.skip("protobuf not installed: TWS state server unavailable")
-
-    rows = [
-        (0, 1, 1.0), (10, 1, 2.0), (20, 1, 3.0),   # session A (user 1)
-        (65, 1, 4.0), (70, 1, 5.0),                # session B (user 1)
-        (0, 2, 9.0), (25, 2, 1.5),                 # session C (user 2)
-        (300, 9, 9.9),                             # lone final event (user 9)
-    ]
-    df = _events_df(spark, rows)
-
-    got = run_available_now(
-        sessionize_stream_tws(_stream_events(spark, df, tmp_path), watermark="0 seconds"),
-        "t_sess_tws",
-    )
-    mx = df.agg(F.max("ts")).first()[0]
-    want = sessionize_batch(df).where(
-        F.col("session_end") + F.expr("INTERVAL 30 MINUTE") <= F.lit(mx)
-    )
-    key = lambda r: (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)  # noqa: E731
-    got_rows = sorted(key(r) for r in got.collect())
-    assert got_rows == sorted(key(r) for r in want.collect())
-    legacy = run_available_now(
-        sessionize_stream(_stream_events(spark, df, tmp_path / "b"), watermark="0 seconds"),
-        "t_sess_legacy",
-    )
-    assert got_rows == sorted(key(r) for r in legacy.collect())
 
 
 def test_sessionize_rocksdb_state_store_parity(spark, tmp_path):
@@ -1312,60 +1172,3 @@ def test_versioned_stream_sink_auto_analyze(spark, tmp_path):
         full = _json.load(f)
     assert inc["columns"] == full["columns"]
 
-
-def test_versioned_enrich_sink_pins_dim_per_batch(spark, tmp_path):
-    """Stream-static enrichment with a versioned dim: each micro-batch
-    joins the dim version current AT BATCH TIME (recorded as the
-    commit's _dim_version tag), a dim update between batches affects
-    only later batches, and a replayed batch keeps its original
-    enrichment — replay-deterministic by exactly-once."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        _load_manifest,
-        _manifests,
-        read_version,
-        versioned_enrich_sink,
-    )
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        commit_version as _commit,
-    )
-
-    dim_dir = str(tmp_path / "dim")
-    _commit(
-        spark.createDataFrame([(1, "old"), (2, "old")],
-                              "user_id int, label string"),
-        dim_dir,
-    )
-    out_dir = str(tmp_path / "out")
-    sink = versioned_enrich_sink(out_dir, dim_dir, "user_id")
-
-    b0 = _events_df(spark, [(0, 1, 1.0), (1, 2, 2.0)])
-    sink(b0, 0)
-    # dim moves between batches
-    _commit(
-        spark.createDataFrame([(1, "new"), (2, "new")],
-                              "user_id int, label string"),
-        dim_dir,
-    )
-    b1 = _events_df(spark, [(2, 1, 3.0)]).withColumn(
-        "event_id", F.col("event_id") + 2
-    )
-    sink(b1, 1)
-
-    rows = {
-        (r.event_id): (r.label)
-        for r in read_version(spark, out_dir).collect()
-    }
-    assert rows == {0: "old", 1: "old", 2: "new"}
-    # the dim version each batch used is a partition tag per commit
-    tags = [
-        m.get("partitions", {}).get(d, {}).get("_dim_version")
-        for v in _manifests(out_dir)
-        for m in [_load_manifest(out_dir, v)]
-        for d in m["dirs"]
-    ]
-    assert sorted(set(t for t in tags if t is not None)) == ["0", "1"]
-    # replaying batch 0 after the dim moved changes NOTHING
-    before = _manifests(out_dir)
-    sink(b0, 0)
-    assert _manifests(out_dir) == before
-    assert read_version(spark, out_dir).where("label = 'new'").count() == 1

@@ -262,37 +262,6 @@ def test_transform_on_omitted_generated_column(spark, tmp_path):
     assert sorted(r.k for r in one.collect()) == list(range(100, 200))
 
 
-def test_fast_count_by_partition_over_transform_tags(spark, tmp_path):
-    """The per-day metadata dashboard works on HIDDEN partitioning:
-    single-unit commits group under their unit string with zero Spark
-    jobs, a dv delete lands on its day, and a multi-unit commit makes
-    the whole group-by unprovable (rows can't be attributed without a
-    scan)."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        delete_version_vectors,
-        fast_count_by_partition,
-    )
-
-    t = str(tmp_path / "vt")
-    _build_daily(spark, t, days=3)
-    sc = spark.sparkContext
-    before = sc.statusTracker().getJobIdsForGroup(None)
-    got = fast_count_by_partition(t, "ts")
-    assert sc.statusTracker().getJobIdsForGroup(None) == before
-    assert got == {
-        "2024-01-01": 100, "2024-01-02": 100, "2024-01-03": 100,
-    }
-    delete_version_vectors(spark, t, F.col("k") == 150)  # day 2
-    got2 = fast_count_by_partition(t, "ts")
-    assert got2["2024-01-02"] == 99 and got2["2024-01-01"] == 100
-    # a commit spanning two days: unprovable attribution
-    commit_version(
-        _batch(spark, 5, 300, 350).unionByName(_batch(spark, 6, 350, 400)),
-        t, mode="append", partition_transform={"ts": "day"},
-    )
-    assert fast_count_by_partition(t, "ts") is None
-
-
 def test_transform_and_scalar_tags_compose(spark, tmp_path):
     """One commit carrying BOTH a scalar tag and a transform tag: a
     conjunctive predicate over both prunes on each independently."""
