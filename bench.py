@@ -1,77 +1,111 @@
 """Per-round benchmark: times every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line ``{"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": sf}``.
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] (default: the
+cores this process may use) and prints ONE JSON line ``{"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "jobs":
+{name: n}, "sf": sf}``.
 
 Each query is executed to completion with the ``noop`` sink (full physical
 execution, no driver collect bottleneck), so timings reflect scan + shuffle
 + compute — what would dominate on a real cluster.
+
+The session writes Spark's event log. After the suite it is folded with
+perfbench's ``fold_event_log``, and each query is given the jobs submitted
+inside its timed window: queries run serially, so a window owns every job
+in it, branch-pool and stream threads included. BENCH_FULL.json carries
+the per-query record under ``layers``.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
-
-# One BLAS thread per task: Spark supplies the parallelism (32 local
-# threads here, one core per task on a cluster); letting OpenBLAS also
-# spawn threads inside each pandas-UDF worker oversubscribes the cores.
-# Must be set before any worker imports numpy (workers inherit our env).
-os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
-os.environ.setdefault("OMP_NUM_THREADS", "1")
-os.environ.setdefault("MKL_NUM_THREADS", "1")
 
 _REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(_REPO))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from perfbench.spans import _TASK_SUMS, fold_event_log, union_length  # noqa: E402
 
-from polygon_daily_market_data_pipeline_spark.plans import (  # noqa: E402,F401
-    llm_ops,
-    media_ops,
-    streaming_queries,
-    warehouse_ops,
-)
-from polygon_daily_market_data_pipeline_spark.plans.analytics import (  # noqa: E402
-    NO_RETIME,
-    QUERIES,
-)
+
+def query_layers(
+    jobs: list[dict], windows: dict[str, tuple[float, float]]
+) -> dict[str, dict]:
+    """Per query, the folded jobs submitted inside its ``(t0, t1)`` window
+    (epoch seconds): job, stage and task counts, busy seconds (the union
+    of the job intervals within the window), ``driver_gap_s`` (the window
+    minus busy) and the tasks' summed metrics, under perfbench's
+    ``spark.*`` names. A job outside every window counts for none."""
+    out = {}
+    for name, (t0, t1) in windows.items():
+        # event-log times are whole milliseconds
+        lo = math.floor(t0 * 1e3) / 1e3
+        mine = [j for j in jobs if lo <= j["t0"] <= t1]
+        busy = union_length(
+            [(max(j["t0"], t0), min(j["t1"], t1)) for j in mine if j["t1"] > t0]
+        )
+        rec = {
+            "window_s": round(t1 - t0, 3),
+            "spark.jobs": len(mine),
+            "spark.stages": sum(len(j["stages"]) for j in mine),
+            "spark.tasks": sum(j["tasks"] for j in mine),
+            "spark.busy_s": round(busy, 3),
+            "spark.driver_gap_s": round(t1 - t0 - busy, 3),
+        }
+        for k in _TASK_SUMS:
+            rec[f"spark.{k}"] = round(sum(j[k] for j in mine), 3)
+        out[name] = rec
+    return out
 
 
 def main() -> None:
+    from polygon_daily_market_data_pipeline_spark.session import get_spark
+    from polygon_daily_market_data_pipeline_spark.plans import (  # noqa: F401
+        llm_ops,
+        media_ops,
+        streaming_queries,
+        warehouse_ops,
+    )
+    from polygon_daily_market_data_pipeline_spark.plans.analytics import (
+        NO_RETIME,
+        QUERIES,
+    )
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
 
-    spark = (
-        SparkSession.builder.appName("bench")
-        .master(f"local[{cpus}]")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate()
+    events = tempfile.mkdtemp(prefix="bench_events_")
+    spark = get_spark(
+        "bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": Path(events).as_uri(),
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up on the smallest SF so q1's timing isn't startup cost:
     # one JVM/codegen query, plus one trivial pandas-UDF job to fork the
-    # Python worker pool (32 processes importing numpy/pandas — with
-    # spark.python.worker.reuse the pool is long-lived, so steady-state
-    # is what a cluster would see; without this the first Arrow query
-    # in suite order absorbs the entire pool spin-up).
+    # Python worker pool (one process per core importing numpy/pandas —
+    # with spark.python.worker.reuse the pool is long-lived, so
+    # steady-state is what a cluster would see; without this the first
+    # Arrow query in suite order absorbs the entire pool spin-up).
     warm = "/root/testdata/sf0.001"
     if Path(warm).exists():
         try:
             QUERIES["pricing_summary"](spark, warm).collect()
-            spark.range(0, 64, 1, int(cpus)).mapInPandas(
+            spark.range(0, 64, 1, cpus).mapInPandas(
                 lambda it: it, "id long"
             ).write.format("noop").mode("overwrite").save()
             # Streaming machinery warm-up (state-store provider, stream
@@ -79,8 +113,6 @@ def main() -> None:
             # AvailableNow stream, so the first real streaming query's
             # timing reflects its plan, not one-time startup — the same
             # separation already applied to the Python worker pool.
-            import tempfile
-
             d = tempfile.mkdtemp(prefix="bench_stream_warm_")
             spark.range(1).write.mode("overwrite").parquet(f"{d}/src")
             (
@@ -99,31 +131,17 @@ def main() -> None:
         except Exception:
             pass
 
-    # Per-query Spark-job counts (round 16, VERDICT r15 #4): the
-    # DAGScheduler's monotone job counter, sampled around each serial
-    # query run, so a scheduler-latency regression (the trio's ~0.8 s
-    # per ms of host-latency coupling — SCALE.md job census)
-    # self-attributes in the artifact the way fingerprints do for
-    # correctness. Streaming queries' micro-batch jobs land in the
-    # window too — correct: they are scheduled jobs the query paid for.
-    jobs: dict[str, int] = {}
-
-    def _n_jobs() -> int:
-        try:
-            return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-        except Exception:
-            return -1
+    # each query's (t0, t1) in epoch seconds, the event log's clock; a
+    # re-timed query keeps its latest window
+    windows: dict[str, tuple[float, float]] = {}
 
     def run_once(name: str, fn) -> float:
-        t0, j0 = time.monotonic(), _n_jobs()
+        t0, w0 = time.monotonic(), time.time()
         try:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            j1 = _n_jobs()
-            if j0 >= 0 and j1 >= j0 and not name.startswith("zz_canary"):
-                # re-timed queries overwrite with the latest sample
-                # (plan-identical re-runs; job counts don't drift)
-                jobs[name] = j1 - j0
+            if not name.startswith("zz_canary"):
+                windows[name] = (w0, time.time())
             return round(time.monotonic() - t0, 3)
         except Exception as exc:  # keep benching; report the failure
             print(f"BENCH-FAIL {name}: {exc}", file=sys.stderr)
@@ -181,13 +199,20 @@ def main() -> None:
                     reruns[name] = t  # keep the original for the record
                     timings[name] = retimed
 
+    # the event log is complete once the session stops
+    spark.stop()
+    try:
+        layers = query_layers(fold_event_log(events), windows)
+    finally:
+        shutil.rmtree(events, ignore_errors=True)
+
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     out = {
         "metric": "suite_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "jobs": jobs,
+        "jobs": {name: rec["spark.jobs"] for name, rec in layers.items()},
         "sf": sf,
     }
     # Machine-speed canary (BASELINE.md): zz_sentinel_tail is a fixed
@@ -208,19 +233,13 @@ def main() -> None:
     # the printed line: round 8's line carried the per-branch dict and
     # the driver's tail-parse of it failed ("parsed": null — head
     # truncated). The printed line stays minimal so it always fits the
-    # driver's tail window; the full record (per-branch wall-clock,
-    # outlier first-runs) is committed in-repo for the judge.
+    # driver's tail window; the full record (core count, per-query
+    # layers, outlier first-runs) is committed in the repo.
     full = dict(out)
     if reruns:
         full["outlier_first_runs"] = reruns
-    # Per-branch wall-clock of the three warehouse queries' LAST runs
-    # (warehouse_ops.BRANCH_TIMES): 41 audit rows behind three query
-    # numbers would otherwise hide a single-branch regression in VM
-    # noise. Sums to slightly less than the queries' own timings (the
-    # residual is each checkpointed-union pass + noop write).
-    branches = dict(warehouse_ops.BRANCH_TIMES)
-    if branches:
-        full["warehouse_branches"] = branches
+    full["cores"] = cpus
+    full["layers"] = layers
 
     (_REPO / "BENCH_FULL.json").write_text(json.dumps(full, indent=1))
     print(json.dumps(out))

@@ -23,38 +23,3 @@ Everything is DataFrame/Catalyst-native; no row-at-a-time Python UDFs in
 any hot path. Designed for partition-pruned, broadcast-joined execution
 at 100 TB even though tests run on ``local[*]``.
 """
-
-# Lazy re-exports (PEP 562), round 17: every Python worker Spark spawns
-# that unpickles anything from this package — the per-stream
-# ``python_streaming_source_runner`` behind the Python-DataSource change
-# feed, the data-source planner workers, each executor worker's first
-# task over one of our Arrow functions — pays this module's import.
-# Eagerly chaining session → pipeline → operators → similarity pulled
-# pandas/numpy (~0.45 s measured) into processes that touch none of it;
-# resolving the four public names on first access keeps ``from
-# polygon_daily_market_data_pipeline_spark import get_spark`` working
-# while a worker that only needs ``operators.versioned`` imports just
-# that chain (guide §4.5 — heavyweight init belongs where it is used).
-_EXPORTS = {
-    "get_spark": "session",
-    "Warehouse": "pipeline",
-    "backfill": "pipeline",
-    "run_eod_pipeline": "pipeline",
-}
-
-__all__ = ["get_spark", "run_eod_pipeline", "backfill", "Warehouse"]
-
-
-def __getattr__(name: str):
-    import importlib
-
-    mod = _EXPORTS.get(name)
-    if mod is not None:
-        val = getattr(importlib.import_module(f".{mod}", __name__), name)
-        globals()[name] = val  # cache: next access skips __getattr__
-        return val
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-
-
-def __dir__():
-    return sorted(set(globals()) | set(__all__))

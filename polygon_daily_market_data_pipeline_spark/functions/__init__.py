@@ -1,44 +1,2 @@
 """Scalar-function layer (SURVEY.md §2.8 F1–F16) — all Catalyst-native
 Column expressions, zero Python UDFs."""
-
-from polygon_daily_market_data_pipeline_spark.functions.casts import (
-    norm_key,
-    safe_divide,
-    try_to_decimal,
-    try_to_number,
-)
-from polygon_daily_market_data_pipeline_spark.functions.calendar import (
-    date_sk,
-    day_abbrev,
-    day_of_week_0,
-    is_weekend,
-    month_abbrev,
-    week_of_year,
-)
-from polygon_daily_market_data_pipeline_spark.functions.text import (
-    lang_id,
-    quality_score,
-    redact_pii,
-    repetition_stats,
-    token_count,
-    word_shingles,
-)
-
-__all__ = [
-    "norm_key",
-    "safe_divide",
-    "try_to_decimal",
-    "try_to_number",
-    "date_sk",
-    "day_abbrev",
-    "day_of_week_0",
-    "is_weekend",
-    "month_abbrev",
-    "week_of_year",
-    "lang_id",
-    "quality_score",
-    "redact_pii",
-    "repetition_stats",
-    "token_count",
-    "word_shingles",
-]

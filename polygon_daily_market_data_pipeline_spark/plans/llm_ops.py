@@ -869,8 +869,8 @@ def _embedding_ann_ivf_body(
         # tiny 1-row frame: materialize inside the thread so the three
         # audit pipelines genuinely overlap (a lazy union would run
         # them serially inside one action). eager=False keeps the lazy
-        # union for tools/plan_audit.py — same convention as the
-        # warehouse queries' build_maintenance_union path.
+        # union for tools/plan_audit.py — the same split as the
+        # warehouse queries' _run_union / build_maintenance_union.
         return out.localCheckpoint(eager=True) if eager else out
 
     def _audit_semdedup() -> DataFrame:

@@ -2993,13 +2993,6 @@ def _wap_rows(
 # ``_oracle_for(checks_for([branch]))`` narrows it to one branch.
 # ---------------------------------------------------------------------------
 
-# Per-branch wall-clock of the LAST timed build across the three
-# registered queries (bench.py reads this after the suite and persists
-# it — a 5× regression in one branch would otherwise hide inside one
-# query's number). Branch names are unique across queries, so plain
-# key overwrite per run is the right merge.
-BRANCH_TIMES: dict[str, float] = {}
-
 # name -> (builder(spark, sf_dir, ord_df, base), audit rows it emits).
 # The check lists are load-bearing: they compose each query's DuckDB
 # oracle via _oracle_for and size the per-query blast radius.
@@ -4116,6 +4109,7 @@ _BRANCH_DEFS: "list[tuple[str, object, list[str]]]" = [
 
 _BRANCH_NAMES = [n for n, _f, _c in _BRANCH_DEFS]
 _BRANCH_CHECKS = {n: c for n, _f, c in _BRANCH_DEFS}
+_BRANCH_BUILDERS = {n: f for n, f, _c in _BRANCH_DEFS}
 
 # The three-query split: row-level mutation core + the stats-consuming
 # planners / table lifecycle + composed audits / the streaming-and-
@@ -4214,86 +4208,44 @@ def _ord_max(ord_df: DataFrame) -> int:
     return mx
 
 
+def _union_all(frames: "list[DataFrame]") -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
+def _branch_rows(
+    spark: SparkSession, sf_dir: str, ord_df: DataFrame, base: str, name: str
+) -> DataFrame:
+    """Run one branch script (writes, commits, streaming drains) and
+    return its audit rows as one lazy union — every frame shares
+    ``_SCHEMA``."""
+    return _union_all(_BRANCH_BUILDERS[name](spark, sf_dir, ord_df, base))
+
+
 def build_maintenance_union(
     spark: SparkSession,
     sf_dir: str,
     base: str,
-    timed: bool = False,
     branches: "list[str] | None" = None,
     ord_df: "DataFrame | None" = None,
-    parallel: int = 1,
 ) -> DataFrame:
     """The LAZY audit union over scratch state under ``base`` — runs each
-    selected branch script eagerly (writes, commits, streaming drains)
-    but returns the un-materialized union, so the per-branch physical
-    plans stay inspectable. The registered queries wrap this with TZ
-    pinning + checkpoint + scratch cleanup via ``_run_union``;
-    ``tools/plan_audit.py`` calls it directly (the registered query's
-    returned frame is a checkpoint scan, which would audit as a blank
-    plan). Callers own ``base``'s lifecycle.
-
-    ``timed=True`` additionally materializes each branch's audit rows
-    INSIDE its timing window (eager localCheckpoint — a handful of rows
-    each) and records per-branch wall-clock in ``BRANCH_TIMES``; lazy
-    branches like the SCD2 merges otherwise defer their whole cost to
-    the final union evaluation, where no attribution is possible.
-    plan_audit keeps the default (un-checkpointed frames stay
-    plan-inspectable)."""
-    import time
-
+    selected branch script eagerly, one after another, but returns the
+    un-materialized union, so the per-branch physical plans stay
+    inspectable. ``tools/plan_audit.py`` calls it directly (the
+    registered queries return a checkpoint scan via ``_run_union``,
+    which would audit as a blank plan). Callers own ``base``'s
+    lifecycle."""
     if ord_df is None:
         ord_df = load_table(spark, sf_dir, "orders").where(
             F.col("o_custkey") % 4 == 1
         )
     selected = _BRANCH_NAMES if branches is None else list(branches)
-    by_name = {n: f for n, f, _c in _BRANCH_DEFS}
-
-    def _build(name: str) -> "list[DataFrame]":
-        t0 = time.monotonic()
-        frames = by_name[name](spark, sf_dir, ord_df, base)
-        if timed:
-            # ONE eager checkpoint per BRANCH, not per audit row
-            # (round 15): every frame shares _SCHEMA, so the branch's
-            # rows union first and materialize in a single job — the
-            # per-row form cost one driver-scheduled job per frame
-            # (~58 suite-wide at ~50 ms/job floor, and the class that
-            # amplifies under host scheduler latency — SCALE.md job
-            # census). Attribution is unchanged: the checkpoint still
-            # executes INSIDE this branch's timing window.
-            u = frames[0]
-            for f in frames[1:]:
-                u = u.unionByName(f)
-            frames = [u.localCheckpoint(eager=True)]
-            BRANCH_TIMES[name] = round(time.monotonic() - t0, 3)
-        return frames
-
-    if parallel > 1 and len(selected) > 1:
-        # The branch scripts are independent by construction (disjoint
-        # scratch subdirs, shared state only through the reentrant
-        # _conf_pin guards) and each is many small Spark jobs with
-        # driver-side gaps (manifest IO, claim probes) — exactly the
-        # shape Spark's FIFO scheduler interleaves well. Audit values
-        # cannot move with scheduling: exact decimal sums, integer
-        # counts, and file-set claims against each branch's own
-        # scratch. ex.map preserves order; the union is orderBy'd and
-        # the driver hash is row-order-insensitive anyway. Under
-        # `timed`, per-branch wall-clock includes co-scheduling
-        # interference — sums exceed the wall-clock; bench documents
-        # this.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(parallel, len(selected))
-        ) as ex:
-            rows = [f for fl in ex.map(_build, selected) for f in fl]
-    else:
-        rows = []
-        for name in selected:
-            rows.extend(_build(name))
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    return _union_all(
+        [_branch_rows(spark, sf_dir, ord_df, base, n) for n in selected]
+    )
 
 
 # Reentrant, process-wide session-conf pins (round 10): session conf is
@@ -4399,10 +4351,10 @@ def _run_union(
     name: str = "warehouse",
 ) -> DataFrame:
     """Registered-query wrapper: pin UTC, build the selected branches in
-    a per-call scratch dir, eagerly checkpoint the (tiny) audit rows,
-    then restore the TZ and remove the scratch before returning — a
-    caller's session and filesystem come back exactly as they were.
-    ``name`` is kept for existing callers and does not affect the
+    an 8-thread pool over a per-call scratch dir, eagerly checkpoint the
+    (tiny) audit rows, then restore the TZ and remove the scratch before
+    returning — a caller's session and filesystem come back exactly as
+    they were. ``name`` is kept for existing callers and does not affect the
     result.
 
     The scratch name carries pid AND a fresh uuid: two concurrent runs
@@ -4420,6 +4372,7 @@ def _run_union(
     # as events_stream_source); _utc_pin restores when the LAST
     # overlapping evaluation exits
     import uuid
+    from concurrent.futures import ThreadPoolExecutor
 
     base = os.path.join(
         tempfile.gettempdir(),
@@ -4431,18 +4384,30 @@ def _run_union(
         with _utc_pin(spark), _audit_scheduling_pin(
             spark
         ), _narrow_shuffle_pin(spark):
+            ord_df = _ord_slice(spark, sf_dir)
+
+            def _built(branch: str) -> DataFrame:
+                # The eager checkpoint INSIDE the thread carries the
+                # pool's concurrency: without it a branch's lazy work
+                # (the SCD2 merges, read-backs) runs in the final
+                # union's job, one branch after another (ROADMAP trio
+                # A/B). One job per branch, not one per audit row.
+                return _branch_rows(
+                    spark, sf_dir, ord_df, base, branch
+                ).localCheckpoint(eager=True)
+
+            # The branch scripts are independent (disjoint scratch
+            # subdirs, shared state only through the reentrant
+            # _conf_pin guards) and each is many small jobs with
+            # driver-side gaps, which the FIFO scheduler interleaves.
+            # Audit values cannot move with scheduling: exact decimal
+            # sums, integer counts and file-set claims per branch.
+            with ThreadPoolExecutor(max_workers=min(8, len(branches))) as ex:
+                rows = list(ex.map(_built, branches))
             # eager, lineage-truncating materialization of the (tiny)
             # audit rows: after this the scratch dir is not referenced
             # by any plan
-            out = build_maintenance_union(
-                spark,
-                sf_dir,
-                base,
-                timed=True,
-                branches=branches,
-                ord_df=_ord_slice(spark, sf_dir),
-                parallel=8,
-            ).localCheckpoint(eager=True)
+            out = _union_all(rows).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out.orderBy("check_name")

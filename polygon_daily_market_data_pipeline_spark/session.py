@@ -18,10 +18,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# One BLAS thread per task (see bench.py): Spark supplies the
-# parallelism; nested OpenBLAS threads inside pandas-UDF workers only
-# oversubscribe cores. Workers inherit the driver env in local mode; on
-# a cluster ship the same via spark.executorEnv.OPENBLAS_NUM_THREADS.
+# One BLAS thread per task: Spark supplies the parallelism; nested
+# OpenBLAS threads inside pandas-UDF workers only oversubscribe cores.
+# Set on import, so before the JVM and its Python workers start: workers
+# inherit the driver env in local mode; on a cluster ship the same via
+# spark.executorEnv.OPENBLAS_NUM_THREADS.
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("MKL_NUM_THREADS", "1")
@@ -50,13 +51,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow for the pandas-UDF paths (multimodal, embedding ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Write timestamps as TIMESTAMP_MICROS, not Spark's legacy
+        # Write timestamps as INT64 TIMESTAMP_MICROS, not Spark's legacy
         # INT96 default: INT96 records NO footer min/max statistics,
-        # which blinds every envelope consumer (data skipping,
-        # fast_aggregate, transform partition tags) on ts columns.
-        # commit_version carries a timezone-free aggregate fallback
-        # for vanilla sessions, but MICROS makes the metadata path
-        # free here.
+        # which silently disables file pruning on time predicates and
+        # blinds every envelope consumer (data skipping, fast_aggregate,
+        # transform partition tags) on ts columns. commit_version
+        # carries a timezone-free aggregate fallback for vanilla
+        # sessions, but MICROS makes the metadata path free here.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Dynamic partition overwrite = the reference's FORCE=TRUE +
         # idempotent per-date re-load (copy_to_raw.sql:38).
@@ -73,10 +74,6 @@ def get_spark(
         # zstd parquet: ~30-40% smaller than snappy at similar scan
         # speed — at 100 TB the IO saved dominates the encode cost.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # INT64 micros, not the legacy INT96: INT96 timestamps get NO
-        # parquet column statistics, which silently disables footer
-        # min/max file pruning on every time predicate.
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     if master:
         builder = builder.master(master)

@@ -1,5 +1,1 @@
 """Sources & sinks (SURVEY.md §2.1 S1–S11)."""
-
-from polygon_daily_market_data_pipeline_spark.sources.tables import load_table, load_tables
-
-__all__ = ["load_table", "load_tables"]
