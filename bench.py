@@ -63,7 +63,7 @@ def query_layers(
 
 
 def main() -> None:
-    from polygon_daily_market_data_pipeline_spark.session import get_spark
+    from polygon_daily_market_data_pipeline_spark.session import get_spark, local_cores
     from polygon_daily_market_data_pipeline_spark.plans import (  # noqa: F401
         llm_ops,
         media_ops,
@@ -76,9 +76,7 @@ def main() -> None:
     )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(
-        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-    )
+    cpus = local_cores()
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
 
     events = tempfile.mkdtemp(prefix="bench_events_")

@@ -11,10 +11,12 @@ function. Task graph preserved:
 The XCom metadata dict becomes a local ``BatchMeta``; Jinja date
 injection becomes a parameter; retries are a driver-side wrapper
 (Spark task retries are free underneath). Warehouse tables are parquet
-dirs partitioned by ``trade_date`` — every per-date statement partition
-prunes, which is what makes this run unchanged against a 100 TB
-history: each day touches one partition of CORE/FACT, never the full
-table.
+dirs partitioned by ``trade_date``, and each per-date step reads only
+its date's partition dir: RAW after the load, CORE before and after its
+merge, FACT before and after its merge. So each day lists and touches
+one partition of RAW/CORE/FACT, never the full table, which is what
+makes this run unchanged against a 100 TB history. The two DIMs are
+small unpartitioned tables and are read whole.
 """
 
 from __future__ import annotations
@@ -55,7 +57,10 @@ class BatchMeta:
 
 class Warehouse:
     """Parquet-backed medallion warehouse (RAW/CORE/DIM/FACT), each table
-    a directory; CORE/FACT/RAW partitioned by trade_date."""
+    a directory; CORE/FACT/RAW partitioned by trade_date.
+
+    ``read(table, schema)`` lists every partition dir of the table;
+    ``read(table, schema, trade_date)`` lists only that date's dir."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -67,10 +72,21 @@ class Warehouse:
     def exists(self, table: str) -> bool:
         return os.path.exists(self._path(table))
 
-    def read(self, table: str, schema) -> DataFrame:
-        if not self.exists(table):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(self._path(table))
+    def read(self, table: str, schema, trade_date: str | None = None) -> DataFrame:
+        """The table, or with ``trade_date`` (``YYYY-MM-DD``) only its
+        ``trade_date=<d>`` partition; ``basePath`` keeps ``trade_date`` a
+        column of the declared type. A missing table or partition reads
+        as an empty frame of ``schema``."""
+        path = self._path(table)
+        reader = self.spark.read.schema(schema)
+        if trade_date is not None:
+            reader = reader.option("basePath", path)
+            path = os.path.join(path, f"trade_date={trade_date}")
+        if not os.path.exists(path):
+            # where("false") makes the optimizer see an empty relation, so
+            # joins against a day not yet loaded fold away before running
+            return self.spark.createDataFrame([], schema).where("false")
+        return reader.parquet(path)
 
     def overwrite(self, df: DataFrame, table: str, partition_by: str | None = None):
         # localCheckpoint severs lineage so a write can target a path its
@@ -114,7 +130,8 @@ def run_eod_pipeline(
     split of the reference (get_securities_data.py:109-115).
     """
     wh = Warehouse(spark, warehouse_root)
-    d = str(trading_date)
+    # zero-padded, so a CLI date like 2024-1-5 names its partition dir
+    d = dt.datetime.strptime(str(trading_date), "%Y-%m-%d").date().isoformat()
 
     # -- upload/validate (S7/S8 + Q1/Q2 + P7) --------------------------------
     raw_batch = typed_raw_load(spark, landing_path, d, ingest_ts=fixed_ts)
@@ -123,11 +140,11 @@ def run_eod_pipeline(
 
     # -- copy_to_raw + check_loaded (S8, Q3) ----------------------------------
     wh.overwrite_partitions(raw_batch, "raw_eod_prices", "trade_date")
-    raw = wh.read("raw_eod_prices", schemas.RAW_EOD_PRICES)
+    raw = wh.read("raw_eod_prices", schemas.RAW_EOD_PRICES, d)
     quality.check_loaded(raw, d)
 
     # -- premerge audit (Q4) ---------------------------------------------------
-    core = wh.read("eod_prices", schemas.CORE_EOD_PRICES)
+    core = wh.read("eod_prices", schemas.CORE_EOD_PRICES, d)
     pre = quality.premerge_metrics(raw.where(f"trade_date = DATE'{d}'"), core)
     pre_row = pre.collect()  # materialize before core is rewritten
 
@@ -141,7 +158,7 @@ def run_eod_pipeline(
     core_slice = core.where(f"trade_date = DATE'{d}'")
     merged_slice = star.core_upsert(core_slice, src)
     wh.overwrite_partitions(merged_slice, "eod_prices", "trade_date")
-    core = wh.read("eod_prices", schemas.CORE_EOD_PRICES)
+    core = wh.read("eod_prices", schemas.CORE_EOD_PRICES, d)
 
     # -- dim merges (J6, parallel in the reference; cheap sequential here) ----
     batch = core.where(f"trade_date = DATE'{d}'")
@@ -156,12 +173,12 @@ def run_eod_pipeline(
     dim_date = wh.read("dim_date", schemas.DIM_DATE)
 
     # -- merge_facts (J2/J3 + W1 + J5) — same partition-scoped merge ----------
-    fact = wh.read("fact_daily_price", schemas.FACT_DAILY_PRICE)
+    fact = wh.read("fact_daily_price", schemas.FACT_DAILY_PRICE, d)
     fact_src = star.fact_source_rows(batch, dim_sec, dim_date, load_ts=fixed_ts)
     fact_slice = fact.where(f"trade_date = DATE'{d}'")
     merged_fact_slice = star.fact_upsert(fact_slice, fact_src)
     wh.overwrite_partitions(merged_fact_slice, "fact_daily_price", "trade_date")
-    fact = wh.read("fact_daily_price", schemas.FACT_DAILY_PRICE)
+    fact = wh.read("fact_daily_price", schemas.FACT_DAILY_PRICE, d)
 
     # -- postmerge reconciliation (Q5) ----------------------------------------
     post = quality.postmerge_metrics(core, fact, d)

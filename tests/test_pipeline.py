@@ -4,6 +4,7 @@ null handling."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 from decimal import Decimal
 
@@ -92,6 +93,68 @@ def test_pipeline_end_to_end_and_idempotent(spark, landing_csv, tmp_path):
     # dim ids stable across days (insert-only, no re-keying)
     dim = wh.read("dim_security", schemas.DIM_SECURITY)
     assert dim.groupBy("symbol").count().where("count > 1").count() == 0
+
+
+def test_unpadded_date_finds_its_partition(spark, landing_csv, tmp_path):
+    """The dated reads look for ``trade_date=<YYYY-MM-DD>``: a CLI date
+    without zero padding still reads back the day it loaded."""
+    root = str(tmp_path / "wh")
+    d1 = landing_csv("eod.csv", pad_day(GOOD_DAY, "2024-01-05"))
+    audits = run_eod_pipeline(spark, root, d1, "2024-1-5", fixed_ts=TS)
+    post = audits["postmerge"].collect()[0]
+    assert post["core_rows"] == 126 and post["fact_rows"] == 126
+    assert (tmp_path / "wh" / "fact_daily_price" / "trade_date=2024-01-05").is_dir()
+
+
+@contextlib.contextmanager
+def _job_group(sc, name: str):
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_warehouse_read_lists_on_the_driver(spark, tmp_path):
+    """A 40-partition table reads without a Spark listing job, whole or by
+    date; a dated read touches only its own partition dir; a date not yet
+    loaded is an empty relation the optimizer can see, so testing it for
+    rows runs no job either."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("symbol", T.StringType()),
+        T.StructField("close", T.DoubleType()),
+        T.StructField("trade_date", T.DateType()),
+    ])
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(40)]
+    wh = Warehouse(spark, str(tmp_path))
+    wh.overwrite(
+        spark.createDataFrame([("S", float(i), d) for i, d in enumerate(days)], schema),
+        "t",
+        "trade_date",
+    )
+    d = days[19].isoformat()
+
+    sc = spark.sparkContext
+    with _job_group(sc, "wh_read_whole"):
+        whole = wh.read("t", schema)
+    with _job_group(sc, "wh_read_dated"):
+        one = wh.read("t", schema, d)
+    with _job_group(sc, "wh_read_missing"):
+        missing = wh.read("t", schema, "1999-01-01")
+        assert missing.isEmpty()
+    tracker = sc.statusTracker()
+    for group in ("wh_read_whole", "wh_read_dated", "wh_read_missing"):
+        assert tracker.getJobIdsForGroup(group) == [], group
+
+    assert whole.count() == 40
+    files = one.inputFiles()
+    assert files and all(f"/trade_date={d}/" in f for f in files)
+    assert dict(one.dtypes)["trade_date"] == "date"
+    assert [r.trade_date for r in one.collect()] == [days[19]]
+    assert missing.schema == schema and missing.count() == 0
 
 
 def test_dq_gates_skip_and_fail(spark, landing_csv):
