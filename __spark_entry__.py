@@ -62,7 +62,8 @@ def _ordered(names: list[str]) -> list[str]:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, in driver
-    order; each returns its plain lazy plan."""
+    order; each runs on a clone of the caller's session
+    (`analytics.register`) and returns its plain lazy plan."""
     return {n: QUERIES[n] for n in _ordered(list(QUERIES))}
 
 

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from polygon_daily_market_data_pipeline_spark.session import with_conf
+
 DEFAULT_BITS = 12
 
 
@@ -125,37 +127,29 @@ def zorder_write(
     makes) for tight per-file envelopes. ``n_files`` is rounded up to a
     power of two."""
     # INT96 timestamps carry no parquet statistics — the whole point
-    # here is footer pruning, so force the stats-bearing INT64 layout
-    # for THIS write only (restore the session conf afterwards).
-    conf = df.sparkSession.conf
-    ts_key = "spark.sql.parquet.outputTimestampType"
-    prior = conf.get(ts_key, None)
-    conf.set(ts_key, "TIMESTAMP_MICROS")
-    try:
-        n = 1 << max(1, (n_files - 1).bit_length())
-        # materialize each bucketized column ONCE: morton_key references
-        # every input `bits` times, and inlining a non-trivial bucket
-        # expression (the quantile fold carries a 2^bits-element
-        # boundary array) at each reference bloats the plan for nothing
-        bcols = {f"__zb_{i}": _bucketize(df, c, bits, bucketize) for i, c in enumerate(zcols)}
-        key = morton_key([F.col(name) for name in bcols], bits)
-        cell = F.shiftright(
-            F.col("__z"), bits * len(zcols) - n.bit_length() + 1
-        )
-        (
-            df.withColumns(bcols)
-            .withColumn("__z", key)
-            .repartitionByRange(n, cell)
-            .sortWithinPartitions("__z")
-            .drop("__z", *bcols)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        if prior is None:
-            conf.unset(ts_key)
-        else:
-            conf.set(ts_key, prior)
+    # here is footer pruning, so write the stats-bearing INT64 layout
+    # from a clone of the session (a per-write option is ignored: the
+    # footer stays INT96 with no stats)
+    df = with_conf(df, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"})
+    n = 1 << max(1, (n_files - 1).bit_length())
+    # materialize each bucketized column ONCE: morton_key references
+    # every input `bits` times, and inlining a non-trivial bucket
+    # expression (the quantile fold carries a 2^bits-element
+    # boundary array) at each reference bloats the plan for nothing
+    bcols = {f"__zb_{i}": _bucketize(df, c, bits, bucketize) for i, c in enumerate(zcols)}
+    key = morton_key([F.col(name) for name in bcols], bits)
+    cell = F.shiftright(
+        F.col("__z"), bits * len(zcols) - n.bit_length() + 1
+    )
+    (
+        df.withColumns(bcols)
+        .withColumn("__z", key)
+        .repartitionByRange(n, cell)
+        .sortWithinPartitions("__z")
+        .drop("__z", *bcols)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def _cmp_stat(v):

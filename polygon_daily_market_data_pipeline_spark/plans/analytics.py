@@ -23,6 +23,7 @@ by construction.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,6 +40,7 @@ from polygon_daily_market_data_pipeline_spark.functions.measures import (
 )
 from polygon_daily_market_data_pipeline_spark.operators.dedupe import latest_by_key
 from polygon_daily_market_data_pipeline_spark.operators.merge import merge_upsert
+from polygon_daily_market_data_pipeline_spark.session import QUERY_CONF, with_conf
 from polygon_daily_market_data_pipeline_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -57,13 +59,23 @@ NO_RETIME: set[str] = set()
 
 
 def register(name: str, oracle: str | None = None, retime: bool = True):
+    """Register ``fn`` as query ``name``. The registered function runs
+    ``fn`` on a clone of the caller's session carrying ``QUERY_CONF``
+    (``session.with_conf``), so a query's values do not depend on the
+    caller's zone or timestamp inference, and the caller's conf comes
+    back as it was, also while a lazily returned frame runs."""
+
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def query(spark: SparkSession, sf_dir: str, *args, **kwargs) -> DataFrame:
+            return fn(with_conf(spark, QUERY_CONF), sf_dir, *args, **kwargs)
+
+        QUERIES[name] = query
         if oracle is not None:
             ORACLES[name] = oracle
         if not retime:
             NO_RETIME.add(name)
-        return fn
+        return query
 
     return deco
 

@@ -48,6 +48,7 @@ from polygon_daily_market_data_pipeline_spark.operators.text_dedup import (
 )
 from polygon_daily_market_data_pipeline_spark.partitioning import spread_for_compute
 from polygon_daily_market_data_pipeline_spark.plans.analytics import register
+from polygon_daily_market_data_pipeline_spark.session import with_conf
 from polygon_daily_market_data_pipeline_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -743,9 +744,10 @@ def embedding_ann_ivf(
     from pyspark import StorageLevel
 
     # AQE OFF for this query's scope (round 17, VERDICT r16 #4 — the
-    # warehouse trio's audit-scheduling pin, same shared reentrant
-    # guard): AQE materializes every query stage as its OWN scheduled
-    # job, and this query's shuffles are query/hit-sized at ANY corpus
+    # warehouse trio's audit-scheduling conf, on a clone of the session,
+    # so the lazily returned frame runs under it too): AQE materializes
+    # every query stage as its OWN scheduled job, and this query's
+    # shuffles are query/hit-sized at ANY corpus
     # size (the rerank windows partition |Q|·k·rerank rows; the
     # candidate joins are explicit broadcasts; the corpus-sized work —
     # Lloyd partials, the shared index, the coded scans — is
@@ -755,7 +757,7 @@ def embedding_ann_ivf(
     # partitioning AQE cannot move, joins/counts are exact, and both
     # rerank windows carry total tie-broken orders. Interleaved A/B and
     # the oracle gate below pin it: same 6 rows, fingerprint-identical.
-    # The width-8 narrow pin rides along for the same reason as the
+    # Width-8 shuffles ride along for the same reason as the
     # trio's: every exchange in this query carries |Q|-scaled audit
     # rows (candidates after the per-batch local top-k, rerank
     # shortlists, 1-row aggs), so a batch-analytics shuffle width just
@@ -763,33 +765,10 @@ def embedding_ann_ivf(
     # AQE-on/w32 11.2/7.2 s at 79-80 jobs vs AQE-off/w8 6.8/6.8 s at
     # 42 jobs, the 6 output rows identical in every variant.
     from polygon_daily_market_data_pipeline_spark.plans.warehouse_ops import (
-        _audit_scheduling_pin,
-        _narrow_shuffle_pin,
+        _AUDIT_SCHEDULING,
     )
 
-    with _audit_scheduling_pin(spark), _narrow_shuffle_pin(spark):
-        return _embedding_ann_ivf_body(
-            spark, sf_dir, sample_every, eager, StorageLevel
-        )
-
-
-def _embedding_ann_ivf_body(
-    spark: SparkSession,
-    sf_dir: str,
-    sample_every: int,
-    eager: bool,
-    StorageLevel,
-) -> DataFrame:
-    from polygon_daily_market_data_pipeline_spark.operators.similarity import (
-        cosine_topk_ivfpq,
-        cosine_topk_ivfsq,
-        cosine_topk_pq,
-        cosine_topk_sq,
-        quantizer_index,
-        sq_train_bounds,
-        train_quantizers,
-    )
-
+    spark = with_conf(spark, _AUDIT_SCHEDULING)
     emb = load_table(spark, sf_dir, "embeddings").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -852,10 +831,8 @@ def _embedding_ann_ivf_body(
     # tests/test_llm_ops.py), so every audit's candidates and scores
     # are unchanged. Same for the queries' driver matrix: ONE toPandas
     # shared by the four coded methods instead of one each.
-    from pyspark import StorageLevel as _SL
-
     idx = quantizer_index(emb, cents, books, sq_bounds).persist(
-        _SL.MEMORY_AND_DISK
+        StorageLevel.MEMORY_AND_DISK
     )
     idx.count()
     q_pdf = q.select("vec_id", "embedding").toPandas()

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polygon_daily_market_data_pipeline_spark.plans.analytics import register
+from polygon_daily_market_data_pipeline_spark.session import with_conf
 from polygon_daily_market_data_pipeline_spark.streaming.events_stream import (
     hourly_event_counts,
     sessionize_stream,
@@ -37,24 +38,21 @@ _run_counter = itertools.count()
 
 def events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of events.parquet (TIMESTAMP(NANOS) read as long,
-    truncated to micros exactly like the batch loader / DuckDB)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")  # match naive-UTC oracle
-    # naive parquet timestamps must surface as TIMESTAMP (LTZ): the
-    # watermark operator rejects TIMESTAMP_NTZ event-time columns
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    truncated to micros exactly like the batch loader / DuckDB). Like
+    ``load_table`` it plans under the caller's session, which must carry
+    ``session.QUERY_CONF``: a UTC zone to match the naive-UTC oracle, and
+    naive parquet timestamps as TIMESTAMP, since the watermark operator
+    rejects TIMESTAMP_NTZ event-time columns."""
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     ev = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from pyspark.sql.types import LongType
 
     if isinstance(schema["ts"].dataType, LongType):
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, TimestampNTZType):
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     return ev
 
 
@@ -66,16 +64,18 @@ ROCKSDB_PROVIDER = (
 def run_available_now(
     stream_df: DataFrame,
     name_prefix: str,
-    state_partitions: int | None = 8,
     state_store: str | None = None,
 ) -> DataFrame:
     """Drain a streaming DataFrame to a memory sink and return the
     result table. Checkpoint in a temp dir — each invocation is a fresh,
     self-contained run (the driver contract calls queries repeatedly).
+    The stream starts on a clone of ``stream_df``'s session that carries
+    the width and provider below (``session.with_conf``); the caller's
+    conf is not touched, and the result table lives on the clone.
 
-    ``state_partitions`` sizes the state store (a stream pins
+    The state store is 8 partitions wide (a stream pins
     ``spark.sql.shuffle.partitions`` at first start, permanently via the
-    checkpoint): size it to key cardinality × throughput, not to the
+    checkpoint): sized to key cardinality × throughput, not to the
     batch-analytics default — every extra state partition is an extra
     store to open per micro-batch and, for Pandas-stateful ops, an extra
     Python worker.
@@ -89,35 +89,23 @@ def run_available_now(
     not per-restart. Default None = session setting (in-memory locally:
     for the small oracle-checked runs it is faster and
     output-identical, as the parity test asserts)."""
-    spark = stream_df.sparkSession
-    name = f"{name_prefix}_{next(_run_counter)}"
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    before_provider = spark.conf.get(provider_key, None)
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if state_store == "rocksdb":
-        spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-    elif state_store is not None:
+    if state_store not in (None, "rocksdb"):
         raise ValueError(f"unknown state_store {state_store!r}")
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        if state_store == "rocksdb":
-            if before_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, before_provider)
-    return spark.table(name)
+    conf = {"spark.sql.shuffle.partitions": "8"}
+    if state_store == "rocksdb":
+        conf["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
+    stream_df = with_conf(stream_df, conf)
+    name = f"{name_prefix}_{next(_run_counter)}"
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(name)
 
 
 @register(
@@ -213,13 +201,9 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The two drains are independent streaming jobs with driver-side
     # gaps (micro-batch planning, state-store commits) — overlap them
-    # in threads, the warehouse-branch co-scheduling pattern. The
-    # state-store width (shuffle partitions = 8) is pinned ONCE around
-    # the whole block and run_available_now is told not to touch the
-    # session conf (state_partitions=None): its per-call save/restore
-    # is not reentrant, and two overlapping restores could leave the
-    # session at the pinned width. Values cannot move with scheduling —
-    # each query latches its width from its own checkpoint at start,
+    # in threads, the warehouse-branch co-scheduling pattern. Values
+    # cannot move with scheduling — each query latches its state width
+    # (run_available_now's 8) from its own checkpoint at start,
     # and append-mode emission on bounded data is deterministic.
     from concurrent.futures import ThreadPoolExecutor
 
@@ -230,29 +214,22 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     views = events_stream_source(spark, sf_dir).where(
         "event_type = 'view'"
     )
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_hourly = ex.submit(
-                run_available_now,
-                hourly_event_counts(ev, watermark="0 seconds"),
-                "hourly_stream",
-                None,
-            )
-            f_outer = ex.submit(
-                run_available_now,
-                interval_join_stream(
-                    clicks, views, lookback="10 minutes",
-                    watermark="0 seconds", how="left_outer",
-                ),
-                "ssjoin_outer_stream",
-                None,
-            )
-            out = f_hourly.result()
-            outer = f_outer.result()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        f_hourly = ex.submit(
+            run_available_now,
+            hourly_event_counts(ev, watermark="0 seconds"),
+            "hourly_stream",
+        )
+        f_outer = ex.submit(
+            run_available_now,
+            interval_join_stream(
+                clicks, views, lookback="10 minutes",
+                watermark="0 seconds", how="left_outer",
+            ),
+            "ssjoin_outer_stream",
+        )
+        out = f_hourly.result()
+        outer = f_outer.result()
     jrows = (
         outer.where(F.col("view_ts").isNotNull())
         .groupBy(

@@ -100,7 +100,12 @@ from polygon_daily_market_data_pipeline_spark.operators.quality_model import (
 from polygon_daily_market_data_pipeline_spark.operators.quality_model import (
     PINNED_STOPWORD_WEIGHT as _QM_WS,
 )
+from polygon_daily_market_data_pipeline_spark.session import QUERY_CONF, with_conf
 from polygon_daily_market_data_pipeline_spark.sources.tables import load_table
+
+# The streaming branches' micro-batch frames are tiny: their drains run
+# at shuffle width 8.
+_NARROW_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
 
 _TS1 = "2024-01-01 00:00:00"
 _TS2 = "2024-02-01 00:00:00"
@@ -155,11 +160,6 @@ def _r4(col) -> "F.Column":
     snaps it identically in Spark and DuckDB."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * 10000).cast("long")
-
-
-def _r4_sql(expr: str) -> str:
-    """DuckDB twin of :func:`_r4` (expects a ROUND(x, 4) expression)."""
-    return f"CAST(ROUND(({expr}) * 10000) AS BIGINT)"
 
 
 def _row(df: DataFrame, name: str) -> DataFrame:
@@ -995,6 +995,7 @@ def _merge_rows(
     # ``mor_carried`` claim compares the same physical file set.
     from polygon_daily_market_data_pipeline_spark.operators.versioned import (
         clone_table,
+        drop_clone,
     )
 
     clone_table(tdir, tdir2, at_version=1)
@@ -1017,6 +1018,10 @@ def _merge_rows(
         F.lit(mor_carried).alias("n_aux"),
         _money_sum("o_totalprice").alias("val"),
     )
+    # unregister the clone from the COW table's vacuum guard: the clone
+    # dir stays readable (it lives until the scratch is removed), only
+    # the live-clone marker goes
+    drop_clone(tdir, tdir2)
     return [
         _row(row, "versioned_merge"),
         _row(mor_row, "versioned_merge_mor"),
@@ -1082,21 +1087,21 @@ def _versioned_stream_rows(
     staged = ord_df.where(F.col("o_orderdate") < cut).repartition(4)
     staged.write.mode("overwrite").parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
     # bound each micro-batch's shuffle width, same rationale as the
     # streaming-MV branch: the per-batch frames are tiny
-    with _narrow_shuffle_pin(spark):
-        q = (
-            stream.writeStream.foreachBatch(versioned_stream_sink(tdir))
-            .option("checkpointLocation", os.path.join(base, "vs_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = with_conf(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir),
+        _NARROW_SHUFFLE,
+    )
+    q = (
+        stream.writeStream.foreachBatch(versioned_stream_sink(tdir))
+        .option("checkpointLocation", os.path.join(base, "vs_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     hist = history(tdir)
     streamed_shape = 1 if (
         len(hist) >= 2
@@ -1156,24 +1161,24 @@ def _corpus_stream_rows(
     docs.coalesce(1).write.mode("overwrite").parquet(feed_dir)
     dup.coalesce(1).write.mode("append").parquet(feed_dir)
     schema = spark.read.parquet(feed_dir).schema
-    stream = (
+    # the dedup joins per micro-batch run over a few hundred docs:
+    # bound the shuffle width like the other streaming branches
+    stream = with_conf(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+        .parquet(feed_dir),
+        _NARROW_SHUFFLE,
     )
     sink = CorpusDedupSink(
         spark, os.path.join(base, "cs_state"), threshold=1.0
     )
-    # the dedup joins per micro-batch run over a few hundred docs:
-    # bound the shuffle width like the other streaming branches
-    with _narrow_shuffle_pin(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", os.path.join(base, "cs_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        stream.writeStream.foreachBatch(sink.process)
+        .option("checkpointLocation", os.path.join(base, "cs_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     fed = 2 * int(_st["n"])  # dup is a 1:1 id-shifted copy of docs
     row = sink.admitted().agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1708,25 +1713,25 @@ def _streaming_mv_rows(
     feed.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(mv_src)
-    ev = (
-        spark.readStream.schema(spark.read.parquet(mv_src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(mv_src)
-    )
     # Bound the micro-batch shuffle width like run_available_now does:
     # in a vanilla driver session (200 default shuffle partitions, no
     # AQE) each foreachBatch groupBy would otherwise shuffle the tiny
     # per-batch partial across 200 tasks.
-    with _narrow_shuffle_pin(spark):
-        q = (
-            ev.writeStream.foreachBatch(
-                streaming_aggregate_sink(["event_type"], measures, state)
-            )
-            .option("checkpointLocation", os.path.join(base, "mv_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    ev = with_conf(
+        spark.readStream.schema(spark.read.parquet(mv_src).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(mv_src),
+        _NARROW_SHUFFLE,
+    )
+    q = (
+        ev.writeStream.foreachBatch(
+            streaming_aggregate_sink(["event_type"], measures, state)
         )
-        q.awaitTermination()
+        .option("checkpointLocation", os.path.join(base, "mv_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     mv = read_aggregate(spark, state, ["event_type"], measures)
     # oracle-facing val = MAX of per-group ROUNDED sums: per-group
     # magnitude keeps double drift ≪ the 4dp boundary, and MAX is
@@ -4169,7 +4174,10 @@ def checks_for(branches: "list[str]") -> "list[str]":
 # commit the slice to scratch tables and audit the read-backs, and the
 # audit vals are exact decimal sums. plan_audit's direct
 # build_maintenance_union calls keep the raw parquet-scan frame
-# (inspectable pushdown).
+# (inspectable pushdown). The cached frame binds later work on it to the
+# session that built it, so the slice is built on its own audit clone:
+# built on a caller's session, every later evaluation's branch work
+# would plan under that caller's conf (its zone, AQE, shuffle width).
 _ORD_CACHE: "dict[tuple, DataFrame]" = {}
 
 
@@ -4180,7 +4188,7 @@ def _ord_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _ORD_CACHE.get(key)
     if df is None:
         df = (
-            load_table(spark, sf_dir, "orders")
+            load_table(with_conf(spark, _AUDIT_CONF), sf_dir, "orders")
             .where(F.col("o_custkey") % 4 == 1)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -4248,100 +4256,31 @@ def build_maintenance_union(
     )
 
 
-# Reentrant, process-wide session-conf pins (round 10): session conf is
-# SHARED state, and evaluations overlap — the driver may run queries
-# concurrently in one session (driver harness threads, see
-# `_run_union`) and the branch scripts run in parallel threads within one evaluation. A plain
-# pin/restore per scope means scope A's restore can land MID-FLIGHT in
-# scope B: for the TZ pin B's remaining `_CUT` literals would parse
-# under the restored (possibly non-UTC) zone and shift real row values
-# — an only-under-concurrency flake no serial re-run reproduces; for
-# the streaming branches' shuffle-width pin it would only cost
-# performance (every audit val is partition-independent by
-# construction). The guard makes overlapping pins of one key share one
-# window: first-in saves and pins, last-out restores. Overlapping pins
-# of the SAME key must agree on the value (asserted) — all current
-# callers pin fixed constants.
-import threading as _threading
-
-_PIN_LOCK = _threading.Lock()
-_PIN_STATE: "dict[tuple, dict]" = {}
-
-
-class _conf_pin:
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, str(value)
-        # state is keyed by (SESSION, conf key), not conf key alone: two
-        # different SparkSessions in one process hold independent
-        # session confs, so sharing one depth counter would leave the
-        # second session unpinned — its _CUT literals would parse under
-        # a non-UTC zone, the exact flake class this guard exists to
-        # prevent (ADVICE r10)
-        self._sk = (id(spark), key)
-
-    def __enter__(self):
-        with _PIN_LOCK:
-            st = _PIN_STATE.setdefault(self._sk, {"depth": 0, "saved": None})
-            if st["depth"] == 0:
-                st["saved"] = self.spark.conf.get(self.key)
-                self.spark.conf.set(self.key, self.value)
-            else:
-                assert st["value"] == self.value, (
-                    f"conflicting pins of {self.key}: "
-                    f"{st['value']} vs {self.value}"
-                )
-            st["value"] = self.value
-            st["depth"] += 1
-        return self
-
-    def __exit__(self, *exc):
-        with _PIN_LOCK:
-            st = _PIN_STATE[self._sk]
-            st["depth"] -= 1
-            if st["depth"] == 0:
-                self.spark.conf.set(self.key, st["saved"])
-        return False
-
-
-def _utc_pin(spark: SparkSession) -> _conf_pin:
-    return _conf_pin(spark, "spark.sql.session.timeZone", "UTC")
-
-
-def _narrow_shuffle_pin(spark: SparkSession) -> _conf_pin:
-    """The streaming branches' micro-batch frames are tiny; bound their
-    shuffle width to 8 for the drain (shared reentrant pin — see
-    above). ``_run_union`` pins the SAME width for the whole audit
-    scope since round 16 (same key ⇒ the values must agree — the
-    reentrant pin asserts it)."""
-    return _conf_pin(spark, "spark.sql.shuffle.partitions", "8")
-
-
-def _audit_scheduling_pin(spark: SparkSession) -> "_conf_pin":
-    """Round 16 (VERDICT r15 Next #1): AQE OFF for the audit scope.
-
-    The r15 job census measured the trio at ~790 driver-scheduled
-    Spark jobs/evaluation with AQE on vs ~450 with it off — AQE
-    materializes every query stage as its OWN scheduled job, and on
-    audit-sized frames (a handful of rows after the first aggregate)
-    that runtime re-planning buys nothing while the per-job
-    scheduling floor (~30-50 ms here) couples host scheduler latency
-    into the trio at ~0.8 s per ms of drift (SCALE.md job census —
-    the late-session 39-53 s swings). Every audit value is
-    partition-independent by construction (exact integer counts,
-    decimal money sums, file-set claims — the `_run_union` contract),
-    and the plan-claim bits (cbo) grade HINT-forced joins, so plan
-    choice cannot move with AQE. Interleaved same-session A/B at
-    sf0.1: AQE off + width-8 shuffles ≈ −3 s trio wall AND −335
-    jobs, fingerprints byte-identical.
-
-    At 100 TB this pin stays correct for what it scopes: the audit
-    UNION and claim probes over evaluation-sized frames. The
-    data-sized operator work inside the branches (merges, compaction,
-    scans) is bounded by the ord-slice/corpus inputs whose shuffle
-    width the narrow pin already set; a production deployment sizing
-    those inputs up would widen the pinned width, not re-enable
-    per-stage job materialization for row-count-sized audits."""
-    return _conf_pin(spark, "spark.sql.adaptive.enabled", "false")
+# The audit scope's scheduling conf (round 16, VERDICT r15 Next #1):
+# AQE OFF and width-8 shuffles. The r15 job census measured the trio at
+# ~790 driver-scheduled Spark jobs/evaluation with AQE on vs ~450 with
+# it off — AQE materializes every query stage as its OWN scheduled job,
+# and on audit-sized frames (a handful of rows after the first
+# aggregate) that runtime re-planning buys nothing while the per-job
+# scheduling floor (~30-50 ms here) couples host scheduler latency into
+# the trio at ~0.8 s per ms of drift (SCALE.md job census — the
+# late-session 39-53 s swings). Every audit value is
+# partition-independent by construction (exact integer counts, decimal
+# money sums, file-set claims — the `_run_union` contract), and the
+# plan-claim bits (cbo) grade HINT-forced joins, so plan choice cannot
+# move with AQE. Interleaved same-session A/B at sf0.1: AQE off +
+# width-8 shuffles ≈ −3 s trio wall AND −335 jobs, fingerprints
+# byte-identical.
+#
+# At 100 TB this conf stays correct for what it scopes: the audit UNION
+# and claim probes over evaluation-sized frames. The data-sized operator
+# work inside the branches (merges, compaction, scans) is bounded by the
+# ord-slice/corpus inputs whose shuffle width the narrow conf sets; a
+# production deployment sizing those inputs up would widen the width,
+# not re-enable per-stage job materialization for row-count-sized
+# audits.
+_AUDIT_SCHEDULING = {"spark.sql.adaptive.enabled": "false", **_NARROW_SHUFFLE}
+_AUDIT_CONF = {**QUERY_CONF, **_AUDIT_SCHEDULING}
 
 
 def _run_union(
@@ -4350,12 +4289,13 @@ def _run_union(
     branches: "list[str]",
     name: str = "warehouse",
 ) -> DataFrame:
-    """Registered-query wrapper: pin UTC, build the selected branches in
-    an 8-thread pool over a per-call scratch dir, eagerly checkpoint the
-    (tiny) audit rows, then restore the TZ and remove the scratch before
-    returning — a caller's session and filesystem come back exactly as
-    they were. ``name`` is kept for existing callers and does not affect the
-    result.
+    """Registered-query wrapper: build the selected branches in an
+    8-thread pool over a per-call scratch dir, on a clone of the
+    caller's session carrying ``_AUDIT_CONF``;
+    eagerly checkpoint the (tiny) audit rows, then remove the scratch
+    before returning — a caller's session and filesystem come back
+    exactly as they were. ``name`` is kept for existing callers and does
+    not affect the result.
 
     The scratch name carries pid AND a fresh uuid: two concurrent runs
     in the SAME process (driver harness threads, a concurrent bench)
@@ -4366,14 +4306,14 @@ def _run_union(
     The DuckDB twin of any branch subset is
     ``_oracle_for(checks_for(branches))``; ``tools/check_oracle.py``
     compares the two by fingerprint."""
-    # the date-cut literals compare against TIMESTAMP columns: pin the
-    # session to UTC so a non-UTC driver session cannot shift the
-    # boundary relative to the naive-UTC DuckDB oracle (same contract
-    # as events_stream_source); _utc_pin restores when the LAST
-    # overlapping evaluation exits
+    # the date-cut literals compare against TIMESTAMP columns: the UTC
+    # clone keeps a non-UTC caller from shifting the boundary relative
+    # to the naive-UTC DuckDB oracle (same contract as
+    # events_stream_source).
     import uuid
     from concurrent.futures import ThreadPoolExecutor
 
+    spark = with_conf(spark, _AUDIT_CONF)
     base = os.path.join(
         tempfile.gettempdir(),
         f"wh_maint_{os.path.basename(os.path.normpath(sf_dir))}"
@@ -4381,33 +4321,29 @@ def _run_union(
     )
     os.makedirs(base)
     try:
-        with _utc_pin(spark), _audit_scheduling_pin(
-            spark
-        ), _narrow_shuffle_pin(spark):
-            ord_df = _ord_slice(spark, sf_dir)
+        ord_df = _ord_slice(spark, sf_dir)
 
-            def _built(branch: str) -> DataFrame:
-                # The eager checkpoint INSIDE the thread carries the
-                # pool's concurrency: without it a branch's lazy work
-                # (the SCD2 merges, read-backs) runs in the final
-                # union's job, one branch after another (ROADMAP trio
-                # A/B). One job per branch, not one per audit row.
-                return _branch_rows(
-                    spark, sf_dir, ord_df, base, branch
-                ).localCheckpoint(eager=True)
+        def _built(branch: str) -> DataFrame:
+            # The eager checkpoint INSIDE the thread carries the
+            # pool's concurrency: without it a branch's lazy work
+            # (the SCD2 merges, read-backs) runs in the final
+            # union's job, one branch after another (ROADMAP trio
+            # A/B). One job per branch, not one per audit row.
+            return _branch_rows(
+                spark, sf_dir, ord_df, base, branch
+            ).localCheckpoint(eager=True)
 
-            # The branch scripts are independent (disjoint scratch
-            # subdirs, shared state only through the reentrant
-            # _conf_pin guards) and each is many small jobs with
-            # driver-side gaps, which the FIFO scheduler interleaves.
-            # Audit values cannot move with scheduling: exact decimal
-            # sums, integer counts and file-set claims per branch.
-            with ThreadPoolExecutor(max_workers=min(8, len(branches))) as ex:
-                rows = list(ex.map(_built, branches))
-            # eager, lineage-truncating materialization of the (tiny)
-            # audit rows: after this the scratch dir is not referenced
-            # by any plan
-            out = _union_all(rows).localCheckpoint(eager=True)
+        # The branch scripts are independent (disjoint scratch
+        # subdirs; conf lives on this call's clone) and each is many
+        # small jobs with driver-side gaps, which the FIFO scheduler
+        # interleaves. Audit values cannot move with scheduling: exact
+        # decimal sums, integer counts and file-set claims per branch.
+        with ThreadPoolExecutor(max_workers=min(8, len(branches))) as ex:
+            rows = list(ex.map(_built, branches))
+        # eager, lineage-truncating materialization of the (tiny)
+        # audit rows: after this the scratch dir is not referenced
+        # by any plan
+        out = _union_all(rows).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out.orderBy("check_name")

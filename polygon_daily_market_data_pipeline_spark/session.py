@@ -8,13 +8,16 @@ coalescing), broadcast threshold tuned, Arrow enabled for the few
 pandas-interop paths, session timezone pinned (the reference computes
 trading dates in a fixed TZ — ``get_securities_data.py:14``; we pin UTC
 so Spark and the DuckDB oracle agree on date arithmetic).
+
+``with_conf`` is the one way evaluation sets a conf: it runs the scope
+on a clone of the caller's session, so the caller is never written.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # One BLAS thread per task: Spark supplies the parallelism; nested
 # OpenBLAS threads inside pandas-UDF workers only oversubscribe cores.
@@ -24,6 +27,49 @@ from pyspark.sql import SparkSession
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("MKL_NUM_THREADS", "1")
+
+
+# Confs every registered query plans under (``analytics.register`` runs
+# each on a clone that carries them). The testdata timestamps are naive
+# UTC: a UTC session makes hour windows and date_trunc agree with the
+# DuckDB oracle whatever zone the caller runs in; naive parquet
+# timestamps surface as TIMESTAMP, not TIMESTAMP_NTZ, because
+# watermarks, unix_micros and epoch casts need TIMESTAMP; and
+# events.parquet's TIMESTAMP(NANOS), which Spark otherwise rejects
+# (PARQUET_TYPE_ILLEGAL), reads as a long that ``load_table`` truncates
+# to micros the way DuckDB does. All three are read at analysis.
+QUERY_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def with_conf(
+    target: SparkSession | DataFrame, conf: dict[str, str]
+) -> SparkSession | DataFrame:
+    """``target`` (a SparkSession or a DataFrame) on a clone of its
+    session with ``conf`` set; the caller's session is never written.
+
+    The clone shares the SparkContext and the cache, and starts from the
+    caller's current conf, temp views, UDFs and streaming-query
+    listeners (a stream started on the clone reports to them). A conf
+    read at analysis (session time zone, parquet timestamp inference)
+    must be set on the session before its frames are built; a conf read
+    at execution (shuffle width, AQE, state-store provider, output
+    timestamp type) may be set by rebinding a built frame, whose plan
+    then runs on the clone."""
+    spark = target if isinstance(target, SparkSession) else target.sparkSession
+    jclone = spark._jsparkSession.cloneSession()
+    for listener in spark._jsparkSession.streams().listListeners():
+        jclone.streams().addListener(listener)
+    clone = SparkSession(spark.sparkContext, jclone)
+    for k, v in conf.items():
+        clone.conf.set(k, str(v))
+    if isinstance(target, SparkSession):
+        return clone
+    dataset = clone._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(jclone, target._jdf.logicalPlan()), clone)
 
 
 def local_cores() -> int:
@@ -74,7 +120,9 @@ def get_spark(
     """
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
+        # plan like the registered queries, so a direct load_table call
+        # (tests, tools) reads the testdata the same way
+        .config(map=QUERY_CONF)
         # AQE: runtime shuffle-partition coalescing, skew-join handling,
         # dynamic broadcast conversion — essential at 100 TB where static
         # planning misguesses cardinalities.

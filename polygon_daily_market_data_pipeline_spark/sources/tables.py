@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 TABLES = (
     "region",
@@ -36,43 +37,20 @@ SMALL_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame (lazy parquet scan).
 
-    ``events.parquet`` carries TIMESTAMP(NANOS) which vanilla Spark
-    rejects (PARQUET_TYPE_ILLEGAL); we read nanos as long
-    (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to
+    Plans under the caller's session, which must carry
+    ``session.QUERY_CONF``: registered queries run on a clone that sets
+    it, and ``get_spark`` sessions start with it. Under it naive
+    parquet timestamps read as TIMESTAMP in UTC, and
+    ``events.parquet``'s TIMESTAMP(NANOS), which vanilla Spark rejects
+    (PARQUET_TYPE_ILLEGAL), reads as long and is truncated here to
     microsecond timestamps — the same truncation DuckDB applies, so
     oracle comparisons agree.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # timestamps are naive; pin the session TZ so hour windows /
-    # date_trunc agree with the (naive-UTC) DuckDB oracle even when
-    # the harness session defaults to another zone, and read naive
-    # parquet timestamps as TIMESTAMP (LTZ) rather than TIMESTAMP_NTZ —
-    # watermarks, unix_micros and epoch casts require TIMESTAMP, and
-    # with a UTC session the wall-clock values are identical.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql.types import LongType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _ntz_to_ltz(df)
-    return _ntz_to_ltz(spark.read.parquet(path))
-
-
-def _ntz_to_ltz(df: DataFrame) -> DataFrame:
-    """Cast any TIMESTAMP_NTZ column to TIMESTAMP (defense in depth for
-    sessions where the parquet scan already inferred NTZ — e.g. a
-    harness-owned SparkSession that read the footer before our conf
-    pin). Value-preserving under the UTC session TZ pinned above."""
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    if not ntz:
-        return df
-    return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+    df = spark.read.parquet(path)
+    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def load_tables(

@@ -1,8 +1,8 @@
 """Golden tests for ``tools/check_oracle.py``, the repo's one Spark-vs-DuckDB
 differential: the cell normalizer and the order-insensitive fingerprint are
 pinned to literal strings, the per-column digests name the column that moved,
-and one small end-to-end pass compares registered queries with their DuckDB
-twins at sf0.001."""
+and small end-to-end passes compare registered queries with their DuckDB
+twins at sf0.001, from a non-UTC caller whose conf must come back unchanged."""
 
 from __future__ import annotations
 
@@ -138,11 +138,73 @@ def test_col_digests_name_the_column_that_moved():
     ]
 
 
+# a batch aggregate, the hourly windows, the streaming drains and the
+# ANN query (its own AQE-off clone, lazily returned frame)
+_FROM_VANILLA = {
+    "pricing_summary",
+    "events_hourly",
+    "events_hourly_stream",
+    "embedding_ann_ivf",
+}
+
+
+def _vanilla_new_york(spark):
+    """A caller session like a driver's: New York time, naive parquet
+    timestamps inferred as TIMESTAMP_NTZ, nanos timestamps not read as
+    long."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "America/New_York")
+    caller.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    caller.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    return caller
+
+
 def test_queries_match_duckdb_twin_at_sf0_001(spark, capsys):
-    """A registered query through ``queries()`` against its DuckDB twin."""
+    """Registered queries through ``queries()`` against their DuckDB
+    twins, from a non-UTC caller session; ``run_suite`` also fails a
+    query that leaves the caller's conf changed."""
     con = check_oracle.connect(SF)
-    checked, failures = check_oracle.run_suite(spark, con, SF, {"pricing_summary"})
-    assert (checked, failures) == (1, []), capsys.readouterr().out
+    caller = _vanilla_new_york(spark)
+    checked, failures = check_oracle.run_suite(caller, con, SF, _FROM_VANILLA)
+    assert (checked, failures) == (len(_FROM_VANILLA), []), capsys.readouterr().out
+
+
+def test_run_union_from_successive_callers_matches_oracle(spark, monkeypatch):
+    """The shared ord slice is cached once per process. Two evaluations
+    from two non-UTC callers must both match the oracle: a slice bound
+    to the first caller's session would plan the second evaluation's
+    date-cut literals in New York time."""
+    from polygon_daily_market_data_pipeline_spark.plans import warehouse_ops
+
+    monkeypatch.setattr(warehouse_ops, "_ORD_CACHE", {})
+    con = check_oracle.connect(SF)
+    rel = con.sql(warehouse_ops._oracle_for(warehouse_ops.checks_for(["retention"])))
+    want = fingerprint([c.lower() for c in rel.columns], rel.fetchall())
+    for _ in range(2):
+        df = warehouse_ops._run_union(_vanilla_new_york(spark), SF, ["retention"])
+        rows = [tuple(r) for r in df.collect()]
+        assert fingerprint(df.columns, rows, spark_side=True) == want
+
+
+def test_run_suite_reports_a_conf_leak(spark, capsys, monkeypatch):
+    import __spark_entry__ as ent
+
+    from polygon_daily_market_data_pipeline_spark.plans.analytics import QUERIES
+
+    def leaky(s, sf_dir):
+        s.conf.set("spark.sql.shuffle.partitions", "7")
+        return QUERIES["pricing_summary"](s, sf_dir)
+
+    monkeypatch.setattr(ent, "queries", lambda: {"pricing_summary": leaky})
+    caller = spark.newSession()
+    checked, failures = check_oracle.run_suite(
+        caller, check_oracle.connect(SF), SF
+    )
+    assert (checked, failures) == (1, ["pricing_summary"])
+    assert (
+        "FAIL  pricing_summary: session conf changed "
+        "['spark.sql.shuffle.partitions']"
+    ) in capsys.readouterr().out
 
 
 def test_run_union_matches_composed_oracle_at_sf0_001(spark):
@@ -155,8 +217,10 @@ def test_run_union_matches_composed_oracle_at_sf0_001(spark):
     )
 
     con = check_oracle.connect(SF)
+    before = spark.conf.getAll
     df = _run_union(spark, SF, ["packing"])
     rows = [tuple(r) for r in df.collect()]
+    assert spark.conf.getAll == before
     rel = con.sql(_oracle_for(checks_for(["packing"])))
     assert len(rows) == 1
     assert fingerprint([c.lower() for c in df.columns], rows, spark_side=True) == (

@@ -64,7 +64,8 @@ def test_oracle_column_aliases_match_shape():
 
 def test_queries_are_the_registered_plans():
     """queries() hands the harness the registered functions themselves:
-    plain lazy plans, with no wrapper between the driver and the query."""
+    each runs its plain lazy plan on a session clone (analytics.register),
+    with no other wrapper between the driver and the query."""
     from polygon_daily_market_data_pipeline_spark.plans.analytics import QUERIES
 
     ent = _entry()

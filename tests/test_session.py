@@ -1,14 +1,19 @@
-"""Session-factory decisions that need no Spark: the default core count
-and which confs count as local-mode only."""
+"""Session-factory decisions (the default core count, which confs count
+as local-mode only) and ``with_conf``, the one way evaluation sets a
+conf: on a clone of the caller's session, never on the caller."""
 
 from __future__ import annotations
 
 import os
+import time
+
+from pyspark.sql import functions as F
 
 from polygon_daily_market_data_pipeline_spark.session import (
     effective_master,
     local_cores,
     local_mode_conf,
+    with_conf,
 )
 
 THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -45,3 +50,75 @@ def test_local_only_confs_stay_off_clusters(monkeypatch):
 
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
     assert "spark.driver.memory" not in local_mode_conf("local[2]")
+
+
+TZ = "spark.sql.session.timeZone"
+WIDTH = "spark.sql.shuffle.partitions"
+
+
+def _caller(spark):
+    caller = spark.newSession()
+    caller.conf.set(TZ, "America/New_York")
+    caller.conf.set(WIDTH, "3")
+    return caller
+
+
+def test_with_conf_leaves_the_caller_unchanged(spark):
+    caller = _caller(spark)
+    before = caller.conf.getAll
+    clone = with_conf(caller, {TZ: "UTC", "spark.sql.adaptive.enabled": "false"})
+    assert caller.conf.getAll == before
+    assert clone.conf.get(TZ) == "UTC"
+    assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
+    # a runtime setting the clone does not override is inherited
+    assert clone.conf.get(WIDTH) == "3"
+
+
+def test_with_conf_frame_keeps_the_clone_zone(spark):
+    caller = _caller(spark)
+    df = with_conf(caller, {TZ: "UTC"}).range(1).select(
+        F.current_timezone().alias("tz")
+    )
+    caller.conf.set(TZ, "Asia/Tokyo")
+    assert df.collect()[0].tz == "UTC"
+    # a built frame rebinds to a clone: execution confs apply, the
+    # caller keeps its own
+    rebound = with_conf(caller.range(10), {WIDTH: "5"})
+    assert rebound.sparkSession.conf.get(WIDTH) == "5"
+    assert rebound.count() == 10
+    assert caller.conf.get(WIDTH) == "3"
+
+
+def test_drain_on_a_clone_reaches_caller_listeners(spark, tmp_path):
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from polygon_daily_market_data_pipeline_spark.plans.streaming_queries import (
+        run_available_now,
+    )
+
+    caller = _caller(spark)
+    seen: list[str] = []
+
+    class Seen(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            seen.append("started")
+
+        def onQueryProgress(self, event):
+            seen.append("progress")
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            seen.append("terminated")
+
+    caller.streams.addListener(Seen())
+    src = str(tmp_path / "src")
+    caller.range(5).write.parquet(src)
+    got = run_available_now(caller.readStream.schema("id long").parquet(src), "t_seen")
+    assert got.count() == 5
+    deadline = time.time() + 30
+    while "terminated" not in seen and time.time() < deadline:
+        time.sleep(0.1)
+    assert {"started", "progress", "terminated"} <= set(seen)
+    assert caller.conf.get(WIDTH) == "3"

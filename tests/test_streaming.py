@@ -208,8 +208,8 @@ def test_sessionize_rocksdb_state_store_parity(spark, tmp_path):
     """The RocksDB state-store provider (the 100 TB state backend:
     off-heap + SSD instead of every state row on the JVM heap) produces
     byte-identical sessions to the default in-memory provider — and the
-    session conf is restored afterwards, since the provider is
-    per-query pinned via its checkpoint."""
+    caller's session conf is untouched, since the provider is set on
+    the drain's session clone and then pinned via its checkpoint."""
     from polygon_daily_market_data_pipeline_spark.plans.streaming_queries import (
         run_available_now,
     )

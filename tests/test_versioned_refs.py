@@ -251,6 +251,32 @@ def test_publish_crash_before_retire_resumes(spark, tmp_path, monkeypatch):
     assert list_branches(t) == []
 
 
+def test_publish_crash_mid_intent_write_retries(spark, tmp_path, monkeypatch):
+    """A crash while the publish intent is being written leaves no torn
+    intent behind: the intent is published whole or not at all, so a
+    retried publish completes instead of dying on a half-written JSON."""
+    t = str(tmp_path / "vt")
+    commit_version(_df(spark, 0, 10), t)
+    b = create_branch(t, "wap")
+    commit_version(_df(spark, 10, 20), b, mode="append")
+    orig = V.json.dump
+    boom = {"armed": True}
+
+    def torn(obj, fp, *a, **kw):
+        if boom["armed"] and isinstance(obj, dict) and "target_version" in obj:
+            boom["armed"] = False
+            fp.write(V.json.dumps(obj)[:12])
+            raise OSError("simulated crash mid intent write")
+        return orig(obj, fp, *a, **kw)
+
+    monkeypatch.setattr(V.json, "dump", torn)
+    with pytest.raises(OSError, match="simulated"):
+        publish_branch(t, "wap")
+    assert publish_branch(t, "wap") == 1
+    assert read_version(spark, t).count() == 20
+    assert list_branches(t) == []
+
+
 def test_tag_pins_version_against_vacuum(spark, tmp_path):
     t = str(tmp_path / "vt")
     commit_version(_df(spark, 0, 10), t)

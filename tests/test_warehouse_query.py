@@ -239,12 +239,37 @@ def test_ord_slice_survives_storage_eviction(spark):
     assert len(got) == 4
 
 
+def test_merge_branch_leaves_no_live_clone_marker(spark, tmp_path):
+    """The merge branch shallow-clones its COW table for the MOR merge
+    and unregisters the clone once its rows are built, so the COW
+    table's vacuum is not left blocked by a live clone marker."""
+    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
+        _clone_markers,
+    )
+    from polygon_daily_market_data_pipeline_spark.plans.warehouse_ops import (
+        _merge_rows,
+    )
+    from polygon_daily_market_data_pipeline_spark.sources.tables import (
+        load_table,
+    )
+
+    ord_df = load_table(spark, SF, "orders").where(F.col("o_custkey") % 4 == 1)
+    rows = _merge_rows(spark, ord_df, str(tmp_path))
+    assert _clone_markers(str(tmp_path / "merge_vt")) == []
+    assert [r.check_name for f in rows for r in f.collect()] == [
+        "versioned_merge",
+        "versioned_merge_mor",
+        "versioned_diff",
+    ]
+
+
 def test_concurrent_unions_share_one_tz_pin(spark):
     """Two warehouse evaluations OVERLAPPING in one non-UTC session:
-    the reentrant _utc_pin must hold UTC until the last one exits (a
-    per-query pin/restore lets A's restore land mid-flight in B's
-    build, shifting B's _CUT literals — a flake class that shows only
-    under concurrency), and the session TZ must come back as the caller set it. Row values are
+    each must see UTC for its whole build (a per-query pin/restore on
+    the shared session let A's restore land mid-flight in B's build,
+    shifting B's _CUT literals — a flake class that shows only under
+    concurrency; each evaluation now runs on its own UTC clone), and
+    the session TZ must come back as the caller set it. Row values are
     asserted identical to a serial run."""
     import threading
 

@@ -112,7 +112,8 @@ def run_suite(
 ) -> "tuple[int, list[str]]":
     """One differential pass over the registered suite in driver order:
     run each Spark query, run its DuckDB oracle, compare count/columns/
-    value hash. Returns (checked, failures)."""
+    value hash. A query that leaves ``spark``'s conf changed after its
+    collect fails too. Returns (checked, failures)."""
     import __spark_entry__ as ent
 
     qs, oracles = ent.queries(), ent.oracle_sql()
@@ -122,12 +123,19 @@ def run_suite(
         if only and name not in only:
             continue
         checked += 1
+        before = spark.conf.getAll
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
+            failures.append(name)
+            continue
+        after = spark.conf.getAll
+        changed = sorted(k for k in before.keys() | after.keys() if before.get(k) != after.get(k))
+        if changed:
+            print(f"FAIL  {name}: session conf changed {changed}")
             failures.append(name)
             continue
         if name not in oracles:

@@ -138,7 +138,7 @@ def audit(sf_dir: str) -> list[dict]:
             continue
         if name.startswith("warehouse_"):
             # the registered queries return eagerly-checkpointed frames
-            # (scratch cleanup + TZ restore), whose plan is a checkpoint
+            # (scratch cleanup on a session clone), whose plan is a checkpoint
             # scan; audit the LAZY union instead — the real per-branch
             # plans (same frame the checkpoint materializes)
             import tempfile
