@@ -20,8 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polygon_daily_market_data_pipeline_spark.functions.casts import norm_key
-
-MIN_EXPECTED_TICKERS = 100  # eod_data_downloader.py:17
+from polygon_daily_market_data_pipeline_spark.sources.polygon_api import (
+    MIN_EXPECTED_TICKERS,
+)
 
 
 class DataQualityError(RuntimeError):

@@ -25,6 +25,9 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+import math
+from fractions import Fraction
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import functions as F
@@ -142,6 +145,16 @@ def _pair_counts(ex: DataFrame) -> DataFrame:
     )
 
 
+def _prefix_fraction(threshold: float) -> Fraction:
+    """The largest multiple of 10⁻⁹ at or below the float ``threshold``
+    (its exact binary value): the prefix bound's t, rounded DOWN so
+    ceil(t·n) never exceeds the float's, with numerator ≤ 10⁹ so
+    ``n·p`` cannot overflow a long. ``Fraction(str(t))`` is not enough:
+    for 0.3 it gives 3/10, above the float 0.29999999999999998…"""
+    q = 10**9
+    return Fraction(math.floor(Fraction(threshold) * q), q)
+
+
 def _prefix_jaccard_pairs(
     sh: DataFrame, threshold: float
 ) -> DataFrame:
@@ -169,16 +182,15 @@ def _prefix_jaccard_pairs(
     skew-prone stop-shingles never enter the self-join unless a doc is
     nearly all-boilerplate — the df-cap's skew protection, derived
     instead of configured. ceil(t·n) is computed in INTEGER arithmetic
-    from Fraction(threshold) so a float ulp can never shorten a prefix
-    (which would break completeness).
+    from ``_prefix_fraction(threshold)`` = p/q ≤ the float threshold, so
+    neither a float ulp nor rounding t up can shorten a prefix (which
+    would break completeness); a p/q slightly below t only lengthens one.
 
     One extra shuffle vs the exhaustive plan (the df count + the
     per-doc rank window share one exchange on doc_id), repaid
     quadratically: the self-join input halves at t=0.5 and its hottest
     keys vanish, and the verify join is candidate-bounded."""
-    from fractions import Fraction
-
-    frac = Fraction(str(threshold)).limit_denominator(10**9)
+    frac = _prefix_fraction(threshold)
     p_, q_ = frac.numerator, frac.denominator
     ex = sh.select("doc_id", F.explode("shingles").alias("s")).persist(
         StorageLevel.MEMORY_AND_DISK

@@ -120,6 +120,74 @@ def _publish_manifest(table_dir: str, version: int, manifest: dict) -> None:
         os.unlink(tmp)
 
 
+def _latest(
+    table_dir: str, expected_version: int | None = None
+) -> tuple[list[int], dict]:
+    """(versions, latest manifest) — the entry check of every operation
+    that builds on the latest version: an empty table raises
+    ``FileNotFoundError``, and a table that moved past
+    ``expected_version`` raises ``FileExistsError`` BEFORE any data is
+    read or written."""
+    versions = _manifests(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no versions in {table_dir}")
+    if expected_version is not None and versions[-1] != expected_version:
+        raise FileExistsError(
+            f"expected latest version {expected_version} but table is at "
+            f"{versions[-1]} — re-read and retry"
+        )
+    return versions, _load_manifest(table_dir, versions[-1])
+
+
+# Manifest keys after version/committed_at/mode/dirs, in write order.
+# TABLE keys describe the table, not its data layout: a new version
+# inherits them from the previous one unless its operation redefines
+# them. LAYOUT keys (files, partitions, dv, eqdel) describe the dirs
+# and are never inherited implicitly — an operation that rewrites dirs
+# states them, one that keeps the dirs keeps them all (``dirs=None``).
+_MANIFEST_KEYS = (
+    "schema", "files", "max_batch", "checks", "generated", "partitions",
+    "dv", "eqdel", "colmap", "retired_cols",
+)
+_TABLE_KEYS = (
+    "schema", "checks", "generated", "colmap", "retired_cols", "max_batch",
+)
+_LAYOUT_KEYS = ("files", "partitions", "dv", "eqdel")
+
+
+def _next_manifest(
+    prev: dict | None,
+    version: int,
+    mode: str,
+    dirs: list[str] | None,
+    **changes,
+) -> dict:
+    """The manifest of ``version``, built on ``prev`` (the latest
+    manifest, or None for a new table): the table keys carry from
+    ``prev``, ``changes`` override any key, and a key whose value is
+    None or empty is left out (``max_batch=0`` is kept). ``dirs=None``
+    keeps ``prev``'s dirs together with their layout keys — a
+    metadata-only commit. ``committed_at`` is strictly after ``prev``'s
+    (``_commit_ts``)."""
+    unknown = set(changes) - set(_MANIFEST_KEYS)
+    if unknown:
+        raise TypeError(f"unknown manifest keys {sorted(unknown)}")
+    carried = _TABLE_KEYS if dirs is not None else _TABLE_KEYS + _LAYOUT_KEYS
+    vals = {k: prev.get(k) for k in carried} if prev else {}
+    vals.update(changes)
+    manifest = {
+        "version": version,
+        "committed_at": _commit_ts(prev),
+        "mode": mode,
+        "dirs": prev["dirs"] if dirs is None else dirs,
+    }
+    for k in _MANIFEST_KEYS:
+        v = vals.get(k)
+        if v is not None and v != {} and v != []:
+            manifest[k] = v
+    return manifest
+
+
 # --- per-file column statistics (data skipping) -----------------------------
 #
 # Delta-style: the manifest records each data file's [min, max] envelope
@@ -332,6 +400,37 @@ def _collect_file_stats(
     return out
 
 
+def _write_data_dir(
+    spark: SparkSession,
+    data,
+    table_dir: str,
+    prefix: str,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    bloom_fpp: float = 0.01,
+) -> tuple[str, dict]:
+    """Write one new immutable ``_data/<prefix>-<uuid>`` directory and
+    return ``(reldir, files)``: ``data`` is a DataFrame (plain parquet
+    write, failing if the dir exists) or a callable that writes the
+    given path (``zorder_write``). ``files`` holds the footer stats of
+    ``stats_cols`` (empty when none are asked for); ``bloom_cols``
+    builds the dir's bloom sidecar. Every ``_data`` write of every
+    operation goes through here."""
+    path = os.path.join(table_dir, "_data", f"{prefix}-{uuid.uuid4().hex}")
+    if callable(data):
+        data(path)
+    else:
+        data.write.mode("errorifexists").parquet(path)
+    files = (
+        _collect_file_stats(spark, table_dir, path, stats_cols)
+        if stats_cols
+        else {}
+    )
+    if bloom_cols:
+        _collect_file_blooms(spark, path, bloom_cols, bloom_fpp)
+    return os.path.relpath(path, table_dir), files
+
+
 def _schema_sig(schema_json: dict) -> list:
     """[(name, type)] signature for append compatibility — nullability
     and field metadata are dropped (recursively): a parquet read-back
@@ -352,26 +451,32 @@ def _schema_sig(schema_json: dict) -> list:
     return [(f["name"], norm(f["type"])) for f in schema_json["fields"]]
 
 
-def _check_violation(
-    spark: SparkSession, paths: list[str], checks: dict
-) -> str | None:
-    """First violated CHECK constraint name among the rows under
-    ``paths``, or None — ONE aggregate job counts every check's
-    violations in a single pass. SQL CHECK semantics: a row violates
-    only when the predicate evaluates FALSE; NULL passes (express NOT
-    NULL as an explicit ``c IS NOT NULL`` check)."""
-    df = spark.read.parquet(*paths)
+def _enforce_checks(
+    spark: SparkSession, paths: list[str], checks: dict | None, what: str
+) -> None:
+    """Raise ``ValueError`` naming the first CHECK constraint a row
+    under ``paths`` violates — ONE aggregate job counts every check's
+    violations in a single pass. The data is already written, so a
+    violation publishes nothing and leaves it as debris for ``vacuum``.
+    SQL CHECK semantics: a row violates only when the predicate
+    evaluates FALSE; NULL passes (express NOT NULL as an explicit
+    ``c IS NOT NULL`` check)."""
+    if not checks or not paths:
+        return
     aggs = [
         F.count(
             F.when(~F.coalesce(F.expr(sql), F.lit(True)), 1)
         ).alias(f"__chk_{i}")
         for i, sql in enumerate(checks.values())
     ]
-    row = df.agg(*aggs).first()
+    row = spark.read.parquet(*paths).agg(*aggs).first()
     for i, name in enumerate(checks):
         if row[f"__chk_{i}"]:
-            return name
-    return None
+            raise ValueError(
+                f"{what} violates CHECK constraint {name!r} "
+                f"({checks[name]}) — nothing published; the written data "
+                "is debris for vacuum"
+            )
 
 
 # --- hidden (transform) partitioning ---------------------------------
@@ -621,7 +726,7 @@ def commit_version(
     the frame may ADD columns — every existing table column must still
     be present with the same type, and the manifest's schema becomes
     the widened one, so readers (which apply the manifest schema — see
-    ``_read_manifest_dirs``) see pre-evolution files with the new
+    ``_read_manifest_paths``) see pre-evolution files with the new
     columns as NULL. Dropping or retyping a column is still a
     redefinition and needs an explicit overwrite.
 
@@ -765,20 +870,16 @@ def commit_version(
     # append-retry safety: everything committed after this point is an
     # "intervening" commit the retry loop must vet — not just the latest
     base_version = existing[-1] if existing else -1
-    data_dir = os.path.join(table_dir, "_data", f"c-{uuid.uuid4().hex}")
-    df.write.mode("errorifexists").parquet(data_dir)
-    own_dir = os.path.relpath(data_dir, table_dir)
-    own_files: dict = {}
     # transform columns ride the SAME footer-stats pass: the tag's
     # [lo, hi] comes from the envelopes, no second scan of the batch
     eff_stats = list(stats_cols or [])
     for c in partition_transform or {}:
         if c not in eff_stats:
             eff_stats.append(c)
-    if eff_stats:
-        own_files = _collect_file_stats(
-            df.sparkSession, table_dir, data_dir, eff_stats
-        )
+    own_dir, own_files = _write_data_dir(
+        df.sparkSession, df, table_dir, "c", eff_stats, bloom_cols, bloom_fpp
+    )
+    data_dir = os.path.join(table_dir, own_dir)
     t_tags: dict = {}
     if partition_transform:
         for c, fn in partition_transform.items():
@@ -803,8 +904,6 @@ def commit_version(
             # else: unknowable (empty batch, all-NULL col) — the
             # commit stays untagged for this transform: unprunable,
             # never wrong
-    if bloom_cols:
-        _collect_file_blooms(df.sparkSession, data_dir, bloom_cols, bloom_fpp)
     tbl_checks = checks
     if mode == "overwrite" and generated_cols:
         tbl_checks = dict(checks or {})
@@ -812,67 +911,45 @@ def commit_version(
             tbl_checks.setdefault(f"gen_{gname}", f"{gname} <=> ({gsql})")
     if mode == "append" and prev is not None:
         tbl_checks = prev.get("checks")
-    if tbl_checks:
-        bad = _check_violation(df.sparkSession, [data_dir], tbl_checks)
-        if bad is not None:
-            raise ValueError(
-                f"commit to {table_dir} violates CHECK constraint "
-                f"{bad!r} ({tbl_checks[bad]}) — nothing published; the "
-                "written data directory is debris for vacuum"
-            )
+    _enforce_checks(
+        df.sparkSession, [data_dir], tbl_checks, f"commit to {table_dir}"
+    )
+    own_tag = {**(partition_values or {}), **t_tags}
 
     for attempt in range(retries + 1):
         version = (existing[-1] + 1) if existing else 0
-        dirs, files, max_batch = [own_dir], dict(own_files), batch_id
-        if mode == "append" and prev is not None:
-            dirs = prev["dirs"] + dirs
-            files = {**prev.get("files", {}), **files}
-            prev_mb = prev.get("max_batch")
-            if prev_mb is not None:
-                max_batch = (
-                    prev_mb if max_batch is None else max(prev_mb, max_batch)
-                )
-        manifest = {
-            "version": version,
-            "committed_at": _commit_ts(prev),
-            "mode": mode,
-            "dirs": dirs,
-            "schema": schema,
-        }
-        if files:
-            manifest["files"] = files
-        if max_batch is not None:
-            manifest["max_batch"] = max_batch
-        if tbl_checks:
-            manifest["checks"] = tbl_checks
-        if gen_map:
-            manifest["generated"] = gen_map
-        parts = {}
-        if mode == "append" and prev is not None:
-            parts.update(prev.get("partitions") or {})
-        own_tag = dict(partition_values or {})
-        own_tag.update(t_tags)
+        # an append keeps the previous version's dirs with their stats,
+        # tags, deletion vectors and equality deletes (whose scopes name
+        # the PRE-append dirs, so a re-appended deleted key is a new
+        # row), and its column mapping (carried dirs still store renamed
+        # or dropped columns under prior names); an overwrite keeps none
+        carried = prev if mode == "append" and prev is not None else {}
+        max_batch = batch_id
+        if carried.get("max_batch") is not None:
+            max_batch = (
+                carried["max_batch"]
+                if batch_id is None
+                else max(carried["max_batch"], batch_id)
+            )
+        parts = dict(carried.get("partitions") or {})
         if own_tag:
             parts[own_dir] = own_tag
-        if parts:
-            manifest["partitions"] = parts
-        if mode == "append" and prev is not None and prev.get("dv"):
-            # appended files are vector-free, but the carried dirs'
-            # deletion vectors still apply — dropping them would
-            # resurrect merge-on-read-deleted rows
-            manifest["dv"] = prev["dv"]
-        if mode == "append" and prev is not None and prev.get("eqdel"):
-            # equality-delete scopes name the PRE-append dirs, so the
-            # new commit's rows are naturally outside them (a re-append
-            # of a deleted key is a new row — the scoping contract)
-            manifest["eqdel"] = prev["eqdel"]
-        if mode == "append" and prev is not None:
-            for ck in ("colmap", "retired_cols", "generated"):
-                # carried dirs still store renamed/dropped columns
-                # under prior names; the append itself writes current
-                # logical names (its schema was validated above)
-                if prev.get(ck):
-                    manifest[ck] = prev[ck]
+        manifest = _next_manifest(
+            prev,
+            version,
+            mode,
+            carried.get("dirs", []) + [own_dir],
+            schema=schema,
+            files={**carried.get("files", {}), **own_files},
+            max_batch=max_batch,
+            checks=tbl_checks,
+            generated=gen_map,
+            partitions=parts,
+            dv=carried.get("dv"),
+            eqdel=carried.get("eqdel"),
+            colmap=carried.get("colmap"),
+            retired_cols=carried.get("retired_cols"),
+        )
         try:
             _publish_manifest(table_dir, version, manifest)
             return version
@@ -922,18 +999,13 @@ def commit_version(
                 # add_check never saw (it validates only rows VISIBLE at
                 # its commit) under a manifest that claims the constraint.
                 # Re-validate against the new set; carry it on success.
-                if new_checks:
-                    bad = _check_violation(
-                        df.sparkSession, [data_dir], new_checks
-                    )
-                    if bad is not None:
-                        raise ValueError(
-                            f"append to {table_dir} lost the race to a "
-                            f"commit that added CHECK {bad!r} "
-                            f"({new_checks[bad]}), which this batch "
-                            "violates — nothing published; the written "
-                            "data directory is debris for vacuum"
-                        )
+                _enforce_checks(
+                    df.sparkSession,
+                    [data_dir],
+                    new_checks,
+                    f"append to {table_dir} (re-checked after losing the "
+                    "race to a commit that changed its CHECKs)",
+                )
                 tbl_checks = new_checks
     raise AssertionError("unreachable")
 
@@ -1641,15 +1713,7 @@ def add_check(
     it exactly like overwrite-time ``checks``. SQL CHECK semantics:
     NULL passes. The change feed crosses an ``add_check`` commit
     silently (same visible rows)."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     checks = dict(src.get("checks") or {})
     if name in checks:
         raise ValueError(
@@ -1670,20 +1734,11 @@ def add_check(
         )
     checks[name] = sql
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "add_check",
-        "dirs": src["dirs"],
-        "checks": checks,
-    }
-    for carry in (
-        "files", "max_batch", "schema", "dv", "eqdel", "partitions",
-        "colmap", "retired_cols", "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
-    _publish_manifest(table_dir, version, manifest)
+    _publish_manifest(
+        table_dir,
+        version,
+        _next_manifest(src, version, "add_check", None, checks=checks),
+    )
     return version
 
 
@@ -1695,15 +1750,7 @@ def drop_check(
     """Remove a CHECK constraint — metadata-only; later commits stop
     enforcing it. Raises LookupError when the name is unknown (a
     silent no-op would hide a typo in an intended policy change)."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     checks = dict(src.get("checks") or {})
     if name not in checks:
         raise LookupError(
@@ -1711,21 +1758,11 @@ def drop_check(
         )
     del checks[name]
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "drop_check",
-        "dirs": src["dirs"],
-    }
-    if checks:
-        manifest["checks"] = checks
-    for carry in (
-        "files", "max_batch", "schema", "dv", "eqdel", "partitions",
-        "colmap", "retired_cols", "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
-    _publish_manifest(table_dir, version, manifest)
+    _publish_manifest(
+        table_dir,
+        version,
+        _next_manifest(src, version, "drop_check", None, checks=checks),
+    )
     return version
 
 
@@ -1756,15 +1793,7 @@ def rename_column(
     (a prior name of any rename, or a dropped column — live files may
     still store bytes under it, and by-name parquet resolution would
     resurrect them)."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     schema = src.get("schema")
     if schema is None:
         raise ValueError(
@@ -1805,22 +1834,14 @@ def rename_column(
     else:
         cmap.pop(new, None)
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "rename_column",
-        "dirs": src["dirs"],
-        "schema": new_schema,
-    }
-    if cmap:
-        manifest["colmap"] = cmap
-    for carry in (
-        "files", "max_batch", "checks", "dv", "eqdel", "partitions",
-        "retired_cols", "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
-    _publish_manifest(table_dir, version, manifest)
+    _publish_manifest(
+        table_dir,
+        version,
+        _next_manifest(
+            src, version, "rename_column", None,
+            schema=new_schema, colmap=cmap,
+        ),
+    )
     return version
 
 
@@ -1841,15 +1862,7 @@ def drop_column(
     Refused when a CHECK constraint or a live equality-delete entry
     references the column (the erasure anti-join needs it —
     ``materialize_dv`` first), or when it is the last column."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     schema = src.get("schema")
     if schema is None:
         raise ValueError(
@@ -1874,26 +1887,19 @@ def drop_column(
     retired.add(col)
     retired.update(cmap.pop(col, []))
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "drop_column",
-        "dirs": src["dirs"],
-        "schema": {
-            **schema,
-            "fields": [f for f in schema["fields"] if f["name"] != col],
-        },
-        "retired_cols": sorted(retired),
-    }
-    if cmap:
-        manifest["colmap"] = cmap
-    for carry in (
-        "files", "max_batch", "checks", "dv", "eqdel", "partitions",
-        "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
-    _publish_manifest(table_dir, version, manifest)
+    _publish_manifest(
+        table_dir,
+        version,
+        _next_manifest(
+            src, version, "drop_column", None,
+            schema={
+                **schema,
+                "fields": [f for f in schema["fields"] if f["name"] != col],
+            },
+            colmap=cmap,
+            retired_cols=sorted(retired),
+        ),
+    )
     return version
 
 
@@ -2898,34 +2904,19 @@ def rollback(table_dir: str, to_version: int) -> int:
         raise LookupError(f"version {to_version} not in {versions}")
     src = _load_manifest(table_dir, to_version)
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(_load_manifest(table_dir, versions[-1])),
-        "mode": f"rollback({to_version})",
-        "dirs": src["dirs"],
-    }
-    if "files" in src:  # visibility set is src's — so are its file stats
-        manifest["files"] = src["files"]
-    if "max_batch" in src:  # ...and its visible micro-batch watermark
-        manifest["max_batch"] = src["max_batch"]
-    if "schema" in src:
-        manifest["schema"] = src["schema"]
-    if "checks" in src:
-        manifest["checks"] = src["checks"]
-    if "dv" in src:  # ...and its row-level deletes (same visible rows)
-        manifest["dv"] = src["dv"]
-    if "eqdel" in src:
-        manifest["eqdel"] = src["eqdel"]
-    if "partitions" in src:  # same visible rows ⇒ same per-dir tags —
-        # dropping them would silently turn later drop_partitions into
-        # cannot-prove no-ops and unprune partition-scoped reads
-        manifest["partitions"] = src["partitions"]
-    for ck in ("colmap", "retired_cols", "generated"):
-        # same visible files ⇒ same storage-name mapping (rolling back
-        # ACROSS a rename restores the pre-rename logical schema too,
-        # because `schema` above is src's)
-        if src.get(ck):
-            manifest[ck] = src[ck]
+    # the visibility set is src's, and so is everything describing it:
+    # file stats, the micro-batch watermark, schema and constraints,
+    # row-level deletes, partition tags (dropping them would turn later
+    # drop_partitions into cannot-prove no-ops) and the storage-name
+    # mapping (rolling back ACROSS a rename restores the pre-rename
+    # logical schema)
+    manifest = _next_manifest(
+        _load_manifest(table_dir, versions[-1]),
+        version,
+        f"rollback({to_version})",
+        src["dirs"],
+        **{k: src.get(k) for k in _MANIFEST_KEYS},
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
@@ -2960,15 +2951,7 @@ def _mutate_version(
     manifest's visibility tracks; keep commits small (streaming
     appends) or compacted (``optimize_zorder``) and a targeted
     mutation touches little."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     stats = src.get("files", {})
     kept_paths: set[str] = set()
     if prune:
@@ -3014,11 +2997,12 @@ def _mutate_version(
             ),
             predicate,
         )
-        out_dir = os.path.join(table_dir, "_data", f"m-{uuid.uuid4().hex}")
-        survivors.write.mode("errorifexists").parquet(out_dir)
-        rel = os.path.relpath(out_dir, table_dir)
+        rel, rel_files = _write_data_dir(
+            spark, survivors, table_dir, "m", stats_cols
+        )
         new_dirs.append(rel)
-        rewritten_dirs.append(out_dir)
+        new_files.update(rel_files)
+        rewritten_dirs.append(os.path.join(table_dir, rel))
         # the rewrite of ONE dir inherits its partition tag when the
         # tag provably still holds: a DELETE only removes rows, and an
         # UPDATE keeps the tag unless it ASSIGNS a tagged column (a
@@ -3029,78 +3013,50 @@ def _mutate_version(
             assigned_cols is None or not (assigned_cols & set(tag))
         ):
             new_parts[rel] = tag
-        if stats_cols:
-            new_files.update(
-                _collect_file_stats(spark, table_dir, out_dir, stats_cols)
-            )
     # UPDATE writes NEW values — they must honor the table's CHECK
     # constraints like any commit (DELETE only drops rows: a subset of
     # already-valid rows cannot violate)
-    if mode == "update" and src.get("checks") and rewritten_dirs:
-        bad = _check_violation(spark, rewritten_dirs, src["checks"])
-        if bad is not None:
-            raise ValueError(
-                f"update on {table_dir} violates CHECK constraint "
-                f"{bad!r} ({src['checks'][bad]}) — nothing published; "
-                "the rewritten directories are debris for vacuum"
-            )
-    version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": mode,
-        "dirs": new_dirs,
-    }
-    if new_files:
-        manifest["files"] = new_files
-    if "max_batch" in src:
-        # rows changed but the ingest watermark did not: dropping it
-        # would let a crash-replayed micro-batch double-commit
-        manifest["max_batch"] = src["max_batch"]
-    if "schema" in src:
-        manifest["schema"] = src["schema"]
-    if "checks" in src:
-        manifest["checks"] = src["checks"]
-    for ck in ("colmap", "retired_cols", "generated"):
-        # carried dirs still store renamed columns under prior names
-        if src.get(ck):
-            manifest[ck] = src[ck]
+    if mode == "update":
+        _enforce_checks(
+            spark, rewritten_dirs, src.get("checks"), f"update on {table_dir}"
+        )
     kept_parts = {d: v for d, v in parts_map.items() if d in carried_dirs}
     kept_parts.update(new_parts)
-    if kept_parts:
-        manifest["partitions"] = kept_parts
-    src_dv = src.get("dv") or {}
-    if src_dv:
-        # rewritten dirs were read DV-applied (their vectors are now
-        # materialized in the rewrite); carried dirs keep theirs
-        dir_of = {
-            os.path.abspath(os.path.join(table_dir, d)): d
-            for d in src["dirs"]
-        }
-        kept_dv = {
-            k: v
-            for k, v in src_dv.items()
-            if _resolve_owner(_dv_abs(table_dir, k, v), dir_of)
-            in carried_dirs
-        }
-        if kept_dv:
-            manifest["dv"] = kept_dv
-    kept_eq = _carry_eqdel(table_dir, src, carried_dirs)
-    if kept_eq:
-        manifest["eqdel"] = kept_eq
+    # rows changed but the table keys did not — in particular the
+    # ingest watermark: dropping it would let a crash-replayed
+    # micro-batch double-commit. Rewritten dirs were read with their
+    # row-level deletes applied; carried dirs keep theirs
+    version = versions[-1] + 1
+    manifest = _next_manifest(
+        src,
+        version,
+        mode,
+        new_dirs,
+        files=new_files,
+        partitions=kept_parts,
+        dv=_carry_dv(table_dir, src, carried_dirs),
+        eqdel=_carry_eqdel(table_dir, src, carried_dirs),
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
 
-def _dv_position_scan(spark, candidates: list[str], manifest: dict):
-    """(__dv_uri, __dv_scan_pos, *logical data columns) over
-    ``candidates`` — the row-position scan every merge-on-read writer
-    starts from, with the manifest schema applied (renamed columns
-    coalesced to their current names, so caller predicates/keys in
-    logical names resolve against every file era). The position column
-    carries a reserved dunder name so a TABLE column named ``pos``
-    cannot collide with it; an actual data column named like the
-    internals is refused outright."""
+def _dv_position_scan(
+    spark: SparkSession, table_dir: str, paths: list[str], manifest: dict
+) -> DataFrame:
+    """(__dv_uri, __dv_scan_pos, *logical data columns) over the rows of
+    ``paths`` still VISIBLE under ``manifest`` — the row-position scan
+    every merge-on-read writer starts from. The manifest schema is
+    applied (renamed columns coalesced to their current names, so caller
+    predicates/keys in logical names resolve against every file era),
+    and rows a prior vector or an in-scope equality delete already
+    removed are left out: a deleted position must never re-enter a
+    vector (harmless to readers, but the manifest's per-file counts
+    would lie). ``_metadata`` only resolves on the fresh file scan, so
+    it is selected FIRST and the anti-joins run on the aliased columns.
+    The position column carries a reserved dunder name so a TABLE
+    column named ``pos`` cannot collide with it; an actual data column
+    named like the internals is refused outright."""
     schema = manifest.get("schema") or {}
     for f in schema.get("fields", []):
         if f.get("name") in ("__dv_uri", "__dv_scan_pos"):
@@ -3112,12 +3068,97 @@ def _dv_position_scan(spark, candidates: list[str], manifest: dict):
         reader = spark.read.schema(_extended_read_schema(manifest))
     else:
         reader = spark.read
-    scan = reader.parquet(*candidates).select(
+    scan = reader.parquet(*paths).select(
         F.col("_metadata.file_path").alias("__dv_uri"),
         F.col("_metadata.row_index").alias("__dv_scan_pos"),
         "*",
     )
-    return _map_to_logical(scan, manifest) if schema else scan
+    if schema:
+        scan = _map_to_logical(scan, manifest)
+    prior = _dv_pairs(spark, manifest, paths, table_dir)
+    if prior is not None:
+        scan = scan.join(
+            prior,
+            (scan["__dv_uri"] == prior["__dv_uri"])
+            & (scan["__dv_scan_pos"] == prior["__dv_pos"]),
+            "left_anti",
+        )
+    if manifest.get("eqdel"):
+        scan = _apply_eqdel(spark, scan, manifest, paths, table_dir, "__dv_uri")
+    return scan
+
+
+def _dv_key_lookup(
+    spark: SparkSession, table_dir: str, manifest: dict, files: list[str]
+) -> DataFrame:
+    """(__dv_uri, file) for ``files``: the key each file's positions are
+    recorded under. A file already vectored keeps its EXISTING key
+    (which equals the ``file`` column inside its prior vector parquet —
+    on a clone that key resolves through the entry's ``base``); new
+    files key by table-relative path."""
+    existing = {
+        _dv_abs(table_dir, k, e): k
+        for k, e in (manifest.get("dv") or {}).items()
+    }
+    uri_to_key = {}
+    for f in files:
+        a = os.path.abspath(f)
+        uri_to_key[_file_uri(a)] = existing.get(
+            a, os.path.relpath(a, table_dir)
+        )
+    return spark.createDataFrame(
+        list(uri_to_key.items()), "__dv_uri string, file string"
+    )
+
+
+def _candidate_files(
+    table_dir: str, manifest: dict, prune: dict | None
+) -> list[str]:
+    """The files a row-level write scans: those whose manifest stats
+    can match ``prune`` (``scan_version``'s predicate language), or
+    every live file without one."""
+    from polygon_daily_market_data_pipeline_spark.operators.layout import (
+        list_parquet_files,
+    )
+
+    if prune:
+        return prune_files(table_dir, manifest, prune)[0]
+    return [
+        f
+        for d in manifest["dirs"]
+        for f in list_parquet_files(os.path.join(table_dir, d))
+    ]
+
+
+def _write_vectors(
+    spark: SparkSession, table_dir: str, pairs: DataFrame
+) -> tuple[str, dict]:
+    """Write ``pairs`` (file key, pos) as one ``_dv/dv-<uuid>`` sidecar
+    and return ``(ref, {file key: positions})``; a sidecar that matched
+    nothing is removed again and its counts are empty."""
+    path = os.path.join(table_dir, "_dv", f"dv-{uuid.uuid4().hex}")
+    pairs.write.mode("errorifexists").parquet(path)
+    counts = {
+        r["file"]: r["n"]
+        for r in spark.read.parquet(path)
+        .groupBy("file")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    if not counts:
+        shutil.rmtree(path)
+    return os.path.relpath(path, table_dir), counts
+
+
+def _add_vectors(dv: dict | None, counts: dict, ref: str) -> dict:
+    """A copy of the manifest ``dv`` map with ``counts`` more positions
+    per file, recorded in the sidecar ``ref``."""
+    out = {k: dict(v) for k, v in (dv or {}).items()}
+    for fkey, n in counts.items():
+        ent = out.setdefault(fkey, {"refs": [], "n": 0})
+        ent["refs"] = ent["refs"] + [ref]
+        ent["n"] += n
+    return out
 
 
 def delete_version_where(
@@ -3266,6 +3307,38 @@ def _vet_rowlevel_race(
     return versions, latest
 
 
+def _publish_rebased(
+    table_dir: str,
+    versions: list[int],
+    src: dict,
+    op: str,
+    build,
+    own_dv_keys: "set[str] | None",
+    retries: int = 3,
+    allow_eqdel: bool = True,
+) -> int:
+    """Publish ``_next_manifest(cur, v, op, **build(cur))`` as the next
+    version with commit reconciliation: a lost race against commits
+    ``_vet_rowlevel_race`` proves disjoint from this row-level op
+    REBASES onto the winner (``build`` runs again on the new latest
+    manifest) instead of surfacing ``FileExistsError``; anything that
+    restructured directories still refuses."""
+    cur_versions, cur = versions, src
+    for attempt in range(retries + 1):
+        version = cur_versions[-1] + 1
+        try:
+            manifest = _next_manifest(cur, version, op, **build(cur))
+            _publish_manifest(table_dir, version, manifest)
+            return version
+        except FileExistsError:
+            if attempt == retries:
+                raise
+            cur_versions, cur = _vet_rowlevel_race(
+                table_dir, versions[-1], src, own_dv_keys, op, allow_eqdel
+            )
+    raise AssertionError("unreachable")
+
+
 def delete_version_vectors(
     spark: SparkSession,
     table_dir: str,
@@ -3304,125 +3377,34 @@ def delete_version_vectors(
     ``delete_dv`` — a row-level REDEFINITION: ``read_changes`` and the
     ``versioned_changes`` stream refuse to cross it, exactly as for
     copy-on-write delete."""
-    from polygon_daily_market_data_pipeline_spark.operators.layout import (
-        list_parquet_files,
-    )
-
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
-    if prune:
-        candidates, _total = prune_files(table_dir, src, prune)
-    else:
-        candidates = [
-            f
-            for d in src["dirs"]
-            for f in list_parquet_files(os.path.join(table_dir, d))
-        ]
+    versions, src = _latest(table_dir, expected_version)
+    candidates = _candidate_files(table_dir, src, prune)
     if not candidates:
         return versions[-1]
-    # a file already vectored keeps its EXISTING key (which equals the
-    # `file` column inside its prior vector parquet — on a clone that
-    # key resolves through the entry's `base`); new files key by
-    # table-relative path
-    src_dv = src.get("dv") or {}
-    existing_abs = {_dv_abs(table_dir, k, e): k for k, e in src_dv.items()}
-    uri_to_key = {}
-    for f in candidates:
-        a = os.path.abspath(f)
-        uri_to_key[_file_uri(a)] = existing_abs.get(
-            a, os.path.relpath(a, table_dir)
-        )
-    
-    # match on the CURRENT visible rows (existing DVs applied) so
-    # already-deleted positions never re-enter a vector; _metadata is
-    # only resolvable on the fresh file scan, so it is selected FIRST
-    # and the existing-DV anti-join runs on the aliased columns
-    scan = _dv_position_scan(spark, candidates, src)
-    prior = _dv_pairs(spark, src, candidates, table_dir)
-    if prior is not None:
-        scan = scan.join(
-            prior,
-            (scan["__dv_uri"] == prior["__dv_uri"])
-            & (scan["__dv_scan_pos"] == prior["__dv_pos"]),
-            "left_anti",
-        )
-    if src.get("eqdel"):
-        # equality-deleted rows are invisible too: their positions must
-        # not enter the vector (harmless to readers, but the manifest's
-        # per-file counts would lie)
-        scan = _apply_eqdel(
-            spark, scan, src, candidates, table_dir, "__dv_uri"
-        )
-    key_lookup = spark.createDataFrame(
-        list(uri_to_key.items()), "__dv_uri string, file string"
-    )
+    # match on the CURRENT visible rows, so re-deleting is a no-op
     matches = (
-        scan.where(predicate)
-        .join(F.broadcast(key_lookup), "__dv_uri")
+        _dv_position_scan(spark, table_dir, candidates, src)
+        .where(predicate)
+        .join(
+            F.broadcast(_dv_key_lookup(spark, table_dir, src, candidates)),
+            "__dv_uri",
+        )
         .select("file", F.col("__dv_scan_pos").alias("pos"))
     )
-    dv_dir = os.path.join(table_dir, "_dv", f"dv-{uuid.uuid4().hex}")
-    matches.write.mode("errorifexists").parquet(dv_dir)
-    dv_rel = os.path.relpath(dv_dir, table_dir)
-    counts = {
-        r["file"]: r["n"]
-        for r in spark.read.parquet(dv_dir)
-        .groupBy("file")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    dv_rel, counts = _write_vectors(spark, table_dir, matches)
     if not counts:  # nothing matched: no redefinition to publish
-        shutil.rmtree(dv_dir)
         return versions[-1]
-    # Optimistic publish with commit reconciliation: a lost race against
-    # a provably-disjoint row-level commit (append / delete_eq /
-    # file-disjoint delete_dv — see _vet_rowlevel_race) REBASES onto the
-    # winner instead of surfacing FileExistsError; anything that
-    # restructured directories still refuses.
-    base_version, base_manifest = versions[-1], src
-    cur = src
-    cur_versions = versions
-    for attempt in range(retries + 1):
-        dv = {k: dict(v) for k, v in (cur.get("dv") or {}).items()}
-        for fkey, n in counts.items():
-            ent = dv.setdefault(fkey, {"refs": [], "n": 0})
-            ent["refs"] = ent["refs"] + [dv_rel]
-            ent["n"] += n
-        version = cur_versions[-1] + 1
-        manifest = {
-            "version": version,
-            "committed_at": _commit_ts(cur),
-            "mode": "delete_dv",
-            "dirs": cur["dirs"],
-            "dv": dv,
-        }
-        for carry in (
-            "files", "max_batch", "schema", "checks", "eqdel", "partitions",
-            "colmap", "retired_cols", "generated",
-        ):
-            if carry in cur:
-                manifest[carry] = cur[carry]
-        try:
-            _publish_manifest(table_dir, version, manifest)
-            return version
-        except FileExistsError:
-            if attempt == retries:
-                raise
-            cur_versions, cur = _vet_rowlevel_race(
-                table_dir,
-                base_version,
-                base_manifest,
-                set(counts),
-                "delete_dv",
-            )
-    raise AssertionError("unreachable")
+    return _publish_rebased(
+        table_dir,
+        versions,
+        src,
+        "delete_dv",
+        lambda cur: dict(
+            dirs=None, dv=_add_vectors(cur.get("dv"), counts, dv_rel)
+        ),
+        set(counts),
+        retries,
+    )
 
 
 def delete_version_keys(
@@ -3454,15 +3436,7 @@ def delete_version_keys(
     ``delete_eq`` — a row-level REDEFINITION: the change feed and the
     ``versioned_changes`` stream refuse to cross it. An empty key frame
     publishes NOTHING and returns the current version."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     cols = list(cols) if cols is not None else list(keys.columns)
     missing = [c for c in cols if c not in keys.columns]
     if missing:
@@ -3498,35 +3472,50 @@ def delete_version_keys(
         "cols": cols,
         "dirs": list(src["dirs"]),
     }
-    base_version, base_manifest = versions[-1], src
-    cur = src
-    cur_versions = versions
-    retries = 3
-    for attempt in range(retries + 1):
-        version = cur_versions[-1] + 1
-        manifest = {
-            "version": version,
-            "committed_at": _commit_ts(cur),
-            "mode": "delete_eq",
-            "dirs": cur["dirs"],
-            "eqdel": list(cur.get("eqdel") or []) + [entry],
-        }
-        for carry in (
-            "files", "max_batch", "schema", "checks", "dv", "partitions",
-            "colmap", "retired_cols", "generated",
-        ):
-            if carry in cur:
-                manifest[carry] = cur[carry]
-        try:
-            _publish_manifest(table_dir, version, manifest)
-            return version
-        except FileExistsError:
-            if attempt == retries:
-                raise
-            cur_versions, cur = _vet_rowlevel_race(
-                table_dir, base_version, base_manifest, None, "delete_eq"
-            )
-    raise AssertionError("unreachable")
+    return _publish_rebased(
+        table_dir,
+        versions,
+        src,
+        "delete_eq",
+        lambda cur: dict(
+            dirs=None, eqdel=list(cur.get("eqdel") or []) + [entry]
+        ),
+        None,
+    )
+
+
+def _row_delete_dirs(table_dir: str, src: dict) -> set[str]:
+    """The dirs of ``src`` that own a deletion-vectored file or lie in
+    an equality-delete scope."""
+    dir_of = {
+        os.path.abspath(os.path.join(table_dir, d)): d for d in src["dirs"]
+    }
+    owners = {
+        _resolve_owner(_dv_abs(table_dir, k, ent), dir_of)
+        for k, ent in (src.get("dv") or {}).items()
+    }
+    for entry in src.get("eqdel") or []:
+        base = entry.get("base", table_dir)
+        owners.update(
+            dir_of.get(os.path.abspath(os.path.join(base, d)))
+            for d in entry["dirs"]
+        )
+    owners.discard(None)
+    return owners
+
+
+def _carry_dv(table_dir: str, src: dict, carried_dirs: set[str]) -> dict:
+    """Deletion-vector entries surviving a rewrite: those of files in
+    the dirs carried BY REFERENCE (rewritten dirs were read with their
+    vectors applied — their replacement is clean)."""
+    dir_of = {
+        os.path.abspath(os.path.join(table_dir, d)): d for d in src["dirs"]
+    }
+    return {
+        k: ent
+        for k, ent in (src.get("dv") or {}).items()
+        if _resolve_owner(_dv_abs(table_dir, k, ent), dir_of) in carried_dirs
+    }
 
 
 def _carry_eqdel(
@@ -3574,68 +3563,28 @@ def update_version_vectors(
     and change-feed refusal (mode ``update_dv`` is a row-level
     redefinition). A predicate matching nothing publishes NOTHING and
     returns the current version."""
-    from polygon_daily_market_data_pipeline_spark.operators.layout import (
-        list_parquet_files,
-    )
-
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
-    if prune:
-        candidates, _total = prune_files(table_dir, src, prune)
-    else:
-        candidates = [
-            f
-            for d in src["dirs"]
-            for f in list_parquet_files(os.path.join(table_dir, d))
-        ]
+    versions, src = _latest(table_dir, expected_version)
+    candidates = _candidate_files(table_dir, src, prune)
     if not candidates:
         return versions[-1]
-    src_dv = src.get("dv") or {}
-    existing_abs = {_dv_abs(table_dir, k, e): k for k, e in src_dv.items()}
-    uri_to_key = {}
-    for f in candidates:
-        a = os.path.abspath(f)
-        uri_to_key[_file_uri(a)] = existing_abs.get(
-            a, os.path.relpath(a, table_dir)
-        )
-    scan = _dv_position_scan(spark, candidates, src)
-    prior = _dv_pairs(spark, src, candidates, table_dir)
-    if prior is not None:
-        scan = scan.join(
-            prior,
-            (scan["__dv_uri"] == prior["__dv_uri"])
-            & (scan["__dv_scan_pos"] == prior["__dv_pos"]),
-            "left_anti",
-        )
-    if src.get("eqdel"):
-        scan = _apply_eqdel(spark, scan, src, candidates, table_dir, "__dv_uri")
-    matched = scan.where(predicate).persist()
+    matched = (
+        _dv_position_scan(spark, table_dir, candidates, src)
+        .where(predicate)
+        .persist()
+    )
     try:
-        key_lookup = spark.createDataFrame(
-            list(uri_to_key.items()), "__dv_uri string, file string"
+        pairs = (
+            matched.select("__dv_uri", "__dv_scan_pos")
+            .join(
+                F.broadcast(
+                    _dv_key_lookup(spark, table_dir, src, candidates)
+                ),
+                "__dv_uri",
+            )
+            .select("file", F.col("__dv_scan_pos").alias("pos"))
         )
-        pairs = matched.select("__dv_uri", "__dv_scan_pos").join(
-            F.broadcast(key_lookup), "__dv_uri"
-        ).select("file", F.col("__dv_scan_pos").alias("pos"))
-        dv_dir = os.path.join(table_dir, "_dv", f"dv-{uuid.uuid4().hex}")
-        pairs.write.mode("errorifexists").parquet(dv_dir)
-        dv_rel = os.path.relpath(dv_dir, table_dir)
-        counts = {
-            r["file"]: r["n"]
-            for r in spark.read.parquet(dv_dir)
-            .groupBy("file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        dv_rel, counts = _write_vectors(spark, table_dir, pairs)
         if not counts:  # nothing matched: no redefinition to publish
-            shutil.rmtree(dv_dir)
             return versions[-1]
         data_cols = [
             c
@@ -3653,71 +3602,35 @@ def update_version_vectors(
                 for c in data_cols
             ]
         )
-        ins_dir = os.path.join(table_dir, "_data", f"u-{uuid.uuid4().hex}")
-        updated.write.mode("errorifexists").parquet(ins_dir)
-        if src.get("checks"):
-            bad = _check_violation(spark, [ins_dir], src["checks"])
-            if bad is not None:
-                raise ValueError(
-                    f"update on {table_dir} violates CHECK constraint "
-                    f"{bad!r} ({src['checks'][bad]}) — nothing published; "
-                    "written directories are debris for vacuum"
-                )
+        ins_rel, ins_stats = _write_data_dir(
+            spark, updated, table_dir, "u", stats_cols
+        )
+        _enforce_checks(
+            spark,
+            [os.path.join(table_dir, ins_rel)],
+            src.get("checks"),
+            f"update on {table_dir}",
+        )
     finally:
         matched.unpersist()
-    ins_stats = (
-        _collect_file_stats(spark, table_dir, ins_dir, stats_cols)
-        if stats_cols
-        else {}
+    # allow_eqdel=False: rebasing an update past a racing equality
+    # delete would resurrect the erased keys as fresh images, so only
+    # append / file-disjoint delete_dv interveners are mergeable
+    return _publish_rebased(
+        table_dir,
+        versions,
+        src,
+        "update_dv",
+        lambda cur: dict(
+            dirs=cur["dirs"] + [ins_rel],
+            files={**cur.get("files", {}), **ins_stats},
+            partitions=cur.get("partitions"),
+            dv=_add_vectors(cur.get("dv"), counts, dv_rel),
+            eqdel=cur.get("eqdel"),
+        ),
+        set(counts),
+        allow_eqdel=False,
     )
-    # Optimistic publish with commit reconciliation (same posture as
-    # delete_version_vectors), but with allow_eqdel=False: rebasing an
-    # update past a racing equality delete would resurrect the erased
-    # keys as fresh images, so only append / file-disjoint delete_dv
-    # interveners are mergeable for updates.
-    base_version, base_manifest = versions[-1], src
-    cur = src
-    cur_versions = versions
-    retries = 3
-    for attempt in range(retries + 1):
-        dv = {k: dict(v) for k, v in (cur.get("dv") or {}).items()}
-        for fkey, n in counts.items():
-            ent = dv.setdefault(fkey, {"refs": [], "n": 0})
-            ent["refs"] = ent["refs"] + [dv_rel]
-            ent["n"] += n
-        new_files = dict(cur.get("files", {}))
-        new_files.update(ins_stats)
-        version = cur_versions[-1] + 1
-        manifest = {
-            "version": version,
-            "committed_at": _commit_ts(cur),
-            "mode": "update_dv",
-            "dirs": cur["dirs"] + [os.path.relpath(ins_dir, table_dir)],
-            "dv": dv,
-        }
-        if new_files:
-            manifest["files"] = new_files
-        for carry in (
-            "max_batch", "schema", "checks", "eqdel", "partitions",
-            "colmap", "retired_cols", "generated",
-        ):
-            if carry in cur:
-                manifest[carry] = cur[carry]
-        try:
-            _publish_manifest(table_dir, version, manifest)
-            return version
-        except FileExistsError:
-            if attempt == retries:
-                raise
-            cur_versions, cur = _vet_rowlevel_race(
-                table_dir,
-                base_version,
-                base_manifest,
-                set(counts),
-                "update_dv",
-                allow_eqdel=False,
-            )
-    raise AssertionError("unreachable")
 
 
 def materialize_dv(
@@ -3737,36 +3650,13 @@ def materialize_dv(
     The commit mode is ``materialize_dv``, a same-rows relayout like
     ``optimize_zorder``: the change feed crosses it without re-emitting
     anything."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
-    dv = src.get("dv") or {}
-    eqdel = src.get("eqdel") or []
-    if not dv and not eqdel:
+    versions, src = _latest(table_dir, expected_version)
+    if not src.get("dv") and not src.get("eqdel"):
         return versions[-1]
-    dir_of = {
-        os.path.abspath(os.path.join(table_dir, d)): d for d in src["dirs"]
-    }
-    touched = set()
-    for k, ent in dv.items():
-        owner = _resolve_owner(_dv_abs(table_dir, k, ent), dir_of)
-        if owner is not None:
-            touched.add(owner)
     # equality-delete scopes compact here too: every in-scope dir is
     # rewritten with the key anti-join applied, so the new version
     # carries NO row-level delete metadata of either kind
-    for entry in eqdel:
-        base = entry.get("base", table_dir)
-        for d in entry["dirs"]:
-            owner = dir_of.get(os.path.abspath(os.path.join(base, d)))
-            if owner is not None:
-                touched.add(owner)
+    touched = _row_delete_dirs(table_dir, src)
     from polygon_daily_market_data_pipeline_spark.operators.layout import (
         list_parquet_files,
     )
@@ -3793,35 +3683,25 @@ def materialize_dv(
         clean = _read_manifest_paths(
             spark, src, [os.path.join(table_dir, d)], table_dir
         )
-        out_dir = os.path.join(table_dir, "_data", f"m-{uuid.uuid4().hex}")
-        clean.write.mode("errorifexists").parquet(out_dir)
-        rel_dir = os.path.relpath(out_dir, table_dir)
+        rel_dir, rel_files = _write_data_dir(
+            spark, clean, table_dir, "m", stats_cols
+        )
         new_dirs.append(rel_dir)
+        new_files.update(rel_files)
         if d in parts_map:
             # the clean rewrite only REMOVES rows from this one dir —
             # its partition claim still holds
             new_parts[rel_dir] = parts_map[d]
-        if stats_cols:
-            new_files.update(
-                _collect_file_stats(spark, table_dir, out_dir, stats_cols)
-            )
+    # no dv / eqdel: every vectored or in-scope dir was rewritten clean
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "materialize_dv",
-        "dirs": new_dirs,
-    }
-    if new_files:
-        manifest["files"] = new_files
-    if new_parts:
-        manifest["partitions"] = new_parts
-    for carry in (
-        "max_batch", "schema", "checks", "colmap", "retired_cols",
-        "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
+    manifest = _next_manifest(
+        src,
+        version,
+        "materialize_dv",
+        new_dirs,
+        files=new_files,
+        partitions=new_parts,
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
@@ -4047,15 +3927,7 @@ def merge_version(
     missing = [k for k in keys if k not in source.columns]
     if missing:
         raise ValueError(f"source is missing key columns {missing}")
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src_manifest = _load_manifest(table_dir, versions[-1])
+    versions, src_manifest = _latest(table_dir, expected_version)
     tbl_schema = src_manifest.get("schema")
     if when_matched == "update" and tbl_schema is not None:
         src_sig = _schema_sig(source.schema.jsonValue())
@@ -4119,7 +3991,6 @@ def merge_version(
         keys_df = source.select(*keys).alias("__mrg_src")
         new_dirs: list[str] = []
         new_files: dict = {}
-        mor_dv: dict = {}
         mrg_parts = {
             d: v
             for d, v in (src_manifest.get("partitions") or {}).items()
@@ -4133,10 +4004,7 @@ def merge_version(
             # an already-deleted row never re-enters a vector)
             new_dirs = list(src_manifest["dirs"])
             new_files = dict(stats)
-            mor_dv = {
-                k2: dict(v2)
-                for k2, v2 in (src_manifest.get("dv") or {}).items()
-            }
+            mor_dv = src_manifest.get("dv")
             touched_paths = [
                 os.path.join(table_dir, d) for d in sorted(touched)
             ]
@@ -4147,69 +4015,45 @@ def merge_version(
                             f"merge key {k!r} collides with a reserved "
                             "internal column name"
                         )
-                # manifest-schema position scan (renamed key columns
-                # coalesced to current names), pruned to the keys
-                scan = _dv_position_scan(
-                    spark, touched_paths, src_manifest
-                ).select("__dv_uri", "__dv_scan_pos", *keys)
-                prior = _dv_pairs(
-                    spark, src_manifest, touched_paths, table_dir
+                # visible rows of the touched dirs (renamed key columns
+                # coalesced to current names), pruned to the keys AFTER
+                # the row-level deletes, whose columns need not be keys
+                t_al = (
+                    _dv_position_scan(
+                        spark, table_dir, touched_paths, src_manifest
+                    )
+                    .select("__dv_uri", "__dv_scan_pos", *keys)
+                    .alias("__mor_tgt")
                 )
-                if prior is not None:
-                    scan = scan.join(
-                        prior,
-                        (scan["__dv_uri"] == prior["__dv_uri"])
-                        & (scan["__dv_scan_pos"] == prior["__dv_pos"]),
-                        "left_anti",
-                    )
-                if src_manifest.get("eqdel"):
-                    scan = _apply_eqdel(
-                        spark, scan, src_manifest, touched_paths,
-                        table_dir, "__dv_uri",
-                    )
                 cond = F.lit(True)
-                t_al = scan.alias("__mor_tgt")
                 for k in keys:
                     cond = cond & F.col(f"__mor_tgt.{k}").eqNullSafe(
                         F.col(f"__mrg_src.{k}")
                     )
-                existing_abs = {
-                    _dv_abs(table_dir, k2, e): k2
-                    for k2, e in mor_dv.items()
-                }
-                uri_to_key = {}
-                for d in touched:
-                    for f in list_parquet_files(os.path.join(table_dir, d)):
-                        a = os.path.abspath(f)
-                        uri_to_key[_file_uri(a)] = existing_abs.get(
-                            a, os.path.relpath(a, table_dir)
-                        )
-                key_lookup = spark.createDataFrame(
-                    list(uri_to_key.items()), "__dv_uri string, file string"
+                key_lookup = _dv_key_lookup(
+                    spark,
+                    table_dir,
+                    src_manifest,
+                    [
+                        f
+                        for d in touched
+                        for f in list_parquet_files(os.path.join(table_dir, d))
+                    ],
                 )
                 matched = (
                     t_al.join(F.broadcast(keys_df), cond, "left_semi")
                     .join(F.broadcast(key_lookup), "__dv_uri")
                     .select("file", F.col("__dv_scan_pos").alias("pos"))
                 )
-                dv_dir = os.path.join(
-                    table_dir, "_dv", f"dv-{uuid.uuid4().hex}"
-                )
-                matched.write.mode("errorifexists").parquet(dv_dir)
-                dv_rel = os.path.relpath(dv_dir, table_dir)
-                counts = {
-                    r["file"]: r["n"]
-                    for r in spark.read.parquet(dv_dir)
-                    .groupBy("file")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                if not counts:
-                    shutil.rmtree(dv_dir)
-                for fkey, n_del in counts.items():
-                    ent = mor_dv.setdefault(fkey, {"refs": [], "n": 0})
-                    ent["refs"] = ent["refs"] + [dv_rel]
-                    ent["n"] += n_del
+                dv_rel, counts = _write_vectors(spark, table_dir, matched)
+                mor_dv = _add_vectors(mor_dv, counts, dv_rel)
+            # nothing was rewritten: prior vectors (extended with the
+            # matched tombstones), equality deletes and tags carry
+            layout = dict(
+                partitions=mrg_parts,
+                dv=mor_dv,
+                eqdel=src_manifest.get("eqdel"),
+            )
         else:
             for d in src_manifest["dirs"]:
                 if d not in touched:
@@ -4231,106 +4075,47 @@ def merge_version(
                         F.col(f"__mrg_src.{k}")
                     )
                 survivors = tgt.join(keys_df, cond, "left_anti")
-                out_dir = os.path.join(
-                    table_dir, "_data", f"m-{uuid.uuid4().hex}"
+                rel_dir, rel_files = _write_data_dir(
+                    spark, survivors, table_dir, "m", stats_cols
                 )
-                survivors.write.mode("errorifexists").parquet(out_dir)
-                rel_dir = os.path.relpath(out_dir, table_dir)
                 new_dirs.append(rel_dir)
+                new_files.update(rel_files)
                 if d in mrg_parts:
                     # the anti-join only REMOVES rows from this one
                     # dir — its partition claim still holds
                     mrg_new_parts[rel_dir] = mrg_parts[d]
-                if stats_cols:
-                    new_files.update(
-                        _collect_file_stats(
-                            spark, table_dir, out_dir, stats_cols
-                        )
-                    )
+            # carried dirs keep their tags, vectors and equality
+            # deletes; anti-joined rewrites were read deletes-applied
+            carried = set(src_manifest["dirs"]) - touched
+            layout = dict(
+                partitions=mrg_new_parts,
+                dv=_carry_dv(table_dir, src_manifest, carried),
+                eqdel=_carry_eqdel(table_dir, src_manifest, carried),
+            )
         if when_matched == "update":
-            ins_dir = os.path.join(table_dir, "_data", f"m-{uuid.uuid4().hex}")
-            source.write.mode("errorifexists").parquet(ins_dir)
-            new_dirs.append(os.path.relpath(ins_dir, table_dir))
-            if stats_cols:
-                new_files.update(
-                    _collect_file_stats(spark, table_dir, ins_dir, stats_cols)
-                )
+            # the insert dir is untagged
+            ins_rel, ins_files = _write_data_dir(
+                spark, source, table_dir, "m", stats_cols
+            )
+            new_dirs.append(ins_rel)
+            new_files.update(ins_files)
             # merged-in rows are new values: enforce the table's CHECK
             # constraints (anti-join survivors are a subset of
             # already-valid rows and cannot violate)
-            if src_manifest.get("checks"):
-                bad = _check_violation(
-                    spark, [ins_dir], src_manifest["checks"]
-                )
-                if bad is not None:
-                    raise ValueError(
-                        f"merge into {table_dir} violates CHECK constraint "
-                        f"{bad!r} ({src_manifest['checks'][bad]}) — nothing "
-                        "published; written directories are debris for vacuum"
-                    )
+            _enforce_checks(
+                spark,
+                [os.path.join(table_dir, ins_rel)],
+                src_manifest.get("checks"),
+                f"merge into {table_dir}",
+            )
     finally:
         source.unpersist()
+    # rows changed but the table keys did not (the ingest watermark
+    # included — see _mutate_version)
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src_manifest),
-        "mode": "merge",
-        "dirs": new_dirs,
-    }
-    if new_files:
-        manifest["files"] = new_files
-    if "max_batch" in src_manifest:
-        # rows changed but the ingest watermark did not (same rationale
-        # as _mutate_version): dropping it would let a crash-replayed
-        # micro-batch double-commit
-        manifest["max_batch"] = src_manifest["max_batch"]
-    if tbl_schema is not None:
-        manifest["schema"] = tbl_schema
-    if "checks" in src_manifest:
-        manifest["checks"] = src_manifest["checks"]
-    for ck in ("colmap", "retired_cols", "generated"):
-        # carried/untouched dirs still store renamed columns under
-        # their prior names
-        if src_manifest.get(ck):
-            manifest[ck] = src_manifest[ck]
-    if strategy == "merge_on_read":
-        if mrg_parts:
-            manifest["partitions"] = mrg_parts
-    elif mrg_new_parts:
-        # carried dirs keep their tags; per-dir anti-join rewrites
-        # inherit (rows only removed); the insert dir is untagged
-        manifest["partitions"] = mrg_new_parts
-    if strategy == "merge_on_read":
-        # nothing was rewritten: prior vectors (extended with the
-        # matched tombstones) and equality deletes carry verbatim
-        if mor_dv:
-            manifest["dv"] = mor_dv
-        if src_manifest.get("eqdel"):
-            manifest["eqdel"] = src_manifest["eqdel"]
-    else:
-        src_dv = src_manifest.get("dv") or {}
-        if src_dv:
-            # same posture as _mutate_version: rewritten (anti-joined)
-            # dirs materialized their vectors; carried dirs keep theirs
-            dir_of = {
-                os.path.abspath(os.path.join(table_dir, d)): d
-                for d in src_manifest["dirs"]
-            }
-            kept_dv = {
-                k: v
-                for k, v in src_dv.items()
-                if _resolve_owner(_dv_abs(table_dir, k, v), dir_of)
-                not in touched
-            }
-            if kept_dv:
-                manifest["dv"] = kept_dv
-        kept_eq = _carry_eqdel(
-            table_dir,
-            src_manifest,
-            {d for d in src_manifest["dirs"] if d not in touched},
-        )
-        if kept_eq:
-            manifest["eqdel"] = kept_eq
+    manifest = _next_manifest(
+        src_manifest, version, "merge", new_dirs, files=new_files, **layout
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
@@ -4403,35 +4188,26 @@ def clone_table(src_dir: str, dst_dir: str, at_version: int | None = None) -> in
         for entry in (src.get("eqdel") or [])
     ]
     os.makedirs(_versions_dir(dst_dir), exist_ok=True)
-    manifest = {
-        "version": 0,
-        "committed_at": _commit_ts(None),
-        "mode": f"clone({os.path.abspath(src_dir)}@{at_version})",
-        "dirs": abs_dirs,
-    }
-    if files:
-        manifest["files"] = files
-    if dv:
-        manifest["dv"] = dv
-    if eqdel:
-        manifest["eqdel"] = eqdel
-    if "schema" in src:
-        manifest["schema"] = src["schema"]
-    if "checks" in src:
-        manifest["checks"] = src["checks"]
-    if src.get("partitions"):
-        # per-dir partition tags ride along, re-keyed to the clone's
-        # frame (the cloned dirs are recorded absolute) — same rows,
-        # same tags; dropping them would silently disable partition
-        # pruning and drop_partitions on the clone
-        manifest["partitions"] = {
+    # per-dir partition tags ride along, re-keyed to the clone's frame
+    # (the cloned dirs are recorded absolute) — dropping them would
+    # disable partition pruning and drop_partitions on the clone. The
+    # table keys carry (shared files store renamed columns under prior
+    # names) except max_batch: the clone is a new table for its own
+    # writers, and a stream replaying into it must start fresh
+    manifest = _next_manifest(
+        None,
+        0,
+        f"clone({os.path.abspath(src_dir)}@{at_version})",
+        abs_dirs,
+        **{k: src.get(k) for k in _TABLE_KEYS if k != "max_batch"},
+        files=files,
+        dv=dv,
+        eqdel=eqdel,
+        partitions={
             os.path.abspath(os.path.join(src_dir, d)): tag
-            for d, tag in src["partitions"].items()
-        }
-    for ck in ("colmap", "retired_cols", "generated"):
-        # shared files store renamed columns under prior names
-        if src.get(ck):
-            manifest[ck] = src[ck]
+            for d, tag in (src.get("partitions") or {}).items()
+        },
+    )
     # register with the source's vacuum guard BEFORE the clone becomes
     # readable: a crash in between leaves a stale guard (recoverable
     # with drop_clone), never a readable clone an unguarded source
@@ -4445,8 +4221,6 @@ def clone_table(src_dir: str, dst_dir: str, at_version: int | None = None) -> in
     }
     with open(os.path.join(cdir, f"{uuid.uuid4().hex}.json"), "w") as f:
         json.dump(marker, f)
-    # deliberately NOT carried: max_batch — the clone is a new table for
-    # its own writers; a stream replaying into it must start fresh
     _publish_manifest(dst_dir, 0, manifest)
     return 0
 
@@ -4488,52 +4262,37 @@ def optimize_zorder(
         zorder_write,
     )
 
-    versions = _manifests(table_dir)
-    if expected_version is not None and (
-        not versions or versions[-1] != expected_version
-    ):
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1] if versions else 'empty'} — re-read and retry"
-        )
-    df = read_version(spark, table_dir)
+    versions, src = _latest(table_dir, expected_version)
     version = versions[-1] + 1
-    data_dir = os.path.join(table_dir, "_data", f"v{version}-{uuid.uuid4().hex}")
-    zorder_write(
-        df, data_dir, zcols, n_files, bits=bits or DEFAULT_BITS, bucketize=bucketize
-    )
-    src = _load_manifest(table_dir, versions[-1])
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": f"optimize_zorder({','.join(zcols)})",
-        "dirs": [os.path.relpath(data_dir, table_dir)],
-    }
-    if "max_batch" in src:
-        # same rows, new layout: the visible micro-batch watermark is
-        # unchanged — dropping it would reset versioned_stream_sink's
-        # replay dedup and let a crash-replayed batch double-commit
-        # right after a compaction
-        manifest["max_batch"] = src["max_batch"]
-    if "schema" in src:
-        manifest["schema"] = src["schema"]
-    if "checks" in src:
-        # same rows, new layout: the constraint set rides along
-        manifest["checks"] = src["checks"]
-    if "generated" in src:
-        # generation is table metadata like checks; the full relayout
-        # clears COLMAP (files migrated) but generation must survive
-        manifest["generated"] = src["generated"]
+    df = read_version(spark, table_dir, version=versions[-1])
     # stats_cols defaults to the z-columns: the rewrite exists to give
     # every file a tight envelope on them, so index exactly those for
     # scan_version's manifest prune
-    idx_cols = zcols if stats_cols is None else stats_cols
-    if idx_cols:
-        files = _collect_file_stats(spark, table_dir, data_dir, idx_cols)
-        if files:
-            manifest["files"] = files
-    if bloom_cols:
-        _collect_file_blooms(spark, data_dir, bloom_cols, bloom_fpp)
+    rel, files = _write_data_dir(
+        spark,
+        lambda path: zorder_write(
+            df, path, zcols, n_files, bits=bits or DEFAULT_BITS,
+            bucketize=bucketize,
+        ),
+        table_dir,
+        f"v{version}",
+        zcols if stats_cols is None else stats_cols,
+        bloom_cols,
+        bloom_fpp,
+    )
+    # same rows, new layout: the table keys ride along (the micro-batch
+    # watermark included — dropping it would let a crash-replayed batch
+    # double-commit right after a compaction), except the column
+    # mapping: every file now stores current names
+    manifest = _next_manifest(
+        src,
+        version,
+        f"optimize_zorder({','.join(zcols)})",
+        [rel],
+        files=files,
+        colmap=None,
+        retired_cols=None,
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
@@ -4589,32 +4348,7 @@ def optimize_compact(
         list_parquet_files,
     )
 
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
-    dv = src.get("dv") or {}
-    eqdel = src.get("eqdel") or []
-    dir_of = {
-        os.path.abspath(os.path.join(table_dir, d)): d for d in src["dirs"]
-    }
-    dv_owned: set[str] = set()
-    for k, ent in dv.items():
-        owner = _resolve_owner(_dv_abs(table_dir, k, ent), dir_of)
-        if owner is not None:
-            dv_owned.add(owner)
-    eq_scoped: set[str] = set()
-    for entry in eqdel:
-        base = entry.get("base", table_dir)
-        for d in entry["dirs"]:
-            owner = dir_of.get(os.path.abspath(os.path.join(base, d)))
-            if owner is not None:
-                eq_scoped.add(owner)
+    versions, src = _latest(table_dir, expected_version)
     sizes: dict[str, int] = {}
     n_files: dict[str, int] = {}
     for d in src["dirs"]:
@@ -4625,8 +4359,7 @@ def optimize_compact(
     if (
         len(small) == 1
         and n_files[small[0]] <= 1
-        and small[0] not in dv_owned
-        and small[0] not in eq_scoped
+        and small[0] not in _row_delete_dirs(table_dir, src)
     ):
         # a lone already-single-file dir with no row-level deletes to
         # fold gains nothing from a rewrite
@@ -4679,6 +4412,7 @@ def optimize_compact(
             if rel in stats:
                 new_files[rel] = stats[rel]
     new_parts: dict = {}
+    idx_cols = stats_cols
     if zorder_by:
         # incremental clustering: one z-ordered fold PER PARTITION
         # GROUP, split at the group's bin count so files stay
@@ -4690,81 +4424,45 @@ def optimize_compact(
             zorder_write,
         )
 
-        idx_cols = stats_cols if stats_cols is not None else zorder_by
-        for tag, g_members in groups.items():
-            n_out = sum(1 for t, _m in bins if t == tag)
-            packed = _read_manifest_paths(
-                spark,
-                src,
-                [os.path.join(table_dir, d) for d in g_members],
-                table_dir,
-            )
-            out_dir = os.path.join(
-                table_dir, "_data", f"k-{uuid.uuid4().hex}"
-            )
-            zorder_write(
-                packed, out_dir, zorder_by, n_out, bits=DEFAULT_BITS
-            )
-            rel = os.path.relpath(out_dir, table_dir)
-            new_dirs.append(rel)
-            if tag is not None:
-                new_parts[rel] = json.loads(tag)
-            if idx_cols:
-                new_files.update(
-                    _collect_file_stats(spark, table_dir, out_dir, idx_cols)
-                )
-            if bloom_cols:
-                _collect_file_blooms(spark, out_dir, bloom_cols, bloom_fpp)
-        bins = []
-    for tag, members in bins:
+        idx_cols = zorder_by if stats_cols is None else stats_cols
+    for tag, members in groups.items() if zorder_by else bins:
         packed = _read_manifest_paths(
             spark,
             src,
             [os.path.join(table_dir, d) for d in members],
             table_dir,
-        ).coalesce(1)
-        out_dir = os.path.join(table_dir, "_data", f"k-{uuid.uuid4().hex}")
-        packed.write.mode("errorifexists").parquet(out_dir)
-        rel = os.path.relpath(out_dir, table_dir)
+        )
+        if zorder_by:
+            n_out = sum(1 for t, _m in bins if t == tag)
+            data = lambda path: zorder_write(  # noqa: E731
+                packed, path, zorder_by, n_out, bits=DEFAULT_BITS
+            )
+        else:
+            data = packed.coalesce(1)
+        rel, rel_files = _write_data_dir(
+            spark, data, table_dir, "k", idx_cols, bloom_cols, bloom_fpp
+        )
         new_dirs.append(rel)
+        new_files.update(rel_files)
         if tag is not None:
             new_parts[rel] = json.loads(tag)
-        if stats_cols:
-            new_files.update(
-                _collect_file_stats(spark, table_dir, out_dir, stats_cols)
-            )
-        if bloom_cols:
-            _collect_file_blooms(spark, out_dir, bloom_cols, bloom_fpp)
+    # folded dirs were read VISIBLE-rows; carried dirs keep their
+    # vectors, equality-delete scopes and tags
     carried_set = set(carried)
-    kept_dv = {
-        k: ent
-        for k, ent in dv.items()
-        if _resolve_owner(_dv_abs(table_dir, k, ent), dir_of) in carried_set
-    }
-    kept_eq = _carry_eqdel(table_dir, src, carried_set)
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "optimize_compact",
-        "dirs": new_dirs,
-    }
-    if new_files:
-        manifest["files"] = new_files
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if kept_eq:
-        manifest["eqdel"] = kept_eq
-    kept_parts = {d: v for d, v in parts_map.items() if d in carried_set}
-    kept_parts.update(new_parts)
-    if kept_parts:
-        manifest["partitions"] = kept_parts
-    for carry in (
-        "max_batch", "schema", "checks", "colmap", "retired_cols",
-        "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
+    manifest = _next_manifest(
+        src,
+        version,
+        "optimize_compact",
+        new_dirs,
+        files=new_files,
+        dv=_carry_dv(table_dir, src, carried_set),
+        eqdel=_carry_eqdel(table_dir, src, carried_set),
+        partitions={
+            **{d: v for d, v in parts_map.items() if d in carried_set},
+            **new_parts,
+        },
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
@@ -4896,71 +4594,44 @@ def drop_partitions(
     appended) — ``diff_versions`` gives the explicit delta. A
     predicate matching nothing publishes NOTHING and returns the
     current version."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no versions in {table_dir}")
-    if expected_version is not None and versions[-1] != expected_version:
-        raise FileExistsError(
-            f"expected latest version {expected_version} but table is at "
-            f"{versions[-1]} — re-read and retry"
-        )
-    src = _load_manifest(table_dir, versions[-1])
+    versions, src = _latest(table_dir, expected_version)
     matched = set(_partition_match_dirs(src, predicate, keep_untagged=False))
     if not matched:
         return versions[-1]
     survivors = [d for d in src["dirs"] if d not in matched]
     surv_set = set(survivors)
+    all_dirs = set(src["dirs"])
+
+    def _owner_of(f: str) -> str | None:
+        cur = os.path.dirname(f)
+        while cur and cur not in all_dirs:
+            nxt = os.path.dirname(cur)
+            if nxt == cur:
+                return None
+            cur = nxt
+        return cur or None
+
+    # vectors, equality-delete scopes and tags of the dropped dirs
+    # retire with them
     version = versions[-1] + 1
-    manifest = {
-        "version": version,
-        "committed_at": _commit_ts(src),
-        "mode": "drop_partitions",
-        "dirs": survivors,
-    }
-    stats = src.get("files", {})
-    if stats:
-        all_dirs = set(src["dirs"])
-
-        def _owner_of(f: str) -> str | None:
-            cur = os.path.dirname(f)
-            while cur and cur not in all_dirs:
-                nxt = os.path.dirname(cur)
-                if nxt == cur:
-                    return None
-                cur = nxt
-            return cur or None
-
-        kept_files = {
-            f: ent for f, ent in stats.items() if _owner_of(f) in surv_set
-        }
-        if kept_files:
-            manifest["files"] = kept_files
-    dv = src.get("dv") or {}
-    if dv:
-        dir_of = {
-            os.path.abspath(os.path.join(table_dir, d)): d
-            for d in src["dirs"]
-        }
-        kept_dv = {
-            k: ent
-            for k, ent in dv.items()
-            if _resolve_owner(_dv_abs(table_dir, k, ent), dir_of) in surv_set
-        }
-        if kept_dv:
-            manifest["dv"] = kept_dv
-    kept_eq = _carry_eqdel(table_dir, src, surv_set)
-    if kept_eq:
-        manifest["eqdel"] = kept_eq
-    parts = src.get("partitions") or {}
-    kept_parts = {d: v for d, v in parts.items() if d in surv_set}
-    if kept_parts:
-        manifest["partitions"] = kept_parts
-    for carry in (
-        "max_batch", "schema", "checks", "colmap", "retired_cols",
-        "generated",
-    ):
-        if carry in src:
-            manifest[carry] = src[carry]
+    manifest = _next_manifest(
+        src,
+        version,
+        "drop_partitions",
+        survivors,
+        files={
+            f: ent
+            for f, ent in src.get("files", {}).items()
+            if _owner_of(f) in surv_set
+        },
+        dv=_carry_dv(table_dir, src, surv_set),
+        eqdel=_carry_eqdel(table_dir, src, surv_set),
+        partitions={
+            d: v
+            for d, v in (src.get("partitions") or {}).items()
+            if d in surv_set
+        },
+    )
     _publish_manifest(table_dir, version, manifest)
     return version
 
@@ -5407,19 +5078,9 @@ def publish_branch(table_dir: str, name: str) -> int:
         done.append((src, dst))
 
     # rebuild the branch's final manifest in the parent's frame
-    manifest = {
-        "version": target,
-        "committed_at": _commit_ts(_load_manifest(table_dir, fork["version"])),
-        "mode": f"publish({name}@{bv})",
-        "dirs": [_publish_remap(d, branch_abs, parent_abs) for d in bm["dirs"]],
-    }
-    if bm.get("schema") is not None:
-        manifest["schema"] = bm["schema"]
     files = {}
     for k, ent in (bm.get("files") or {}).items():
         files[_publish_remap(k, branch_abs, parent_abs)] = ent
-    if files:
-        manifest["files"] = files
     dv = {}
     bdata = os.path.join(branch_abs, "_data")
     for k, ent in (bm.get("dv") or {}).items():
@@ -5442,26 +5103,8 @@ def publish_branch(table_dir: str, name: str) -> int:
             # after the branch dir is gone
             e2["base"] = ent.get("base", branch_abs)
         dv[k] = e2
-    if dv:
-        manifest["dv"] = dv
-    eqdel = []
-    for entry in bm.get("eqdel") or []:
-        e2 = dict(entry)
-        # branch-relative refs ("_eqdel/…") and scope dirs ("_data/…")
-        # resolve under the parent after adoption; absolute ones are
-        # untouched by the rename; entries with a base keep it
-        eqdel.append(e2)
-    if eqdel:
-        manifest["eqdel"] = eqdel
-    parts = {}
-    for d, tag in (bm.get("partitions") or {}).items():
-        parts[_publish_remap(d, branch_abs, parent_abs)] = tag
-    if parts:
-        manifest["partitions"] = parts
-    for ck in ("checks", "generated", "colmap", "retired_cols"):
-        if bm.get(ck):
-            manifest[ck] = bm[ck]
-    parent_mb = _load_manifest(table_dir, fork["version"]).get("max_batch")
+    parent_m = _load_manifest(table_dir, fork["version"])
+    parent_mb = parent_m.get("max_batch")
     branch_mb = bm.get("max_batch")
     mb = (
         parent_mb
@@ -5470,8 +5113,26 @@ def publish_branch(table_dir: str, name: str) -> int:
         if parent_mb is None
         else max(parent_mb, branch_mb)
     )
-    if mb is not None:
-        manifest["max_batch"] = mb
+    # the table keys are the branch's, except the watermark; equality
+    # deletes carry verbatim: branch-relative refs ("_eqdel/…") and
+    # scope dirs ("_data/…") resolve under the parent after adoption,
+    # absolute ones are untouched by the rename, entries with a base
+    # keep it
+    manifest = _next_manifest(
+        parent_m,
+        target,
+        f"publish({name}@{bv})",
+        [_publish_remap(d, branch_abs, parent_abs) for d in bm["dirs"]],
+        **{k: bm.get(k) for k in _TABLE_KEYS if k != "max_batch"},
+        max_batch=mb,
+        files=files,
+        dv=dv,
+        eqdel=[dict(entry) for entry in bm.get("eqdel") or []],
+        partitions={
+            _publish_remap(d, branch_abs, parent_abs): tag
+            for d, tag in (bm.get("partitions") or {}).items()
+        },
+    )
     try:
         _publish_manifest(table_dir, target, manifest)
     except FileExistsError:

@@ -52,7 +52,7 @@ def with_conf(
     session with ``conf`` set; the caller's session is never written.
 
     The clone shares the SparkContext and the cache, and starts from the
-    caller's current conf, temp views, UDFs and streaming-query
+    caller's current conf, temp views, UDFs and own streaming-query
     listeners (a stream started on the clone reports to them). A conf
     read at analysis (session time zone, parquet timestamp inference)
     must be set on the session before its frames are built; a conf read
@@ -61,7 +61,7 @@ def with_conf(
     then runs on the clone."""
     spark = target if isinstance(target, SparkSession) else target.sparkSession
     jclone = spark._jsparkSession.cloneSession()
-    for listener in spark._jsparkSession.streams().listListeners():
+    for listener in _own_listeners(spark._jsparkSession):
         jclone.streams().addListener(listener)
     clone = SparkSession(spark.sparkContext, jclone)
     for k, v in conf.items():
@@ -70,6 +70,32 @@ def with_conf(
         return clone
     dataset = clone._jvm.org.apache.spark.sql.classic.Dataset
     return DataFrame(dataset.ofRows(jclone, target._jdf.logicalPlan()), clone)
+
+
+def _own_listeners(jsession) -> list:
+    """The session's own ``StreamingQueryListener``s: all but Spark's
+    shared streaming-UI status listener, which every new
+    ``StreamingQueryManager`` registers itself. A session whose manager
+    was never created has none and is not given one — a manager adds a
+    listener bus to the context's ``LiveListenerBus`` that is never
+    removed, so copying onto every clone leaked one per call."""
+    from py4j.protocol import Py4JError
+
+    state = jsession.sessionState()
+    try:
+        # the lazy val's backing field stays null until first use
+        field = state.getClass().getDeclaredField("streamingQueryManager")
+        field.setAccessible(True)
+        if field.get(state) is None:
+            return []
+    except Py4JError:
+        pass  # another layout: list through the manager
+    status = jsession.sharedState().streamingQueryStatusListener()
+    return [
+        listener
+        for listener in jsession.streams().listListeners()
+        if not (status.isDefined() and listener.equals(status.get()))
+    ]
 
 
 def local_cores() -> int:

@@ -26,6 +26,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from polygon_daily_market_data_pipeline_spark.sources.polygon_api import (
     GROUPED_DAILY_PATH,
+    MIN_EXPECTED_TICKERS,
     EmptyTradingDay,
     TooFewTickers,
     extract_results,
@@ -93,7 +94,9 @@ class PolygonEodReader(DataSourceReader):
     def read(self, partition: _DatePartition) -> Iterator[tuple]:
         date_str = partition.date_str
         transport = self.options.get("transport", "synthetic")
-        min_tickers = int(self.options.get("min_tickers", "100"))
+        min_tickers = int(
+            self.options.get("min_tickers", MIN_EXPECTED_TICKERS)
+        )
         if transport == "synthetic":
             body = synthetic_day_body(
                 date_str, int(self.options.get("num_tickers", "120"))

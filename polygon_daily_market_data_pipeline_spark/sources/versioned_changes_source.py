@@ -43,7 +43,6 @@ import os
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -111,8 +110,7 @@ def _plan_file_partitions(
 ) -> "list[_FilePartition]":
     """One ``_FilePartition`` per parquet file, tagged with the
     deletion-vector sidecars and scoped equality deletes that apply to
-    it under ``manifest`` — shared by the streaming snapshot planner
-    and the batch reader."""
+    it under ``manifest`` — the streaming snapshot planner's unit."""
     from polygon_daily_market_data_pipeline_spark.operators.layout import (
         list_parquet_files,
     )
@@ -423,117 +421,3 @@ class VersionedChangesDataSource(DataSource):
 
 def register(spark) -> None:
     spark.dataSource.register(VersionedChangesDataSource)
-
-
-class VersionedTableReader(DataSourceReader):
-    """Batch reader: the table AT a version (default latest), AS OF a
-    timestamp, or partition-pruned — one partition per parquet file,
-    deletion vectors / equality deletes masked per Arrow batch, every
-    batch reconciled to the bound (nullable, manifest) schema."""
-
-    def __init__(self, options: dict, schema: "StructType | None" = None):
-        self.table_dir = options.get("path") or options.get("table")
-        if not self.table_dir:
-            raise ValueError(
-                "versioned_table needs .option('path', <table_dir>)"
-            )
-        self.version = (
-            int(options["version"]) if "version" in options else None
-        )
-        self.as_of = options.get("asof")
-        self.part_pred = None
-        if "partitions" in options:
-            import json as _json
-
-            raw = _json.loads(options["partitions"])
-            # JSON has no tuples: 2-element lists are (lo, hi) ranges
-            self.part_pred = {
-                k: tuple(v) if isinstance(v, list) else v
-                for k, v in raw.items()
-            }
-        self.bound_schema = schema
-
-    def partitions(self) -> "list[InputPartition]":
-        from polygon_daily_market_data_pipeline_spark.operators.layout import (
-            list_parquet_files,
-        )
-        from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-            _partition_match_dirs,
-            _resolve_manifest,
-        )
-
-        m = _resolve_manifest(self.table_dir, self.version, self.as_of)
-        dirs = m["dirs"]
-        if self.part_pred:
-            dirs = _partition_match_dirs(m, self.part_pred, keep_untagged=True)
-        files = [
-            f
-            for d in dirs
-            for f in list_parquet_files(
-                d if os.path.isabs(d) else os.path.join(self.table_dir, d)
-            )
-        ]
-        parts = _plan_file_partitions(self.table_dir, m, files)
-        return parts or [_FilePartition(None)]
-
-    def read(self, partition: _FilePartition):
-        yield from _read_file_partition(partition, self.bound_schema)
-
-
-class VersionedTableDataSource(DataSource):
-    """``spark.read.format("versioned_table")`` — the SQL-surface face
-    of ``read_version``: register once, then any consumer (including
-    ``spark.sql`` over a temp view) reads a versioned table with time
-    travel and partition pruning through options, no library import in
-    the query path::
-
-        spark.dataSource.register(VersionedTableDataSource)
-        df = (spark.read.format("versioned_table")
-              .option("path", table_dir)
-              .option("version", 3)            # or .option("asOf", ts)
-              .option("partitions", '{"d": "2024-01-02"}')
-              .load())
-
-    Same read semantics as ``read_version`` (manifest schema applied,
-    merge-on-read deletes masked per Arrow batch, nullable columns —
-    the evolved-table contract); the scan is one executor partition
-    per live parquet file."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "versioned_table"
-
-    def schema(self) -> StructType:
-        from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-            _resolve_manifest,
-        )
-
-        table_dir = self.options.get("path") or self.options.get("table")
-        if not table_dir:
-            raise ValueError(
-                "versioned_table needs .option('path', <table_dir>)"
-            )
-        version = (
-            int(self.options["version"])
-            if "version" in self.options
-            else None
-        )
-        m = _resolve_manifest(table_dir, version, self.options.get("asof"))
-        if "schema" not in m:
-            raise ValueError(
-                "manifest carries no schema (pre-schema table) — pass "
-                ".schema(...) explicitly"
-            )
-        st = StructType.fromJson(m["schema"])
-        from pyspark.sql.types import StructField
-
-        return StructType(
-            [StructField(f.name, f.dataType, True) for f in st.fields]
-        )
-
-    def reader(self, schema) -> VersionedTableReader:
-        return VersionedTableReader(self.options, schema)
-
-
-def register_table_source(spark) -> None:
-    spark.dataSource.register(VersionedTableDataSource)

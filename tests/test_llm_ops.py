@@ -474,6 +474,26 @@ def test_jaccard_prefix_filter_equals_exhaustive(spark):
         )
 
 
+def test_prefix_fraction_never_exceeds_the_float_threshold():
+    """The prefix cut's t is a fraction AT OR BELOW the float threshold:
+    Fraction(str(0.3)) = 3/10 lies above the float 0.29999999999999998…
+    and would shorten prefixes. Numerator and denominator stay ≤ 10⁹ so
+    ``n·p`` fits a long."""
+    from fractions import Fraction
+
+    from polygon_daily_market_data_pipeline_spark.operators.text_dedup import (
+        _prefix_fraction,
+    )
+
+    assert Fraction(str(0.3)) > Fraction(0.3)
+    for t in (0.3, 0.1, 0.34, 0.5, 0.7, 0.9, 1.0):
+        frac = _prefix_fraction(t)
+        assert frac <= Fraction(t), t
+        assert Fraction(t) - frac < Fraction(1, 10**9), t
+        assert frac.numerator <= 10**9 and frac.denominator <= 10**9, t
+    assert _prefix_fraction(0.5) == Fraction(1, 2)
+
+
 def test_jpeg_marker_walk_handles_fill_bytes_and_eoi():
     """Spec-legal 0xFF fill/padding bytes before a marker must be
     skipped, and EOI (0xD9) carries no length — a padded JPEG decodes

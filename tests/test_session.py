@@ -122,3 +122,21 @@ def test_drain_on_a_clone_reaches_caller_listeners(spark, tmp_path):
         time.sleep(0.1)
     assert {"started", "progress", "terminated"} <= set(seen)
     assert caller.conf.get(WIDTH) == "3"
+
+
+def test_with_conf_leaves_the_listener_bus_alone(spark):
+    """A clone gets the caller's own streaming listeners only: Spark's
+    shared streaming-UI status listener is registered by every new
+    StreamingQueryManager itself, and copying it created one manager
+    per clone, each adding a never-removed bus to the context's
+    LiveListenerBus. With no user listener a clone registers nothing —
+    top level or nested."""
+    spark.streams.active  # the caller's manager exists, as once streamed
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    with_conf(spark, {WIDTH: "3"})  # one-time shared-state setup
+    before = bus.listeners().size()
+    for _ in range(200):
+        with_conf(spark, {WIDTH: "3"})
+    for _ in range(20):
+        with_conf(with_conf(spark, {WIDTH: "3"}).range(1), {WIDTH: "5"})
+    assert bus.listeners().size() == before

@@ -261,13 +261,12 @@ def test_rollback_and_clone_carry_the_mapping(spark, tmp_path):
     assert read_version(spark, t).count() == 10
 
 
-def test_batch_and_stream_sources_map_renamed_columns(spark, tmp_path):
+def test_read_version_and_stream_source_map_renamed_columns(spark, tmp_path):
     from polygon_daily_market_data_pipeline_spark.sources import (
         versioned_changes_source as vcs,
     )
 
     vcs.register(spark)
-    vcs.register_table_source(spark)
     t = str(tmp_path / "vt")
     commit_version(_df(spark, 0, 6), t, stats_cols=["k"])
     rename_column(t, "v", "price")
@@ -276,7 +275,7 @@ def test_batch_and_stream_sources_map_renamed_columns(spark, tmp_path):
     delete_version_keys(spark, t, keys, ["k"])
     rename_column(t, "k", "kid")
     want = [(3, 30.0), (4, 40.0), (5, 50.0)]
-    bdf = spark.read.format("versioned_table").option("path", t).load()
+    bdf = read_version(spark, t)
     assert sorted((r.kid, r.price) for r in bdf.collect()) == want
     rows = []
     q = (

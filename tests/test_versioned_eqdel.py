@@ -137,6 +137,24 @@ def test_eq_composes_with_dv_materialize_vacuum(spark, tmp_path):
     assert read_version(spark, t).count() == 170
 
 
+def test_merge_on_read_past_an_eq_delete_on_a_non_key_column(spark, tmp_path):
+    """The merge-on-read position scan drops equality-deleted rows
+    BEFORE it prunes to the merge keys: an erasure list keyed on a
+    column that is not a merge key must still resolve."""
+    t = str(tmp_path / "vt")
+    commit_version(
+        _df(spark, 0, 10).withColumn("g", F.col("k") % 3), t, stats_cols=["k"]
+    )
+    delete_version_keys(spark, t, _keys(spark, [1]).withColumnRenamed("k", "g"))
+    src = read_version(spark, t).where("k in (0, 3)").withColumn(
+        "v", F.col("v") + 100
+    )
+    merge_version(spark, t, src, ["k"], strategy="merge_on_read")
+    got = {r.k: r.v for r in read_version(spark, t).collect()}
+    assert sorted(got) == [0, 2, 3, 5, 6, 8, 9]  # g == 1 erased
+    assert got[0] == 100.0 and got[3] == 103.0 and got[2] == 2.0
+
+
 def test_eq_delete_type_mismatch_raises(spark, tmp_path):
     t = str(tmp_path / "vt")
     commit_version(_df(spark, 0, 10), t)

@@ -418,16 +418,15 @@ def test_lakehouse_composition_end_to_end(spark, tmp_path):
     assert read_version(spark, replica).count() == 300  # untouched
 
 
-def test_batch_datasource_matches_read_version(spark, tmp_path):
-    """spark.read.format('versioned_table') — the SQL-surface face of
-    read_version: identical rows on a table carrying deletion vectors,
-    an equality delete, AND schema evolution; time travel and
-    partition pruning via options; a temp view makes it plain SQL."""
+def test_read_version_applies_deletes_evolution_time_travel_and_pruning(
+    spark, tmp_path
+):
+    """read_version on a table carrying deletion vectors, an equality
+    delete AND schema evolution: the visible rows, time travel to the
+    pre-evolution schema, and exact/range partition pruning (untagged
+    dirs always kept), read through a temp view in plain SQL too."""
     from polygon_daily_market_data_pipeline_spark.operators.versioned import (
         delete_version_keys,
-    )
-    from polygon_daily_market_data_pipeline_spark.sources.versioned_changes_source import (
-        register_table_source,
     )
 
     t = str(tmp_path / "vt")
@@ -438,39 +437,24 @@ def test_batch_datasource_matches_read_version(spark, tmp_path):
     )
     ev = _day(spark, "x", 900, 910).withColumn("w", F.lit(9).cast("long"))
     commit_version(ev, t, mode="append", schema_evolution=True)
-    register_table_source(spark)
-    df = spark.read.format("versioned_table").option("path", t).load()
-    want = read_version(spark, t)
-    assert sorted(map(tuple, df.collect())) == sorted(
-        map(tuple, want.collect())
+    df = read_version(spark, t)
+    ks = sorted(r.k for r in df.collect())
+    assert ks == sorted(
+        [k for k in range(300) if k not in (5, 150)] + list(range(900, 910))
     )
-    # time travel through an option; pre-evolution schema honored
-    df0 = (
-        spark.read.format("versioned_table")
-        .option("path", t)
-        .option("version", "0")
-        .load()
-    )
+    assert df.where(F.col("w").isNull()).count() == 298
+    # time travel; the pre-evolution schema is honored
+    df0 = read_version(spark, t, version=0)
     assert df0.count() == 100 and "w" not in df0.columns
     # partition pruning: day 2 (minus its equality-deleted key) plus
     # the untagged evolved dir, which pruning must always keep
-    dfp = (
-        spark.read.format("versioned_table")
-        .option("path", t)
-        .option("partitions", '{"d": "2024-01-02"}')
-        .load()
-    )
+    dfp = read_version(spark, t, partitions={"d": "2024-01-02"})
     assert dfp.where(F.col("d") == "2024-01-02").count() == 99
     assert dfp.count() == 99 + 10
-    # range predicate via a JSON 2-list
-    dfr = (
-        spark.read.format("versioned_table")
-        .option("path", t)
-        .option("partitions", '{"d": ["2024-01-02", "2024-01-03"]}')
-        .load()
+    dfr = read_version(
+        spark, t, partitions={"d": ("2024-01-02", "2024-01-03")}
     )
     assert dfr.where(F.col("d").startswith("2024")).count() == 199
-    # SQL all the way down
     df.createOrReplaceTempView("vt_sql")
     assert (
         spark.sql("SELECT COUNT(*) FROM vt_sql WHERE d = '2024-01-01'")
