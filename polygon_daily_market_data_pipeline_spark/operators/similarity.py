@@ -1,20 +1,24 @@
-"""Embedding similarity search: brute-force cosine top-k (exact
-baseline) and random-hyperplane LSH bucketing (the scale path).
+"""Embedding similarity search: exact and approximate cosine top-k,
+the quantizers behind the approximate ones, and embedding near-dup
+pairs.
 
-Vector math is Catalyst-native (``zip_with`` + ``aggregate`` over
-``array<float>`` promoted to double) — no UDF, so the kernel lives in
-whole-stage codegen. At very high dims/ks a vectorized Pandas-UDF
-(BLAS) kernel wins; that variant is ``cosine_topk_pandas`` below,
-Arrow-batched, for when profiling says so.
+- Exact: ``cosine_topk_bruteforce`` (Catalyst HOF math, no UDF, for
+  query sets too large to collect) and ``cosine_topk_pandas`` (the
+  collected query matrix broadcast, one BLAS matmul per Arrow batch).
+- LSH (``cosine_topk_lsh``): candidates share a hyperplane bucket in at
+  least one of L tables; the shuffle is on (table, bucket).
+- Quantized, the FAISS family: IVF (k-means cells, queries probe their
+  ``n_probe`` nearest), PQ (subspace codes scored by lookup tables),
+  SQ8 (one uint8 per dimension) and the IVF+PQ and IVF+SQ composites.
 
-Scale design:
-- brute force is O(|Q|·|C|): correct tool for small query sets / reranking;
-  the corpus side stays partitioned, queries broadcast.
-- LSH buckets: h deterministic hyperplanes → 2^h buckets; candidates
-  share a bucket (multi-probe: optionally neighbors at Hamming-1).
-  Shuffle is on bucket id; per-bucket work is |bucket|², controlled by h.
-- IVF-style variant: cluster centroids (kmeans off-line), probe top-c
-  centroids — same join shape; left as the natural extension.
+``cosine_topk_pandas`` and every quantized variant are a codec, one
+scan kernel (``_topk_scan``: queries broadcast, self-pairs dropped,
+optional IVF cell filter, tie-safe per-batch cut) and one tail (the
+rank-k window, behind an exact rerank for quantized codecs). Each
+encoder is written once and every encode pass (``_index_pass``) calls
+it, so a shared index and the per-method encoders agree by
+construction. The corpus side stays partitioned and never shuffles;
+what crosses an exchange is |Q|·(candidates per batch) rows.
 """
 
 from __future__ import annotations
@@ -56,6 +60,87 @@ def _sq_dists(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
     return np.maximum(d, 0.0, out=d)
 
 
+def _cells(
+    mat: "np.ndarray", cents: "np.ndarray"
+) -> "tuple[np.ndarray, np.ndarray]":
+    """IVF coarse codes: each row's nearest centroid (int32) and its
+    squared distance to it."""
+    d = _sq_dists(mat, cents)
+    cells = d.argmin(axis=1)
+    return cells.astype(np.int32), d[np.arange(len(cells)), cells]
+
+
+def _pq_codes(mat: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """PQ codes, (n, m) int32: the nearest center in each subspace."""
+    m, _ksub, dsub = books.shape
+    codes = np.empty((len(mat), m), dtype=np.int32)
+    for s in range(m):
+        sub = mat[:, s * dsub : (s + 1) * dsub]
+        codes[:, s] = _sq_dists(sub, books[s]).argmin(axis=1)
+    return codes
+
+
+def _sq_codes(
+    mat: "np.ndarray", lo: "np.ndarray", scale: "np.ndarray"
+) -> "np.ndarray":
+    """SQ8 codes, (n, dim) int64: each dimension rounded to its 0..255
+    step (``scale`` is 0 on a degenerate dimension, which codes to 0)."""
+    return np.rint(np.clip((mat - lo) * scale, 0.0, 255.0)).astype(np.int64)
+
+
+def _index_pass(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: "np.ndarray | None" = None,
+    codebooks: "np.ndarray | None" = None,
+    bounds: "np.ndarray | None" = None,
+    with_vec: bool = False,
+) -> DataFrame:
+    """One Arrow pass encoding every vector with each model it is
+    given: ``(id[, vec], cell, dist)`` for centroids (``dist`` is the
+    euclidean distance to the cell's centroid), ``pq_code array<int>``
+    for codebooks, ``sq_code array<long>`` for SQ bounds. The models are
+    broadcast; there is no shuffle and the work is O(batch) at any
+    corpus size. Every encoder and in-line index pass in this module is
+    this pass."""
+    cents = None if centroids is None else np.asarray(centroids, dtype=np.float64)
+    books = None if codebooks is None else np.asarray(codebooks, dtype=np.float64)
+    schema = [f"{id_col} long"] + ([f"{vec_col} array<double>"] if with_vec else [])
+    if cents is not None:
+        schema += ["cell int", "dist double"]
+    if books is not None:
+        schema.append("pq_code array<int>")
+    grid = None
+    if bounds is not None:
+        lo, hi = np.asarray(bounds, dtype=np.float64)
+        span = hi - lo
+        # np.where evaluates both branches — divide only where span > 0
+        grid = (lo, np.divide(255.0, span, out=np.zeros_like(span), where=span > 0))
+        schema.append("sq_code array<long>")
+    b_models = df.sparkSession.sparkContext.broadcast((cents, books, grid))
+
+    def run(batches):
+        cents, books, grid = b_models.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            out = {id_col: pdf[id_col].values}
+            if with_vec:
+                out[vec_col] = pdf[vec_col].values
+            if cents is not None:
+                out["cell"], d = _cells(mat, cents)
+                out["dist"] = np.sqrt(d)
+            if books is not None:
+                out["pq_code"] = list(_pq_codes(mat, books))
+            if grid is not None:
+                out["sq_code"] = list(_sq_codes(mat, *grid))
+            yield pd.DataFrame(out)
+
+    return df.select(id_col, vec_col).mapInPandas(run, ", ".join(schema))
+
+
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -86,6 +171,19 @@ def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
     num = (ma * mb).sum(axis=1)
     den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
     return pd.Series(num / den)
+
+
+def _rank_k(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """The shared tail: (query_id, neighbor_id, rank, score) for the
+    top-k rows per query, ties broken on neighbor_id — deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
 
 
 def cosine_topk_bruteforce(
@@ -124,14 +222,7 @@ def cosine_topk_bruteforce(
             cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_k(scored, k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -281,12 +372,7 @@ def cosine_topk_lsh(
             cosine_pandas(F.col("q_vec"), F.col("c_vec")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_k(scored, k)
 
 
 def embedding_neardup_pairs(
@@ -454,97 +540,32 @@ def embedding_neardup_pairs_lsh(
     )
 
 
-def kmeans_centroids(
+def _lloyd(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 16,
-    iters: int = 4,
-) -> "np.ndarray":
-    """Deterministic Lloyd k-means for the IVF coarse quantizer.
+    id_col: str,
+    vec_col: str,
+    k: int,
+    m: int,
+    ksub: int,
+    iters: int,
+) -> "tuple[np.ndarray | None, np.ndarray | None]":
+    """Deterministic Lloyd training of the IVF coarse quantizer (``k``
+    centroids; ``k=0`` skips it) and the PQ codebooks (``m`` subspaces
+    of ``ksub`` centers; ``m=0`` skips them), both in ONE corpus pass
+    per iteration.
 
-    Init = the k lowest-id vectors (deterministic, no RNG). Each
-    iteration: executors emit per-partition (cluster → sum, count)
-    partials via mapInPandas — k·dim floats per partition, the classic
-    combiner shape — and the driver reduces them. Nothing corpus-sized
-    ever reaches the driver."""
-    # NOT a global sort: orderBy().limit(k) compiles to
-    # TakeOrderedAndProject — each partition keeps its local top-k and
-    # only k rows per partition reach the driver merge. The full scan it
+    Init = the lowest-id vectors (no RNG): the first ``k`` seed the
+    centroids, the first ``ksub`` seed every subspace. Each iteration,
+    executors emit per-partition (subspace, cluster → sum, count)
+    partials via mapInPandas — k·dim + m·ksub·dsub floats per
+    partition, the classic combiner shape; the coarse quantizer is
+    subspace -1 — collected and reduced in canonical order. Nothing
+    corpus-sized is collected. Raises when ``m`` does not divide the
+    dimension (ragged subspaces quantize asymmetrically)."""
+    # NOT a global sort: orderBy().limit(n) compiles to
+    # TakeOrderedAndProject — each partition keeps its local top-n and
+    # only n rows per partition reach the driver merge. The full scan it
     # implies is the same scan every Lloyd iteration below pays anyway.
-    init = (
-        df.orderBy(id_col).limit(k).select(vec_col).toPandas()[vec_col].tolist()
-    )
-    cents = np.array(init, dtype=np.float64)
-
-    for _ in range(iters):
-        b_c = df.sparkSession.sparkContext.broadcast(cents)
-
-        def partials(batches):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            acc_s = {}
-            acc_n = {}
-            for pdf in batches:
-                m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                d = _sq_dists(m, b_c.value)
-                a = d.argmin(axis=1)
-                for c in np.unique(a):
-                    sel = m[a == c]
-                    acc_s[c] = acc_s.get(c, 0) + sel.sum(axis=0)
-                    acc_n[c] = acc_n.get(c, 0) + len(sel)
-            rows = [
-                {
-                    "cluster": int(c),
-                    "pid": pid,
-                    "vsum": acc_s[c].tolist(),
-                    "n": int(acc_n[c]),
-                }
-                for c in acc_s
-            ]
-            yield pd.DataFrame(rows, columns=["cluster", "pid", "vsum", "n"])
-
-        agg = (
-            df.select(vec_col)
-            .mapInPandas(
-                partials, "cluster int, pid int, vsum array<double>, n long"
-            )
-            .collect()
-        )
-        # Canonical reduce order: .collect() arrival order varies run to
-        # run, and float summation is order-sensitive — an ulp drift in a
-        # centroid can flip a near-tied assignment next iteration. Sort
-        # by (cluster, partition id) so training is bit-reproducible for
-        # a given input partitioning (VERDICT r8 "What's wrong #3").
-        sums = np.zeros_like(cents)
-        counts = np.zeros(len(cents))
-        for r in sorted(agg, key=lambda r: (r.cluster, r.pid)):
-            sums[r.cluster] += np.array(r.vsum)
-            counts[r.cluster] += r.n
-        nonzero = counts > 0
-        cents[nonzero] = sums[nonzero] / counts[nonzero, None]
-    return cents
-
-
-def train_quantizers(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 16,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 4,
-) -> "tuple[np.ndarray, np.ndarray]":
-    """Jointly train the IVF coarse quantizer AND the PQ codebooks in
-    ONE corpus pass per Lloyd iteration — (centroids, codebooks)
-    bit-identical to running ``kmeans_centroids`` and
-    ``pq_train_codebooks`` separately (same lowest-id init rows, same
-    per-partition partials, same canonical reduce order; asserted in
-    tests/test_llm_ops.py), at HALF the job count. An IVF+PQ deployment
-    always needs both models over the same corpus; on a small corpus
-    the trainings are pure Spark-job latency, and at 100 TB each saved
-    pass is a full corpus scan."""
     init = (
         df.orderBy(id_col)
         .limit(max(k, ksub))
@@ -553,42 +574,42 @@ def train_quantizers(
         .tolist()
     )
     init_m = np.array(init, dtype=np.float64)
-    cents = init_m[:k].copy()
-    dim = init_m.shape[1]
-    if dim % m:
-        raise ValueError(f"m={m} does not divide dim={dim}")
-    dsub = dim // m
-    books = np.stack(
-        [init_m[:ksub, s * dsub : (s + 1) * dsub] for s in range(m)]
-    )
+    cents = init_m[:k].copy() if k else None
+    books, dsub = None, 0
+    if m:
+        dim = init_m.shape[1]
+        if dim % m:
+            raise ValueError(f"m={m} does not divide dim={dim}")
+        dsub = dim // m
+        # (m, ksub, dsub): subspace s starts from the same ksub seed rows
+        books = np.stack(
+            [init_m[:ksub, s * dsub : (s + 1) * dsub] for s in range(m)]
+        )
 
     for _ in range(iters):
-        b_c = df.sparkSession.sparkContext.broadcast(cents)
-        b_b = df.sparkSession.sparkContext.broadcast(books)
+        b_models = df.sparkSession.sparkContext.broadcast((cents, books))
 
         def partials(batches):
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
+            cents_, books_ = b_models.value
             acc_s: dict = {}
             acc_n: dict = {}
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                # coarse-quantizer partials, keyed sub = -1
-                d = _sq_dists(mat, b_c.value)
-                a = d.argmin(axis=1)
-                for c in np.unique(a):
-                    sel = mat[a == c]
-                    key = (-1, int(c))
-                    acc_s[key] = acc_s.get(key, 0) + sel.sum(axis=0)
-                    acc_n[key] = acc_n.get(key, 0) + len(sel)
-                # PQ subspace partials, keyed sub >= 0
-                for s in range(b_b.value.shape[0]):
-                    sub = mat[:, s * dsub : (s + 1) * dsub]
-                    d = _sq_dists(sub, b_b.value[s])
-                    a = d.argmin(axis=1)
+                views = []
+                if cents_ is not None:
+                    views.append((-1, mat, _cells(mat, cents_)[0]))
+                if books_ is not None:
+                    codes = _pq_codes(mat, books_)
+                    views += [
+                        (s, mat[:, s * dsub : (s + 1) * dsub], codes[:, s])
+                        for s in range(m)
+                    ]
+                for s, sub, a in views:
                     for c in np.unique(a):
                         sel = sub[a == c]
                         key = (s, int(c))
@@ -616,10 +637,16 @@ def train_quantizers(
             )
             .collect()
         )
-        c_sums = np.zeros_like(cents)
-        c_counts = np.zeros(len(cents))
-        b_sums = np.zeros_like(books)
-        b_counts = np.zeros((m, ksub))
+        # Canonical reduce order: .collect() arrival order varies run to
+        # run, and float summation is order-sensitive — an ulp drift in a
+        # centroid can flip a near-tied assignment next iteration. Sort
+        # by (subspace, cluster, partition id) so training is
+        # bit-reproducible for a given input partitioning (VERDICT r8
+        # "What's wrong #3").
+        c_sums = None if cents is None else np.zeros_like(cents)
+        c_counts = None if cents is None else np.zeros(len(cents))
+        b_sums = None if books is None else np.zeros_like(books)
+        b_counts = None if books is None else np.zeros((m, ksub))
         for r in sorted(agg, key=lambda r: (r.sub, r.cluster, r.pid)):
             if r.sub < 0:
                 c_sums[r.cluster] += np.array(r.vsum)
@@ -627,11 +654,52 @@ def train_quantizers(
             else:
                 b_sums[r.sub][r.cluster] += np.array(r.vsum)
                 b_counts[r.sub][r.cluster] += r.n
-        nonzero = c_counts > 0
-        cents[nonzero] = c_sums[nonzero] / c_counts[nonzero, None]
-        nz = b_counts > 0
-        books[nz] = b_sums[nz] / b_counts[nz][:, None]
+        if cents is not None:
+            nonzero = c_counts > 0
+            cents[nonzero] = c_sums[nonzero] / c_counts[nonzero, None]
+        if books is not None:
+            nz = b_counts > 0
+            books[nz] = b_sums[nz] / b_counts[nz][:, None]
     return cents, books
+
+
+def kmeans_centroids(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 16,
+    iters: int = 4,
+) -> "np.ndarray":
+    """Deterministic Lloyd k-means for the IVF coarse quantizer.
+
+    Init = the k lowest-id vectors (deterministic, no RNG). Each
+    iteration: executors emit per-partition (cluster → sum, count)
+    partials via mapInPandas — k·dim floats per partition, the classic
+    combiner shape — and the driver reduces them in canonical
+    (cluster, partition id) order, so training is bit-reproducible.
+    Nothing corpus-sized ever reaches the driver."""
+    return _lloyd(df, id_col, vec_col, k, 0, 0, iters)[0]
+
+
+def train_quantizers(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 16,
+    m: int = 8,
+    ksub: int = 16,
+    iters: int = 4,
+) -> "tuple[np.ndarray, np.ndarray]":
+    """Jointly train the IVF coarse quantizer AND the PQ codebooks in
+    ONE corpus pass per Lloyd iteration — (centroids, codebooks)
+    bit-identical to running ``kmeans_centroids`` and
+    ``pq_train_codebooks`` separately (same lowest-id init rows, same
+    per-partition partials, same canonical reduce order; asserted in
+    tests/test_llm_ops.py), at HALF the job count. An IVF+PQ deployment
+    always needs both models over the same corpus; on a small corpus
+    the trainings are pure Spark-job latency, and at 100 TB each saved
+    pass is a full corpus scan."""
+    return _lloyd(df, id_col, vec_col, k, m, ksub, iters)
 
 
 def ivf_assign(
@@ -648,30 +716,9 @@ def ivf_assign(
     size. ``dist`` is the euclidean distance to the assigned centroid
     and feeds ``ivf_drift_ratio`` below, which signals when a retrain
     is due. The cell ids are identical to ``cosine_topk_ivf``'s
-    inverted-index cells (same argmin, same metric), so assigned rows
-    append directly to the serving index."""
-    b_c = df.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64)
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d = _sq_dists(m, b_c.value)
-            a = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "cell": a.astype("int32"),
-                    "dist": np.sqrt(d[np.arange(len(a)), a]),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        run, f"{id_col} long, cell int, dist double"
-    )
+    inverted-index cells (the same encoder), so assigned rows append
+    directly to the serving index."""
+    return _index_pass(df, id_col, vec_col, centroids=centroids)
 
 
 def quantizer_index(
@@ -687,54 +734,16 @@ def quantizer_index(
     deployment serving several ANN variants builds once instead of
     re-encoding the corpus per variant (round 17, VERDICT r16 #4: the
     five quantizer audits each ran their own encode pass; at 100 TB
-    each saved pass is a full corpus scan). Values are BIT-IDENTICAL
-    to the per-method encoders — ``cell`` is ``ivf_assign``'s argmin,
-    ``pq_code`` is ``pq_encode``'s per-subspace argmin, ``sq_code`` is
-    ``sq_encode``'s rint grid (same float64 broadcast models, same
-    numpy expressions; asserted in tests/test_llm_ops.py) — so a
-    consumer slicing this frame computes exactly what the standalone
-    encoder hands it. The raw vector rides along (arrays round-trip
-    Arrow exactly) so cell-join consumers need no second corpus scan."""
-    cents = np.asarray(centroids, dtype=np.float64)
-    books = np.asarray(codebooks, dtype=np.float64)
-    bnds = np.asarray(bounds, dtype=np.float64)
-    m, _ksub, dsub = books.shape
-    lo, hi = bnds[0], bnds[1]
-    span = hi - lo
-    # np.where evaluates both branches — divide only where span > 0
-    scale = np.divide(255.0, span, out=np.zeros_like(span), where=span > 0)
-    sc = df.sparkSession.sparkContext
-    b_c, b_b = sc.broadcast(cents), sc.broadcast(books)
-    b_lo, b_sc = sc.broadcast(lo), sc.broadcast(scale)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cells = _sq_dists(mat, b_c.value).argmin(axis=1).astype("int32")
-            pq = np.empty((len(mat), m), dtype=np.int32)
-            for s in range(m):
-                sub = mat[:, s * dsub : (s + 1) * dsub]
-                pq[:, s] = _sq_dists(sub, b_b.value[s]).argmin(axis=1)
-            sq = np.rint(
-                np.clip((mat - b_lo.value) * b_sc.value, 0.0, 255.0)
-            ).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    vec_col: pdf[vec_col].values,
-                    "cell": cells,
-                    "pq_code": list(pq),
-                    "sq_code": list(sq),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        run,
-        f"{id_col} long, {vec_col} array<double>, cell int, "
-        "pq_code array<int>, sq_code array<long>",
-    )
+    each saved pass is a full corpus scan). Values and types are
+    BIT-IDENTICAL to the per-method encoders — ``ivf_assign``,
+    ``pq_encode`` and ``sq_encode`` run the same encode pass with one
+    model each (asserted in tests/test_llm_ops.py) — so a consumer
+    slicing this frame computes exactly what the standalone encoder
+    hands it. The raw vector rides along (arrays round-trip Arrow
+    exactly) so cell-filtered consumers need no second corpus scan."""
+    return _index_pass(
+        df, id_col, vec_col, centroids, codebooks, bounds, with_vec=True
+    ).drop("dist")
 
 
 def semantic_dedup(
@@ -837,87 +846,6 @@ def semantic_dedup(
     )
 
 
-def save_quantizers(
-    spark,
-    model_dir: str,
-    centroids: "np.ndarray",
-    codebooks: "np.ndarray | None" = None,
-    mode: str = "overwrite",
-) -> int:
-    """Persist trained ANN quantizers — IVF centroids (k, dim) and
-    optionally PQ codebooks (m, ksub, dsub) — as a VERSIONED table
-    (round 13, the registry rung under the LM-model pattern): serving
-    pins a version (``load_quantizers(version=...)``) so assignments
-    stay reproducible while a drift-triggered retrain publishes the
-    next version, and the whole versioned-table surface (time travel,
-    tags, rollback, vacuum retention, clone) applies to the model
-    artifact for free. float64 vectors round-trip BIT-EXACTLY through
-    the array<double> parquet column (asserted in tests), so a loaded
-    quantizer reproduces the in-memory one's assignments row for row.
-    Rows: (kind, i, j, vec) — ('centroid', cell, 0, ·) and
-    ('codebook', subspace, code, ·). Returns the committed version."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        commit_version,
-    )
-
-    rows = [
-        ("centroid", int(i), 0, [float(x) for x in c])
-        for i, c in enumerate(np.asarray(centroids, dtype=np.float64))
-    ]
-    if codebooks is not None:
-        cb = np.asarray(codebooks, dtype=np.float64)
-        rows += [
-            ("codebook", int(s), int(c), [float(x) for x in cb[s, c]])
-            for s in range(cb.shape[0])
-            for c in range(cb.shape[1])
-        ]
-    df = spark.createDataFrame(
-        rows, "kind string, i int, j int, vec array<double>"
-    )
-    # repartition(1), not coalesce(1): coalescing a Python local
-    # relation funnels every pickled slice through one sequential
-    # Python-worker task — measured 3-6 s for a tiny frame vs ~0.3 s
-    # through the shuffle (round 14); parquet-derived frames don't hit
-    # this, local relations do
-    return commit_version(
-        df.repartition(1), model_dir, mode=mode, stats_cols=["kind"]
-    )
-
-
-def load_quantizers(
-    spark,
-    model_dir: str,
-    version: "int | None" = None,
-    tag: "str | None" = None,
-) -> "tuple[np.ndarray, np.ndarray | None]":
-    """(centroids, codebooks-or-None) from the registry at a pinned
-    version/tag (default latest). Model-sized collect — k·dim +
-    m·ksub·dsub doubles, never corpus-sized."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        read_version,
-    )
-
-    rows = read_version(
-        spark, model_dir, version=version, tag=tag
-    ).collect()
-    cents = sorted(
-        ((r.i, r.vec) for r in rows if r.kind == "centroid"),
-    )
-    centroids = np.array([v for _i, v in cents], dtype=np.float64)
-    cb_rows = sorted(
-        ((r.i, r.j, r.vec) for r in rows if r.kind == "codebook"),
-    )
-    if not cb_rows:
-        return centroids, None
-    m = 1 + max(i for i, _j, _v in cb_rows)
-    ksub = 1 + max(j for _i, j, _v in cb_rows)
-    dsub = len(cb_rows[0][2])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for i, j, v in cb_rows:
-        books[i, j] = v
-    return centroids, books
-
-
 def semantic_dedup_residual(
     df: DataFrame,
     dedup: DataFrame,
@@ -995,6 +923,181 @@ def ivf_drift_ratio(
     return mean_assign_distance(new_df, centroids, id_col, vec_col) / train_mean_dist
 
 
+class _Raw:
+    """Exact cosine, ``cosine_topk_pandas``'s score: normalize both
+    sides, then one matmul per block."""
+
+    dtype = np.float64
+
+    def __init__(self, q_mat: "np.ndarray"):
+        self.q = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+
+    def score(self, mat: "np.ndarray", qs) -> "np.ndarray":
+        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        return mat @ self.q[qs].T
+
+
+class _PQ:
+    """Asymmetric-distance (ADC) cosine over PQ codes: each query
+    carries an (m, ksub) table of subspace partial dots, the approximate
+    dot is a gather-sum over a row's codes, and the denominator is
+    max(||x̂||·||q||, 1e-12) with ||x̂|| from the per-subspace
+    squared-norm table — exact for the RECONSTRUCTED vector."""
+
+    dtype = np.int64
+
+    def __init__(self, q_mat: "np.ndarray", books: "np.ndarray"):
+        m, _ksub, dsub = books.shape
+        # (|Q|, m, ksub) dot LUT + (m, ksub) code squared-norm partials
+        self.luts = np.einsum(
+            "qsd,skd->qsk", q_mat.reshape(len(q_mat), m, dsub), books
+        )
+        self.code_sq = (books**2).sum(axis=2)
+        self.qnorm = np.sqrt((q_mat**2).sum(axis=1))
+
+    def score(self, codes: "np.ndarray", qs) -> "np.ndarray":
+        subs = np.arange(codes.shape[1])
+        dots = self.luts[qs][:, subs, codes].sum(axis=2).T
+        rnorm = np.sqrt(self.code_sq[subs, codes].sum(axis=1))
+        return dots / np.maximum(rnorm[:, None] * self.qnorm[None, qs], 1e-12)
+
+
+class _SQ:
+    """SQ8 cosine against the RECONSTRUCTED vectors: decode the codes,
+    then one matmul per block over max(||x̂||·||q||, 1e-12)."""
+
+    dtype = np.int64
+
+    def __init__(self, q_mat: "np.ndarray", bounds: "np.ndarray"):
+        self.q, self.bounds = q_mat, bounds
+        self.qnorm = np.sqrt((q_mat**2).sum(axis=1))
+
+    def score(self, codes: "np.ndarray", qs) -> "np.ndarray":
+        recon = sq_decode_mat(codes, self.bounds)
+        rnorm = np.sqrt((recon**2).sum(axis=1))
+        denom = np.maximum(rnorm[:, None] * self.qnorm[None, qs], 1e-12)
+        return (recon @ self.q[qs].T) / denom
+
+
+def _query_matrix(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    q_pandas: "pd.DataFrame | None" = None,
+) -> "tuple[np.ndarray, np.ndarray]":
+    """(ids, float64 matrix) of the query set, collected by one action.
+    ``q_pandas`` is the ``queries.select(id_col, vec_col).toPandas()``
+    frame, handed in when several ANN variants share one collect."""
+    qp = (
+        queries.select(id_col, vec_col).toPandas()
+        if q_pandas is None
+        else q_pandas
+    )
+    return (
+        qp[id_col].to_numpy(),
+        np.array(qp[vec_col].tolist(), dtype=np.float64),
+    )
+
+
+def _probers(
+    q_mat: "np.ndarray", cents: "np.ndarray", n_probe: int
+) -> "list[np.ndarray]":
+    """Per IVF cell, the indices of the queries whose ``n_probe``
+    nearest centroids include it."""
+    near = np.argsort(_sq_dists(q_mat, cents), axis=1)[:, :n_probe]
+    return [np.flatnonzero((near == c).any(axis=1)) for c in range(len(cents))]
+
+
+def _cut(scores: "np.ndarray", n_cand: int) -> "np.ndarray":
+    """The candidate cut, a (rows, queries) mask: per query column,
+    every finite score at or above that column's ``n_cand``-th best.
+    A tie at the boundary keeps all of its rows, so the ``desc score,
+    asc neighbor_id`` window downstream still sees the lowest tied id —
+    a fixed-size top-``n_cand`` would pick among the ties arbitrarily.
+    Non-finite scores (excluded pairs; a zero vector's NaN) never
+    qualify."""
+    finite = np.isfinite(scores)
+    if len(scores) <= n_cand:
+        return finite
+    s = np.where(finite, scores, -np.inf)
+    nth = -np.partition(-s, n_cand - 1, axis=0)[n_cand - 1]
+    return finite & (s >= nth)
+
+
+def _scan_batch(
+    ids: "np.ndarray",
+    mat: "np.ndarray",
+    cells: "np.ndarray | None",
+    q_ids: "np.ndarray",
+    codec,
+    probers: "list[np.ndarray] | None",
+    n_cand: int,
+) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """(query index, row index, score) of one batch's candidates. With
+    ``cells``, each cell's rows are scored only against the queries
+    that probe it (work ≈ n_probe/n_clusters of the full block);
+    self-pairs are excluded BEFORE the cut, so they take no slot."""
+    if cells is None:
+        s = codec.score(mat, slice(None))
+    else:
+        s = np.full((len(ids), len(q_ids)), -np.inf)
+        for c in np.unique(cells):
+            qs = probers[c]
+            if len(qs):
+                rows = np.flatnonzero(cells == c)
+                s[np.ix_(rows, qs)] = codec.score(mat[rows], qs)
+    s[ids[:, None] == q_ids[None, :]] = -np.inf
+    rows, qs = np.nonzero(_cut(s, n_cand))
+    return qs, rows, s[rows, qs]
+
+
+def _topk_scan(
+    rows: DataFrame,
+    id_col: str,
+    col: str,
+    q_ids: "np.ndarray",
+    codec,
+    n_cand: int,
+    out: str,
+    probers: "list[np.ndarray] | None" = None,
+) -> DataFrame:
+    """The one candidate scan: ``(query_id, neighbor_id, <out>)`` for
+    every row of each Arrow batch of ``rows`` that survives the
+    tie-safe per-query cut at ``n_cand`` (``_cut``), scored by
+    ``codec`` over column ``col`` (raw vectors or codes). The codec and
+    the query ids are broadcast; ``rows`` never shuffles. With
+    ``probers``, ``rows`` carries a ``cell`` column and the IVF cell
+    filter applies. A query's global top ``n_cand`` by (score desc, id
+    asc) is inside the union of its per-batch survivors, so the rows
+    crossing the next exchange are O(|Q|·n_cand) per batch, never
+    O(batch·|Q|)."""
+    cols = [id_col, col] + (["cell"] if probers is not None else [])
+    b_scan = rows.sparkSession.sparkContext.broadcast((q_ids, codec, probers))
+
+    def scan(batches):
+        q_ids, codec, probers = b_scan.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            qi, ri, s = _scan_batch(
+                ids,
+                np.array(pdf[col].tolist(), dtype=codec.dtype),
+                None if probers is None else pdf["cell"].to_numpy(),
+                q_ids,
+                codec,
+                probers,
+                n_cand,
+            )
+            yield pd.DataFrame(
+                {"query_id": q_ids[qi], "neighbor_id": ids[ri], out: s}
+            )
+
+    return rows.select(*cols).mapInPandas(
+        scan, f"query_id long, neighbor_id long, {out} double"
+    )
+
+
 def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1007,10 +1110,12 @@ def cosine_topk_ivf(
     assigned: "DataFrame | None" = None,
 ) -> DataFrame:
     """IVF ANN: corpus inverted by nearest centroid, queries probe their
-    ``n_probe`` closest centroids, exact cosine rerank inside the probed
-    cells — same join shape as the LSH variant (shuffle on cell id,
-    never a cross join), with data-adaptive cells instead of random
-    hyperplanes. Candidate fraction ≈ n_probe/n_clusters.
+    ``n_probe`` closest centroids, exact cosine scoring inside the
+    probed cells only — candidate fraction ≈ n_probe/n_clusters, with
+    data-adaptive cells instead of LSH's random hyperplanes. Scale
+    shape: one Arrow indexing pass (centroids broadcast) and the shared
+    scan with the cell filter (queries broadcast); no join, the corpus
+    never shuffles, and only per-batch survivors reach the rank window.
 
     ``assigned``: a pre-assigned ``(id_col, vec_col, cell)`` frame —
     e.g. a ``quantizer_index`` slice over the SAME centroids — replaces
@@ -1022,56 +1127,15 @@ def cosine_topk_ivf(
         raise ValueError("assigned= needs the centroids its cells were built with")
     if centroids is None:
         centroids = kmeans_centroids(corpus, id_col, vec_col, k=n_clusters)
-    spark = corpus.sparkSession
-    b_c = spark.sparkContext.broadcast(centroids)
-
-    @pandas_udf(IntegerType())
-    def cell_of(v: pd.Series) -> pd.Series:
-        m = np.array(v.tolist(), dtype=np.float64)
-        d = _sq_dists(m, b_c.value)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    n_probe_ = n_probe
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probe_cells(v: pd.Series) -> pd.Series:
-        m = np.array(v.tolist(), dtype=np.float64)
-        d = _sq_dists(m, b_c.value)
-        order = np.argsort(d, axis=1)[:, :n_probe_].astype("int32")
-        return pd.Series(list(order))
-
-    if assigned is not None:
-        cb = assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            "cell",
-        )
-    else:
-        cb = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            cell_of(F.col(vec_col)).alias("cell"),
-        )
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
+    cents = np.asarray(centroids, dtype=np.float64)
+    if assigned is None:
+        assigned = _index_pass(corpus, id_col, vec_col, cents, with_vec=True)
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col)
+    cand = _topk_scan(
+        assigned, id_col, vec_col, q_ids, _Raw(q_mat), k, "cos",
+        _probers(q_mat, cents, n_probe),
     )
-    scored = (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_pandas(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_k(cand, k)
 
 
 def cosine_topk_pandas(
@@ -1086,40 +1150,9 @@ def cosine_topk_pandas(
     one BLAS matmul per batch. Use when dim·k make the codegen kernel
     the bottleneck; semantics identical to cosine_topk_bruteforce
     except scores are float64 numpy (same rounding class)."""
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_mat = spark.sparkContext.broadcast(q_mat)
-
-    def score(batches):
-        for pdf in batches:
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_mat @ b_mat.value.T  # |batch| × |Q|
-            n_ids = pdf[id_col].to_numpy()
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(b_ids.value, len(n_ids)),
-                    "neighbor_id": np.tile(n_ids, len(b_ids.value)),
-                    "cos": sims.T.ravel(),
-                }
-            )
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col)
+    cand = _topk_scan(corpus, id_col, vec_col, q_ids, _Raw(q_mat), k, "cos")
+    return _rank_k(cand, k)
 
 
 def pq_train_codebooks(
@@ -1142,79 +1175,11 @@ def pq_train_codebooks(
     per-subspace generalization): deterministic init (the ``ksub``
     lowest-id vectors' subvectors — no RNG), then per iteration ONE
     ``mapInPandas`` pass emits (subspace, cluster → sum, count)
-    partials — m·ksub·(dim/m) = m·ksub-scaled floats per partition,
-    the classic combiner shape — and the driver reduces. Nothing
-    corpus-sized reaches the driver. Raises when ``m`` does not divide
-    the dimension (ragged subspaces quantize asymmetrically)."""
-    init = (
-        df.orderBy(id_col).limit(ksub).select(vec_col).toPandas()[vec_col].tolist()
-    )
-    init_m = np.array(init, dtype=np.float64)
-    dim = init_m.shape[1]
-    if dim % m:
-        raise ValueError(f"m={m} does not divide dim={dim}")
-    dsub = dim // m
-    # (m, ksub, dsub): subspace s starts from the same ksub seed rows
-    books = np.stack(
-        [init_m[:, s * dsub : (s + 1) * dsub] for s in range(m)]
-    )
-
-    for _ in range(iters):
-        b_b = df.sparkSession.sparkContext.broadcast(books)
-
-        def partials(batches):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            acc_s: dict = {}
-            acc_n: dict = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                for s in range(b_b.value.shape[0]):
-                    sub = mat[:, s * dsub : (s + 1) * dsub]
-                    d = _sq_dists(sub, b_b.value[s])
-                    a = d.argmin(axis=1)
-                    for c in np.unique(a):
-                        sel = sub[a == c]
-                        key = (s, int(c))
-                        acc_s[key] = acc_s.get(key, 0) + sel.sum(axis=0)
-                        acc_n[key] = acc_n.get(key, 0) + len(sel)
-            rows = [
-                {
-                    "sub": s,
-                    "cluster": c,
-                    "pid": pid,
-                    "vsum": acc_s[(s, c)].tolist(),
-                    "n": int(acc_n[(s, c)]),
-                }
-                for (s, c) in acc_s
-            ]
-            yield pd.DataFrame(
-                rows, columns=["sub", "cluster", "pid", "vsum", "n"]
-            )
-
-        agg = (
-            df.select(vec_col)
-            .mapInPandas(
-                partials,
-                "sub int, cluster int, pid int, vsum array<double>, n long",
-            )
-            .collect()
-        )
-        # Canonical reduce order — same rationale as kmeans_centroids:
-        # collect order is nondeterministic, float sums are order-
-        # sensitive, and an ulp-different codebook can flip near-tied
-        # code assignments run to run (VERDICT r8 "What's wrong #3").
-        sums = np.zeros_like(books)
-        counts = np.zeros((m, ksub))
-        for r in sorted(agg, key=lambda r: (r.sub, r.cluster, r.pid)):
-            sums[r.sub][r.cluster] += np.array(r.vsum)
-            counts[r.sub][r.cluster] += r.n
-        nz = counts > 0
-        books[nz] = sums[nz] / counts[nz][:, None]
-    return books
+    partials — m·ksub·(dim/m) floats per partition, the classic
+    combiner shape — and the driver reduces them in canonical order.
+    Nothing corpus-sized reaches the driver. Raises when ``m`` does not
+    divide the dimension (ragged subspaces quantize asymmetrically)."""
+    return _lloyd(df, id_col, vec_col, 0, m, ksub, iters)[1]
 
 
 def pq_encode(
@@ -1229,27 +1194,9 @@ def pq_encode(
     batch regardless of corpus size (the PQ twin of ``ivf_assign``).
     The coded corpus is what the ADC scan in ``cosine_topk_pq``
     reads."""
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, _ksub, dsub = books.shape
-    b_b = df.sparkSession.sparkContext.broadcast(books)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for s in range(m):
-                sub = mat[:, s * dsub : (s + 1) * dsub]
-                d = _sq_dists(sub, b_b.value[s])
-                codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "code": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        run, f"{id_col} long, code array<int>"
-    )
+    return _index_pass(
+        df, id_col, vec_col, codebooks=codebooks
+    ).withColumnRenamed("pq_code", "code")
 
 
 def pq_decode_mat(codes: "np.ndarray", codebooks: "np.ndarray") -> "np.ndarray":
@@ -1283,8 +1230,9 @@ def cosine_topk_pq(
     table of subspace partial dots, approximate cosine is a pure
     gather-sum, and only the top ``k·rerank_factor`` candidates per
     query are reranked against their RAW vectors. Scale shape: the ADC
-    pass is mapInPandas over the coded corpus with queries broadcast —
-    no shuffle, no candidate explosion; the rerank join touches
+    pass is the shared scan over the coded corpus with queries
+    broadcast — no shuffle, no candidate explosion (tie-safe per-batch
+    cut at ``k·rerank_factor``); the rerank join touches
     |Q|·k·rerank_factor corpus rows (broadcast semi-join on id), which
     is hit-sized at any corpus size. Pass ``coded=`` (from
     ``pq_encode``) to reuse a stored code table — the production path;
@@ -1304,59 +1252,10 @@ def cosine_topk_pq(
     books = np.asarray(codebooks, dtype=np.float64)
     if coded is None:
         coded = pq_encode(corpus, books, id_col, vec_col)
-    spark = corpus.sparkSession
-    # q_pandas: the queries.select(id_col, vec_col).toPandas() frame,
-    # handed in when several ANN variants share one driver collect
-    qp = (
-        queries.select(id_col, vec_col).toPandas()
-        if q_pandas is None
-        else q_pandas
-    )
-    q_ids = qp[id_col].to_numpy()
-    q_mat = np.array(qp[vec_col].tolist(), dtype=np.float64)
-    mm, _ksub_, dsub = books.shape
-    # (|Q|, m, ksub) dot LUT + (m, ksub) code squared-norm partials
-    luts = np.einsum(
-        "qsd,skd->qsk",
-        q_mat.reshape(len(q_mat), mm, dsub),
-        books,
-    )
-    code_sq = (books**2).sum(axis=2)  # (m, ksub)
-    q_norm = np.sqrt((q_mat**2).sum(axis=1))
-    b_lut = spark.sparkContext.broadcast(luts)
-    b_sq = spark.sparkContext.broadcast(code_sq)
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_qn = spark.sparkContext.broadcast(q_norm)
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col, q_pandas)
     n_cand = k * rerank_factor
-
-    def adc(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.array(pdf["code"].tolist(), dtype=np.int64)
-            n_ids = pdf[id_col].to_numpy()
-            subs = np.arange(mm)
-            # gather-sum: approx dot (|batch|, |Q|) and recon norms
-            dots = b_lut.value[:, subs, codes].sum(axis=2).T
-            rnorm = np.sqrt(b_sq.value[subs, codes].sum(axis=1))
-            denom = np.maximum(rnorm[:, None] * b_qn.value[None, :], 1e-12)
-            approx = dots / denom
-            # per-batch local top candidates only: the emitted rows are
-            # O(|Q|·n_cand) per BATCH, never O(batch rows)
-            top = min(n_cand, len(n_ids))
-            idx = np.argpartition(-approx, top - 1, axis=0)[:top]
-            qcol = np.repeat(b_ids.value[None, :], top, axis=0)
-            yield pd.DataFrame(
-                {
-                    "query_id": qcol.ravel(),
-                    "neighbor_id": n_ids[idx].ravel(),
-                    "approx": np.take_along_axis(approx, idx, axis=0).ravel(),
-                }
-            )
-
-    cand = (
-        coded.mapInPandas(adc, "query_id long, neighbor_id long, approx double")
-        .where(F.col("query_id") != F.col("neighbor_id"))
+    cand = _topk_scan(
+        coded, id_col, "code", q_ids, _PQ(q_mat, books), n_cand, "approx"
     )
     return _exact_rerank(corpus, queries, cand, k, n_cand, id_col, vec_col)
 
@@ -1375,13 +1274,8 @@ def _exact_rerank(
     those rows' raw vectors back (hit-sized broadcast semi-join at any
     corpus size), and rescore exactly — returned (rank, cos) are true
     cosines; recall is the only approximation."""
-    w0 = Window.partitionBy("query_id").orderBy(
-        F.desc("approx"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("r0", F.row_number().over(w0))
-        .where(F.col("r0") <= n_cand)
-        .select("query_id", "neighbor_id")
+    shortlist = _rank_k(cand, n_cand, "approx").select(
+        "query_id", "neighbor_id"
     )
     cvec = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
@@ -1398,12 +1292,7 @@ def _exact_rerank(
             cosine_pandas(F.col("q_vec"), F.col("c_vec")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_k(scored, k)
 
 
 def cosine_topk_ivfpq(
@@ -1426,19 +1315,19 @@ def cosine_topk_ivfpq(
     i.e. the index actually deployed at billion-vector scale: a coarse
     quantizer limits WHICH candidates are touched (queries probe
     ``n_probe`` of ``n_clusters`` cells — candidate fraction ≈
-    n_probe/n_clusters), product quantization limits WHAT rides the
-    join (16 int codes per candidate instead of the raw vector), ADC
+    n_probe/n_clusters), product quantization limits WHAT the scan
+    reads (16 int codes per candidate instead of the raw vector), ADC
     lookup tables score the candidates, and the exact rerank fixes the
-    shortlist. Each lever composes: IVF alone still drags full vectors
-    through the cell join; PQ alone still scans every code; together
-    the scan touches a cell fraction of CODES. This variant quantizes
-    raw vectors (not per-cell residuals — simpler, and the exact
-    rerank absorbs the accuracy difference).
+    shortlist. Each lever composes: IVF alone still scores full
+    vectors; PQ alone still scans every code; together the scan scores
+    a cell fraction of CODES. This variant quantizes raw vectors (not
+    per-cell residuals — simpler, and the exact rerank absorbs the
+    accuracy difference).
 
     Shuffle shape: one Arrow indexing pass (cell + code, both
-    broadcast-side models), a broadcast join of the exploded query
-    probes on cell id, a vectorized ADC gather per candidate row, and
-    the shared hit-sized exact rerank.
+    broadcast-side models), the shared scan with the cell filter
+    (queries' LUTs broadcast, no join), and the shared hit-sized exact
+    rerank.
 
     ``indexed`` requires the ``centroids`` and ``codebooks`` it was
     built with: recomputing either would mismatch the pre-built cells
@@ -1455,92 +1344,20 @@ def cosine_topk_ivfpq(
         )
     cents = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
-    mm, _ksub_, dsub = books.shape
-    spark = corpus.sparkSession
-    b_c = spark.sparkContext.broadcast(cents)
-    b_b = spark.sparkContext.broadcast(books)
-
-    def index_rows(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            dc = _sq_dists(mat, b_c.value)
-            cells = dc.argmin(axis=1).astype("int32")
-            codes = np.empty((len(mat), mm), dtype=np.int32)
-            for s in range(mm):
-                sub = mat[:, s * dsub : (s + 1) * dsub]
-                d = _sq_dists(sub, b_b.value[s])
-                codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].values,
-                    "cell": cells,
-                    "code": list(codes),
-                }
-            )
-
     # ``indexed``: a pre-built (id, cell, code) frame — a
     # ``quantizer_index`` slice over the SAME centroids/codebooks —
-    # replaces the in-line indexing pass; cells and codes are the
-    # identical argmins, so candidates and ADC scores are unchanged
-    if indexed is not None:
-        cb = indexed.select(
-            F.col(id_col).alias("neighbor_id"), "cell", "code"
-        )
-    else:
-        cb = corpus.select(id_col, vec_col).mapInPandas(
-            index_rows, "neighbor_id long, cell int, code array<int>"
-        )
-    qp = (
-        queries.select(id_col, vec_col).toPandas()
-        if q_pandas is None
-        else q_pandas
+    # replaces the in-line indexing pass; same encoders, same values
+    if indexed is None:
+        indexed = _index_pass(
+            corpus, id_col, vec_col, cents, books
+        ).withColumnRenamed("pq_code", "code")
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col, q_pandas)
+    n_cand = k * rerank_factor
+    cand = _topk_scan(
+        indexed, id_col, "code", q_ids, _PQ(q_mat, books), n_cand, "approx",
+        _probers(q_mat, cents, n_probe),
     )
-    q_ids = qp[id_col].to_numpy()
-    q_mat = np.array(qp[vec_col].tolist(), dtype=np.float64)
-    luts = np.einsum(
-        "qsd,skd->qsk", q_mat.reshape(len(q_mat), mm, dsub), books
-    )
-    code_sq = (books**2).sum(axis=2)
-    q_norm = np.sqrt((q_mat**2).sum(axis=1))
-    dq = _sq_dists(q_mat, cents)
-    probes = np.argsort(dq, axis=1)[:, :n_probe]
-    b_lut = spark.sparkContext.broadcast(luts)
-    b_sq = spark.sparkContext.broadcast(code_sq)
-    b_qn = spark.sparkContext.broadcast(q_norm)
-    qb = spark.createDataFrame(
-        [
-            (int(q_ids[i]), int(i), int(c))
-            for i in range(len(q_ids))
-            for c in probes[i]
-        ],
-        "query_id long, q_idx int, cell int",
-    )
-
-    @pandas_udf(DoubleType())
-    def adc_score(code: pd.Series, qi: pd.Series) -> pd.Series:
-        codes = np.array(code.tolist(), dtype=np.int64)
-        qiv = qi.to_numpy()
-        subs = np.arange(codes.shape[1])
-        dots = b_lut.value[qiv[:, None], subs[None, :], codes].sum(axis=1)
-        rn = np.sqrt(b_sq.value[subs[None, :], codes].sum(axis=1))
-        return pd.Series(
-            dots / np.maximum(rn * b_qn.value[qiv], 1e-12)
-        )
-
-    cand = (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            adc_score(F.col("code"), F.col("q_idx")).alias("approx"),
-        )
-    )
-    return _exact_rerank(
-        corpus, queries, cand, k, k * rerank_factor, id_col, vec_col
-    )
+    return _exact_rerank(corpus, queries, cand, k, n_cand, id_col, vec_col)
 
 
 def sq_train_bounds(
@@ -1571,33 +1388,12 @@ def sq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, code: array<int>) — each dimension rounded to its 0..255
+    """(id, code: array<long>) — each dimension rounded to its 0..255
     step. Arrow pass, no shuffle, O(batch) anywhere. A degenerate
     dimension (hi == lo) codes to 0 and decodes to exactly lo."""
-    lo, hi = bounds[0], bounds[1]
-    span = hi - lo
-    # np.where evaluates both branches — divide only where span > 0
-    scale = np.divide(
-        255.0, span, out=np.zeros_like(span), where=span > 0
-    )
-    b_lo = df.sparkSession.sparkContext.broadcast(lo)
-    b_sc = df.sparkSession.sparkContext.broadcast(scale)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.rint(
-                np.clip((mat - b_lo.value) * b_sc.value, 0.0, 255.0)
-            ).astype(np.int64)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "code": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        run, f"{id_col} long, code array<long>"
-    )
+    return _index_pass(
+        df, id_col, vec_col, bounds=bounds
+    ).withColumnRenamed("sq_code", "code")
 
 
 def sq_decode_mat(
@@ -1625,7 +1421,7 @@ def cosine_topk_sq(
     float32), score approximate cosine against the RECONSTRUCTED
     vectors (exact for the grid point, so ranking error is pure
     quantization distortion — much smaller than PQ's at the same
-    corpus), keep per-batch local top ``k·rerank_factor`` candidates,
+    corpus), keep the tie-safe per-batch top ``k·rerank_factor``,
     and exact-rerank the hit-sized shortlist against raw vectors —
     the same audited tail as the LSH/IVF/PQ twins, so returned
     (rank, cos) are true cosines and recall is the only approximation.
@@ -1636,45 +1432,10 @@ def cosine_topk_sq(
     bounds = np.asarray(bounds, dtype=np.float64)
     if coded is None:
         coded = sq_encode(corpus, bounds, id_col, vec_col)
-    spark = corpus.sparkSession
-    qp = (
-        queries.select(id_col, vec_col).toPandas()
-        if q_pandas is None
-        else q_pandas
-    )
-    q_ids = qp[id_col].to_numpy()
-    q_mat = np.array(qp[vec_col].tolist(), dtype=np.float64)
-    q_norm = np.sqrt((q_mat**2).sum(axis=1))
-    b_q = spark.sparkContext.broadcast(q_mat)
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_qn = spark.sparkContext.broadcast(q_norm)
-    b_bounds = spark.sparkContext.broadcast(bounds)
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col, q_pandas)
     n_cand = k * rerank_factor
-
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.array(pdf["code"].tolist(), dtype=np.int64)
-            recon = sq_decode_mat(codes, b_bounds.value)
-            n_ids = pdf[id_col].to_numpy()
-            rnorm = np.sqrt((recon**2).sum(axis=1))
-            denom = np.maximum(rnorm[:, None] * b_qn.value[None, :], 1e-12)
-            approx = (recon @ b_q.value.T) / denom
-            top = min(n_cand, len(n_ids))
-            idx = np.argpartition(-approx, top - 1, axis=0)[:top]
-            qcol = np.repeat(b_ids.value[None, :], top, axis=0)
-            yield pd.DataFrame(
-                {
-                    "query_id": qcol.ravel(),
-                    "neighbor_id": n_ids[idx].ravel(),
-                    "approx": np.take_along_axis(approx, idx, axis=0).ravel(),
-                }
-            )
-
-    cand = (
-        coded.mapInPandas(scan, "query_id long, neighbor_id long, approx double")
-        .where(F.col("query_id") != F.col("neighbor_id"))
+    cand = _topk_scan(
+        coded, id_col, "code", q_ids, _SQ(q_mat, bounds), n_cand, "approx"
     )
     return _exact_rerank(corpus, queries, cand, k, n_cand, id_col, vec_col)
 
@@ -1695,15 +1456,14 @@ def cosine_topk_ivfsq(
 ) -> DataFrame:
     """IVF+SQ composite ANN — FAISS ``IVF{n},SQ8``, the composite
     picked when PQ's distortion is too coarse but raw vectors are too
-    big: the coarse quantizer bounds WHICH candidates ride the cell
-    join (n_probe/n_clusters fraction), SQ8 bounds WHAT rides it (one
+    big: the coarse quantizer bounds WHICH candidates are scored
+    (n_probe/n_clusters fraction), SQ8 bounds WHAT the scan reads (one
     uint8 per dimension — 4x smaller than float32, far lower
     distortion than PQ's m-byte codes), candidates score against the
     reconstructed vectors, and the shared exact rerank fixes the
     shortlist so returned cosines are true. Same shuffle shape as
     ``cosine_topk_ivfpq``: one Arrow indexing pass (cell + code, both
-    models broadcast), a broadcast join of the exploded query probes
-    on cell id, vectorized scoring per candidate row, hit-sized
+    models broadcast), the shared scan with the cell filter, hit-sized
     rerank.
 
     ``indexed`` requires the ``centroids`` and ``bounds`` it was built
@@ -1719,83 +1479,17 @@ def cosine_topk_ivfsq(
         bounds = sq_train_bounds(corpus, vec_col)
     cents = np.asarray(centroids, dtype=np.float64)
     bnds = np.asarray(bounds, dtype=np.float64)
-    lo, hi = bnds[0], bnds[1]
-    span = hi - lo
-    scale = np.divide(255.0, span, out=np.zeros_like(span), where=span > 0)
-    spark = corpus.sparkSession
-    b_c = spark.sparkContext.broadcast(cents)
-    b_lo = spark.sparkContext.broadcast(lo)
-    b_sc = spark.sparkContext.broadcast(scale)
-    b_bnds = spark.sparkContext.broadcast(bnds)
-
-    def index_rows(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            dc = _sq_dists(mat, b_c.value)
-            cells = dc.argmin(axis=1).astype("int32")
-            codes = np.rint(
-                np.clip((mat - b_lo.value) * b_sc.value, 0.0, 255.0)
-            ).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].values,
-                    "cell": cells,
-                    "code": list(codes),
-                }
-            )
-
     # ``indexed``: a pre-built (id, cell, code) frame — a
     # ``quantizer_index`` slice over the SAME centroids/bounds —
-    # replaces the in-line indexing pass; identical argmin/rint values
-    if indexed is not None:
-        cb = indexed.select(
-            F.col(id_col).alias("neighbor_id"), "cell", "code"
-        )
-    else:
-        cb = corpus.select(id_col, vec_col).mapInPandas(
-            index_rows, "neighbor_id long, cell int, code array<int>"
-        )
-    qp = (
-        queries.select(id_col, vec_col).toPandas()
-        if q_pandas is None
-        else q_pandas
+    # replaces the in-line indexing pass; same encoders, same values
+    if indexed is None:
+        indexed = _index_pass(
+            corpus, id_col, vec_col, cents, bounds=bnds
+        ).withColumnRenamed("sq_code", "code")
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col, q_pandas)
+    n_cand = k * rerank_factor
+    cand = _topk_scan(
+        indexed, id_col, "code", q_ids, _SQ(q_mat, bnds), n_cand, "approx",
+        _probers(q_mat, cents, n_probe),
     )
-    q_ids = qp[id_col].to_numpy()
-    q_mat = np.array(qp[vec_col].tolist(), dtype=np.float64)
-    q_norm = np.sqrt((q_mat**2).sum(axis=1))
-    dq = _sq_dists(q_mat, cents)
-    probes = np.argsort(dq, axis=1)[:, :n_probe]
-    b_q = spark.sparkContext.broadcast(q_mat)
-    b_qn = spark.sparkContext.broadcast(q_norm)
-    qb = spark.createDataFrame(
-        [
-            (int(q_ids[i]), int(i), int(c))
-            for i in range(len(q_ids))
-            for c in probes[i]
-        ],
-        "query_id long, q_idx int, cell int",
-    )
-
-    @pandas_udf(DoubleType())
-    def sq_score(code: pd.Series, qi: pd.Series) -> pd.Series:
-        codes = np.array(code.tolist(), dtype=np.int64)
-        recon = sq_decode_mat(codes, b_bnds.value)
-        qiv = qi.to_numpy()
-        dots = (recon * b_q.value[qiv]).sum(axis=1)
-        rn = np.sqrt((recon**2).sum(axis=1))
-        return pd.Series(dots / np.maximum(rn * b_qn.value[qiv], 1e-12))
-
-    cand = (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            sq_score(F.col("code"), F.col("q_idx")).alias("approx"),
-        )
-    )
-    return _exact_rerank(
-        corpus, queries, cand, k, k * rerank_factor, id_col, vec_col
-    )
+    return _exact_rerank(corpus, queries, cand, k, n_cand, id_col, vec_col)

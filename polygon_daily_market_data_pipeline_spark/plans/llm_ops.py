@@ -681,7 +681,7 @@ def embedding_ann_ivf(
     ``ivf`` — coarse quantization (the data-adaptive scale path:
     corpus inverted by nearest k-means centroid, queries probe n_probe
     of n_clusters cells — candidate fraction ≈ n_probe/n_clusters,
-    join stays a broadcast on cell id). Floor 0.5 vs measured mean
+    the cell filter runs inside the corpus scan, no join). Floor 0.5 vs measured mean
     recall 0.607 (sf0.01) / 0.620 (sf0.1) at n_probe=4/16 — these
     synthetic near-uniform 64-dim vectors are IVF's worst case
     (neighbors straddle cell boundaries); real clustered corpora sit
@@ -706,8 +706,8 @@ def embedding_ann_ivf(
     driver-prices the last standalone quantization rung.
 
     ``ivfsq`` — the OTHER composite (FAISS ``IVF{n},SQ8``): coarse
-    cells bound WHICH candidates ride the join, one uint8/dim bounds
-    WHAT rides it; reuses this query's shared centroids AND SQ bounds,
+    cells bound WHICH candidates are scored, one uint8/dim bounds
+    WHAT the scan reads; reuses this query's shared centroids AND SQ bounds,
     so the audit adds no training. Recall is IVF-bounded exactly like
     ivfpq: measured 0.81 (sf0.01) / 0.77 (sf0.1) at n_probe=6 vs the
     0.5 floor. With this row the full quantized-index matrix —
@@ -716,7 +716,7 @@ def embedding_ann_ivf(
 
     ``ivfpq`` — the COMPOSITE (FAISS IVF{n},PQ{m}): the coarse
     quantizer limits which candidates are touched, PQ codes limit what
-    rides the cell join, ADC scores, exact rerank fixes the shortlist.
+    the scan reads, ADC scores, exact rerank fixes the shortlist.
     Recall is IVF-bounded (the probed cells cap it): floor 0.5 vs
     measured 0.77-0.79 at n_probe=6/16 — the rerank recovers PQ's
     distortion but not an unprobed cell.
@@ -749,7 +749,7 @@ def embedding_ann_ivf(
     # every query stage as its OWN scheduled job, and this query's
     # shuffles are query/hit-sized at ANY corpus
     # size (the rerank windows partition |Q|·k·rerank rows; the
-    # candidate joins are explicit broadcasts; the corpus-sized work —
+    # rerank joins are explicit broadcasts; the corpus-sized work —
     # Lloyd partials, the shared index, the coded scans — is
     # shuffle-free mapInPandas where AQE never applies). Every audit
     # value is partition-independent: training reduces in canonical
@@ -781,7 +781,7 @@ def embedding_ann_ivf(
     # r10 #5 — the warehouse trio's co-scheduling pattern): training and
     # the brute-force baseline share no dependency, and the three audit
     # pipelines only need both — serially the audits dominated the
-    # query (each is its own chain of encode passes + a candidate join
+    # query (each is its own chain of encode passes + a candidate scan
     # with driver-side gaps between jobs, exactly what the FIFO
     # scheduler interleaves well). Audit values cannot move with
     # scheduling: training happens-before all three audits and is
@@ -962,7 +962,8 @@ def embedding_ann_ivf(
         )
     if eager:
         # the audits are materialized (checkpointed) — release the
-        # per-call index cache; the lazy plan_audit path keeps it live
+        # per-call index cache; the lazy frame still reads it, so
+        # tools/plan_audit.py drops it after taking the plan
         idx.unpersist()
     return (
         ivf.unionByName(ivfpq)

@@ -27,7 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polygon_daily_market_data_pipeline_spark.plans.analytics import register
-from polygon_daily_market_data_pipeline_spark.session import with_conf
+from polygon_daily_market_data_pipeline_spark.session import (
+    release_stream_bus,
+    with_conf,
+)
 from polygon_daily_market_data_pipeline_spark.streaming.events_stream import (
     hourly_event_counts,
     sessionize_stream,
@@ -71,7 +74,9 @@ def run_available_now(
     self-contained run (the driver contract calls queries repeatedly).
     The stream starts on a clone of ``stream_df``'s session that carries
     the width and provider below (``session.with_conf``); the caller's
-    conf is not touched, and the result table lives on the clone.
+    conf is not touched, and the result table lives on the clone. Once
+    the stream has terminated, the clone's listener bus is released
+    (``session.release_stream_bus``).
 
     The state store is 8 partitions wide (a stream pins
     ``spark.sql.shuffle.partitions`` at first start, permanently via the
@@ -105,6 +110,7 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
+    release_stream_bus(stream_df.sparkSession)
     return stream_df.sparkSession.table(name)
 
 

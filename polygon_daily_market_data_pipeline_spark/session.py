@@ -72,6 +72,29 @@ def with_conf(
     return DataFrame(dataset.ofRows(jclone, target._jdf.logicalPlan()), clone)
 
 
+def release_stream_bus(clone: SparkSession) -> None:
+    """Take ``clone``'s streaming listener bus off the context's
+    ``LiveListenerBus``; call it once the clone's last stream has
+    terminated. Starting a stream creates the session's
+    ``StreamingQueryManager``, whose bus is never removed, so every
+    drain on a fresh ``with_conf`` clone would leak one. The terminate
+    event is posted before ``awaitTermination`` returns; waiting for the
+    bus to drain first delivers it to the listeners. If the bus does not
+    drain within 10 s, the clone's bus is left in place: a leaked bus
+    is better than a lost event."""
+    from py4j.protocol import Py4JJavaError
+
+    manager = clone._jsparkSession.streams()
+    field = manager.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    live = clone.sparkContext._jsc.sc().listenerBus()
+    try:
+        live.waitUntilEmpty(10_000)
+    except Py4JJavaError:
+        return
+    live.removeListener(field.get(manager))
+
+
 def _own_listeners(jsession) -> list:
     """The session's own ``StreamingQueryListener``s: all but Spark's
     shared streaming-UI status listener, which every new

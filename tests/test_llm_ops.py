@@ -1198,6 +1198,7 @@ def test_quantizer_index_matches_per_method_encoders(spark):
     import numpy as np
 
     from polygon_daily_market_data_pipeline_spark.operators.similarity import (
+        cosine_topk_ivfsq,
         ivf_assign,
         pq_encode,
         quantizer_index,
@@ -1227,6 +1228,22 @@ def test_quantizer_index_matches_per_method_encoders(spark):
         assert list(r["sq_code"]) == sq[vid]
         assert list(r["embedding"]) == raw[vid]  # exact float64 round-trip
     assert np.array_equal(bounds, np.asarray(bounds, dtype=np.float64))
+    # the in-line IVF+SQ index pass emits the same code type
+    plan = cosine_topk_ivfsq(
+        emb, emb.limit(3), k=1, centroids=cents, bounds=bounds
+    )._jdf.queryExecution().analyzed()
+    types, stack = {}, [plan]
+    while stack:
+        node = stack.pop()
+        out, kids = node.output(), node.children()
+        types.update(
+            (out.apply(i).name(), out.apply(i).dataType().simpleString())
+            for i in range(out.size())
+        )
+        stack += [kids.apply(i) for i in range(kids.size())]
+    assert types["sq_code"] == (
+        sq_encode(emb, bounds).schema["code"].dataType.simpleString()
+    )
 
 
 def test_prebuilt_ann_index_requires_its_quantizers(spark):
@@ -1592,55 +1609,6 @@ def test_semdedup_residual_catches_planted_boundary_pair(spark):
     assert semantic_dedup_residual(clean, sd2, tau=0.9).count() == 0
 
 
-def test_quantizer_registry_roundtrip_and_pinned_serving(spark, tmp_path):
-    """The ANN model registry: save/load round-trips centroids and PQ
-    codebooks BIT-EXACTLY, a pinned version keeps serving the
-    pre-retrain quantizer (assignments row-identical to the in-memory
-    original) after a retrain publishes the next version, and a
-    centroids-only model loads with codebooks=None."""
-    import numpy as np
-
-    from polygon_daily_market_data_pipeline_spark.operators.similarity import (
-        ivf_assign,
-        load_quantizers,
-        save_quantizers,
-        train_quantizers,
-    )
-    from polygon_daily_market_data_pipeline_spark.sources.tables import (
-        load_table,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    a = emb.where("vec_id % 2 = 0")
-    b = emb.where("vec_id % 2 = 1")
-    cents, books = train_quantizers(a, k=8, m=8, ksub=8, iters=2)
-    mdir = str(tmp_path / "quant")
-    v0 = save_quantizers(spark, mdir, cents, books)
-    lc, lb = load_quantizers(spark, mdir)
-    assert np.array_equal(lc, cents) and np.array_equal(lb, books)
-    # retrain on different data, publish v1 — the registry moves on
-    cents2, books2 = train_quantizers(b, k=8, m=8, ksub=8, iters=2)
-    save_quantizers(spark, mdir, cents2, books2)
-    lc2, _ = load_quantizers(spark, mdir)
-    assert not np.array_equal(lc2, cents)
-    # pinned serving: v0 reproduces the original assignments exactly
-    pc, pb = load_quantizers(spark, mdir, version=v0)
-    assert np.array_equal(pc, cents) and np.array_equal(pb, books)
-    key = lambda r: (r.vec_id, r.cell)  # noqa: E731
-    probe = emb.limit(60)
-    assert sorted(
-        key(r) for r in ivf_assign(probe, pc).select("vec_id", "cell").collect()
-    ) == sorted(
-        key(r)
-        for r in ivf_assign(probe, cents).select("vec_id", "cell").collect()
-    )
-    # centroids-only registry
-    mdir2 = str(tmp_path / "quant2")
-    save_quantizers(spark, mdir2, cents)
-    oc, ob = load_quantizers(spark, mdir2)
-    assert np.array_equal(oc, cents) and ob is None
-
-
 def _lm_corpus(spark, sf="/root/testdata/sf0.001"):
     from polygon_daily_market_data_pipeline_spark.sources.tables import (
         load_table,
@@ -1949,3 +1917,128 @@ def test_ivfsq_topk_recall_ivf_bounded(spark):
     }
     ivf_recall = len(ivf & set(exact_pairs)) / len(exact_pairs)
     assert recall >= ivf_recall - 0.05
+
+
+def test_quantized_topk_keeps_tied_duplicates_like_bruteforce(spark):
+    """Exact duplicate vectors tie on every codec's approximate score
+    and on the exact cosine. Each query here has eight copies of its
+    nearest vector while the candidate cut keeps k·rerank_factor = 3 per
+    query, so the ties straddle the cut: PQ and SQ must still hand the
+    rerank the lowest tied ids and return the brute-force pairs."""
+    import numpy as np
+
+    from polygon_daily_market_data_pipeline_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+        cosine_topk_pq,
+        cosine_topk_sq,
+        sq_train_bounds,
+    )
+
+    near_a, near_b = [1.0, 0.2, 0.1, 0.0], [0.0, 0.1, 1.0, 0.3]
+    rows = (
+        [(i, near_a) for i in range(1, 9)]
+        + [(i, near_b) for i in range(11, 19)]
+        + [(21, [0.5, 0.5, 0.5, 0.5]), (22, [0.0, 1.0, 0.0, 1.0])]
+        + [(100, [1.0, 0.25, 0.05, 0.0]), (101, [0.0, 0.15, 1.0, 0.25])]
+    )
+    # one partition, so one Arrow batch holds every tie
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).repartition(1)
+    q = emb.where("vec_id >= 100")
+    # per subspace: the two duplicate halves, the two query halves
+    books = np.array(
+        [
+            [[1.0, 0.2], [0.0, 0.1], [1.0, 0.25], [0.0, 0.15]],
+            [[0.1, 0.0], [1.0, 0.3], [0.05, 0.0], [1.0, 0.25]],
+        ]
+    )
+    pairs = lambda df: {(r.query_id, r.neighbor_id) for r in df.collect()}  # noqa: E731
+    exact = pairs(cosine_topk_bruteforce(emb, q, k=3))
+    assert exact == {(100, 1), (100, 2), (100, 3), (101, 11), (101, 12), (101, 13)}
+    assert pairs(
+        cosine_topk_pq(emb, q, k=3, rerank_factor=1, codebooks=books)
+    ) == exact
+    assert pairs(
+        cosine_topk_sq(
+            emb, q, k=3, rerank_factor=1, bounds=sq_train_bounds(emb)
+        )
+    ) == exact
+
+
+def test_candidate_cut_keeps_every_tie_at_the_nth_score():
+    """Spark-free: the scan kernel's cut keeps, per query column, every
+    row scoring at or above the column's n-th best — ties straddling
+    the n-th score all survive, so the (desc score, asc id) window
+    after it still sees the lowest tied id. Non-finite scores never
+    survive."""
+    import numpy as np
+
+    from polygon_daily_market_data_pipeline_spark.operators.similarity import (
+        _cut,
+    )
+
+    s = np.array(
+        [
+            [0.9, 0.1],
+            [0.5, 0.7],
+            [0.5, 0.7],
+            [0.5, 0.2],
+            [0.3, -np.inf],
+            [np.nan, 0.7],
+        ]
+    )
+    keep = _cut(s, 2)
+    # column 0: the 2nd best, 0.5, is held by three rows
+    assert keep[:, 0].tolist() == [True, True, True, True, False, False]
+    # column 1: three rows tie at the best score
+    assert keep[:, 1].tolist() == [False, True, True, False, False, True]
+    # n_cand at or past the finite rows: every finite score
+    assert _cut(s, 5)[:, 1].tolist() == [True, True, True, True, False, True]
+    assert _cut(s[:2], 2).all()
+    # against a per-column sort, on scores drawn from few values
+    rng = np.random.default_rng(7)
+    for n_cand in (1, 3, 8):
+        r = rng.integers(0, 4, size=(40, 5)) / 4.0
+        got = _cut(r, n_cand)
+        for j in range(r.shape[1]):
+            nth = np.sort(r[:, j])[::-1][n_cand - 1]
+            assert (got[:, j] == (r[:, j] >= nth)).all()
+
+
+def test_scan_batch_filters_cells_and_drops_self_pairs_before_the_cut():
+    """Spark-free: with the IVF cell filter each cell's rows are scored
+    only against the queries that probe it, and a query's own row is
+    excluded before the cut, so it takes no candidate slot."""
+    import numpy as np
+
+    from polygon_daily_market_data_pipeline_spark.operators.similarity import (
+        _scan_batch,
+    )
+
+    class Dot:
+        dtype = np.float64
+        scored = 0
+
+        def __init__(self, q):
+            self.q = q
+
+        def score(self, mat, qs):
+            out = mat @ self.q[qs].T
+            Dot.scored += out.size
+            return out
+
+    ids = np.array([1, 2, 3, 4])
+    mat = np.array([[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.2, 0.8]])
+    q_ids = np.array([1, 9])
+    codec = Dot(np.array([[1.0, 0.0], [0.0, 1.0]]))
+    cells = np.array([0, 0, 1, 1])
+    probers = [np.array([0]), np.array([1])]
+    qi, ri, s = _scan_batch(ids, mat, cells, q_ids, codec, probers, 1)
+    assert Dot.scored == 4  # 2 rows × 1 query per cell, not 4 × 2
+    # query 1's best row is itself (score 1.0): the slot goes to id 2
+    got = sorted(zip(q_ids[qi].tolist(), ids[ri].tolist(), s.tolist()))
+    assert got == [(1, 2, 0.9), (9, 3, 1.0)]
+    # no cell filter: every row against every query
+    qi, ri, _ = _scan_batch(ids, mat, None, q_ids, codec, None, 1)
+    assert sorted(zip(q_ids[qi].tolist(), ids[ri].tolist())) == [(1, 2), (9, 3)]

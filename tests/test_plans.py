@@ -165,23 +165,27 @@ def test_topk_per_group_gets_group_limit(spark):
     assert re.search(r"windowspecdefinition\(nation", plan), plan
 
 
-def test_ivf_ann_is_broadcast_equi_join_on_cell(spark):
-    """The IVF scale path must be an equi-join on the inverted-list cell
-    id with the (small) probing side broadcast — never a pairwise cross
-    join. This is the property that keeps it O(corpus · n_probe/n_clusters)
-    at 100 TB. (Asserted on the raw operator — the registered query wraps
-    it in a recall audit whose brute-force baseline is an intended cross
-    join.)"""
+def test_ivf_ann_scans_the_corpus_without_a_join(spark):
+    """The IVF scale path filters cells inside the corpus scan: each
+    cell's rows are scored only against the queries that probe it, so
+    there is no join at all — never a pairwise cross join, and no
+    exploded-probe join either. The corpus never shuffles: the plan's
+    one exchange is the rank window's, on query_id, over the scan's
+    per-batch survivors. This is the property that keeps it
+    O(corpus · n_probe/n_clusters) at 100 TB. (Asserted on the raw
+    operator — the registered query wraps it in a recall audit whose
+    brute-force baseline is an intended cross join.)"""
     from polygon_daily_market_data_pipeline_spark.operators.similarity import (
         cosine_topk_ivf,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     plan = explain(cosine_topk_ivf(emb, emb.where("vec_id < 100"), k=3))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert re.search(r"Left keys \[1\]: \[cell#\d+\]", plan), plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    # the indexing pass and the scan
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 2, plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    assert "Arguments: hashpartitioning(query_id#" in plan, plan
 
 
 def test_no_accidental_cartesian_or_nested_loop_anywhere(spark):

@@ -124,6 +124,44 @@ def test_drain_on_a_clone_reaches_caller_listeners(spark, tmp_path):
     assert caller.conf.get(WIDTH) == "3"
 
 
+def test_drains_leave_the_listener_bus_alone(spark, tmp_path):
+    """Each drain starts its stream on a fresh clone, whose streaming
+    manager adds a listener bus to the context's LiveListenerBus; the
+    drain removes it once the stream has terminated, with or without a
+    caller listener."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from polygon_daily_market_data_pipeline_spark.plans.streaming_queries import (
+        run_available_now,
+    )
+
+    class Quiet(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    plain, heard = _caller(spark), _caller(spark)
+    heard.streams.addListener(Quiet())
+    for caller in (plain, heard):
+        stream = caller.readStream.schema("id long").parquet(src)
+        run_available_now(stream, "t_bus")  # one-time shared-state setup
+        before = bus.listeners().size()
+        for _ in range(5):
+            assert run_available_now(stream, "t_bus").count() == 5
+        assert bus.listeners().size() == before
+
+
 def test_with_conf_leaves_the_listener_bus_alone(spark):
     """A clone gets the caller's own streaming listeners only: Spark's
     shared streaming-UI status listener is registered by every new

@@ -156,7 +156,7 @@ def audit(sf_dir: str) -> list[dict]:
         elif name == "embedding_ann_ivf":
             # round 11: the registered query checkpoints its three audit
             # rows inside worker threads (co-scheduled audits); audit the
-            # LAZY union so the real encode/join plans stay inspectable
+            # LAZY union so the real encode/scan plans stay inspectable
             from polygon_daily_market_data_pipeline_spark.plans.llm_ops import (
                 embedding_ann_ivf,
             )
@@ -172,6 +172,11 @@ def audit(sf_dir: str) -> list[dict]:
             r"PushedFilters: \[\]", plan
         ) else ("n/a" if "PushedFilters" not in plan else "none")
         rows.append(row)
+        # Drop what the query persisted (embedding_ann_ivf's lazy path
+        # keeps its corpus, baseline and shared index cached for the
+        # plan above), so no later query's plan reads an earlier
+        # query's cache. Nothing is cached before the first query.
+        spark.catalog.clearCache()
     import shutil
 
     for base in scratch:
