@@ -302,25 +302,3 @@ def continuous_bars(
     for c in ffill:
         out = out.withColumn(f"{c}_ffill", F.last(c, ignorenulls=True).over(w))
     return out
-
-
-def ohlc_bars(
-    df: DataFrame,
-    every: str = "1 hour",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """Candlestick bars: tumbling ``every`` windows (per optional
-    ``group_cols``, e.g. symbol) with OHLC + tick count. One groupBy —
-    shuffles once on (groups, window), the same plan a plain windowed
-    count costs."""
-    keys = [
-        F.window(ts_col, every).start.alias("bar_start"),
-        *[F.col(c) for c in (group_cols or [])],
-    ]
-    return df.groupBy(*keys).agg(
-        *ohlc_aggs(ts_col, value_col, tiebreak_col),
-        F.count(F.lit(1)).cast("long").alias("n_ticks"),
-    )

@@ -206,24 +206,6 @@ def lang_id(col: Column | str) -> Column:
     return F.when(best <= 0, F.lit("und")).otherwise(result)
 
 
-def char_shingles(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams of the normalized text — the shingle
-    unit for scripts without whitespace word boundaries (CJK), where
-    ``word_shingles`` would see one giant token. Same downstream
-    contract as word_shingles (array<string>, empty when too short),
-    so every dedup operator accepts either via its ``shingle_fn``-style
-    composition point.
-
-    Same one-regex-pass construction as ``word_shingles``: a
-    zero-width lookahead captures ``n`` chars at every position
-    (consuming one char per match ⇒ overlapping windows in document
-    order); DOTALL so a normalized stray newline can't truncate a
-    window."""
-    t = normalize_text(col)
-    pat = r"(?s)(?=(" + ("." * n) + r"))."
-    return F.array_distinct(F.regexp_extract_all(t, F.lit(pat), 1))
-
-
 def chunk_starts(toks: Column, chunk: int, overlap: int) -> Column:
     """1-based start offsets of sliding chunks: step = chunk − overlap,
     last chunk may be short; single chunk when the doc fits."""

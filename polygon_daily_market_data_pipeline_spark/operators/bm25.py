@@ -150,50 +150,6 @@ def bm25_topk(
     )
 
 
-def rrf_fuse(
-    rankings: "list[DataFrame]",
-    k: int = 5,
-    *,
-    c: int = 60,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al. 2009) — the standard
-    hybrid-search combiner: given N rankings (each (query_id, rank,
-    id)), score every candidate Σ_i 1/(c + rank_i) over the rankings
-    that returned it and take the top k. Rank-based, so the fused
-    lists need no score calibration between retrievers (BM25 scores
-    and cosine similarities are incomparable; ranks are not) — fuse
-    ``bm25_topk`` with ``cosine_topk_*`` output over a shared id
-    space. All inputs are top-k-sized; the fusion is candidate-sized
-    work regardless of corpus size. Deterministic under the
-    (fused DESC, id ASC) total order."""
-    if not rankings:
-        raise ValueError("rankings is empty")
-    parts = [
-        r.select(
-            "query_id",
-            F.col(id_col),
-            (1.0 / (F.lit(c) + F.col("rank"))).alias("_rrf"),
-        )
-        for r in rankings
-    ]
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    fused = u.groupBy("query_id", id_col).agg(
-        F.sum("_rrf").alias("rrf_score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "rrf_score")
-        .orderBy("query_id", "rank")
-    )
-
-
 def mmr_rerank(
     candidates: DataFrame,
     vectors: DataFrame,
@@ -366,32 +322,3 @@ def bm25_topk_from_index(
         None, queries, k, id_col=id_col, k1=k1, b=b,
         postings=postings, doc_lens=doc_lens,
     )
-
-
-def prune_postings(
-    postings: DataFrame,
-    doc_count: int,
-    *,
-    min_df: int = 1,
-    max_df_ratio: float = 1.0,
-) -> DataFrame:
-    """The index-size/skew gate the serving layout wants: drop terms
-    with document frequency below ``min_df`` (hapax noise that bloats
-    the index without ever ranking anything) and above
-    ``max_df_ratio·doc_count`` (stopwords — the ONE skewed key this
-    layout has, whose postings lists are corpus-sized and whose BM25
-    idf is ≈0 anyway). One aggregate + a semi join on the term key;
-    scoring through a pruned index changes only the gated terms'
-    contributions — exactly the terms whose idf made them noise."""
-    if min_df <= 1 and max_df_ratio >= 1.0:
-        return postings
-    keep = (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(
-            (F.col("_df") >= min_df)
-            & (F.col("_df") <= float(max_df_ratio) * doc_count)
-        )
-        .select("term")
-    )
-    return postings.join(keep, "term", "left_semi")

@@ -234,16 +234,6 @@ def _sidecar_ndv_at(
     )
 
 
-def sidecar_ndv(
-    table_dir: str, col: str, version: "int | None" = None
-) -> "int | None":
-    """The column's NDV estimate from the newest ANALYZE sidecar at or
-    before ``version`` (the KMV estimator — exact below k), or None
-    when the column was never analyzed. Pure metadata read."""
-    res = _sidecar_ndv_at(table_dir, col, version)
-    return None if res is None else res[0]
-
-
 def key_skew_ratio(
     table_dir: str, col: str, version: "int | None" = None
 ) -> "float | None":

@@ -1,58 +1,18 @@
-"""Training-shard export: the hand-off from Spark to a training loader.
+"""Training export: the hand-off from Spark to a training loader.
 
-Loaders want (a) shards of a predictable row count, (b) a global
-shuffle that is REPRODUCIBLE per seed (epoch N must be re-creatable),
-(c) a line-oriented format. ``rand()`` breaks (b) under retries and
-repartitioning; the deterministic shuffle key is the same md5 trick as
-sampling: ``md5(seed || key)`` gives a uniform, engine-independent
-total order, ``repartitionByRange`` on it makes shard ASSIGNMENT
-deterministic, and ``sortWithinPartitions`` makes shard CONTENT ORDER
-deterministic — byte-identical output for a given (data, seed, shards).
-
-Cost: one range-partitioning shuffle (with a sampling pass for range
-boundaries) — the price of determinism; at 100 TB it is the same
-shuffle an ORDER BY would pay.
+Loaders want rows of a predictable token length and a mix that is
+REPRODUCIBLE per seed (epoch N must be re-creatable). ``rand()`` breaks
+that under retries and repartitioning; the deterministic shuffle key is
+the same md5 trick as sampling: ``md5(seed || key)`` gives a uniform,
+engine-independent total order, ``repartitionByRange`` on it makes the
+partition ASSIGNMENT deterministic, and ``sortWithinPartitions`` makes
+the ORDER within each partition deterministic.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def shuffled_shards(
-    df: DataFrame,
-    key: str,
-    rows_per_shard: int,
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministically shuffled frame, range-partitioned into
-    ⌈n/rows_per_shard⌉ shards (one output file each on write)."""
-    n = df.count()
-    shards = max(1, math.ceil(n / rows_per_shard))
-    h = F.md5(F.concat(F.lit(str(seed)), F.lit(":"), F.col(key).cast("string")))
-    return (
-        df.withColumn("_shuffle", h)
-        .repartitionByRange(shards, "_shuffle")
-        .sortWithinPartitions("_shuffle")
-        .drop("_shuffle")
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    key: str,
-    rows_per_shard: int = 10_000,
-    seed: int = 0,
-    fmt: str = "json",
-) -> int:
-    """Write shuffled shards (JSONL by default); returns shard count."""
-    out = shuffled_shards(df, key, rows_per_shard, seed)
-    out.write.mode("overwrite").format(fmt).save(path)
-    return out.rdd.getNumPartitions()
 
 
 def pack_sequences(
@@ -70,8 +30,8 @@ def pack_sequences(
 
     The packing itself is inherently sequential, so it runs per
     PARTITION (mapInPandas): chunks are first deterministically
-    shuffled and range-partitioned by the same md5(seed||id) key as
-    ``shuffled_shards`` — so (a) the mix within each packed sequence is
+    shuffled and range-partitioned by the md5(seed||id) key (module
+    docstring) — so (a) the mix within each packed sequence is
     random-but-reproducible per seed, (b) partitions pack
     independently, no coordination, and (c) the only waste is one
     partial bin per partition (negligible: bins-per-partition ≫ 1 at

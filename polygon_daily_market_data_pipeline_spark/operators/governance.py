@@ -32,7 +32,7 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -287,56 +287,6 @@ def governed_columns(table_dir: str) -> "set[str]":
         # over-broad (keywords included) but refusal-side conservative
         cols |= set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", pol["sql"]))
     return cols
-
-
-def k_anonymity_violations(
-    df: DataFrame, quasi_cols: "list[str]", k: int
-) -> DataFrame:
-    """Quasi-identifier groups that re-identify: combinations of
-    ``quasi_cols`` values shared by FEWER than ``k`` rows (k-anonymity,
-    Sweeney 2002 — the privacy bar a governed export is usually held
-    to). One groupBy; NULL quasi values form their own group, exactly
-    as an attacker would treat them. Returns (quasi_cols...,
-    group_size) ordered smallest-first."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    return (
-        df.groupBy(*[F.col(c) for c in quasi_cols])
-        .agg(F.count(F.lit(1)).alias("group_size"))
-        .where(F.col("group_size") < k)
-        .orderBy("group_size", *quasi_cols)
-    )
-
-
-def enforce_k_anonymity(
-    df: DataFrame,
-    quasi_cols: "list[str]",
-    k: int,
-    mode: str = "suppress",
-) -> DataFrame:
-    """The export-safe frame: rows in under-k quasi-identifier groups
-    are either dropped (``mode='suppress'`` — the conservative
-    default) or kept with their quasi columns NULLed
-    (``mode='generalize'`` — row counts survive for aggregate
-    consumers; the nulled rows collapse into the NULL group, which is
-    ≥ their own group's size, so the output is k-anonymous whenever
-    the surviving NULL group itself reaches k or the caller re-checks).
-    One window count per group — the same shuffle the violation scan
-    costs; fail-closed: an unknown mode refuses."""
-    if mode not in ("suppress", "generalize"):
-        raise ValueError(f"unknown mode {mode!r} (suppress | generalize)")
-    w = Window.partitionBy(*[F.col(c) for c in quasi_cols])
-    sized = df.withColumn("_ksize", F.count(F.lit(1)).over(w))
-    if mode == "suppress":
-        return sized.where(F.col("_ksize") >= k).drop("_ksize")
-    small = F.col("_ksize") < k
-    out = sized
-    for c in quasi_cols:
-        dtype = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))[c]
-        out = out.withColumn(
-            c, F.when(small, F.lit(None).cast(dtype)).otherwise(F.col(c))
-        )
-    return out.drop("_ksize")
 
 
 def _mask_expr(col: str, mask: dict, dtype) -> "F.Column":

@@ -266,46 +266,3 @@ def pruning_stats_multi(path: str, preds: dict) -> tuple[int, int]:
         if hit:
             overlapping += 1
     return total, overlapping
-
-
-def bloom_filter_options(ndv_by_col: dict[str, int]) -> dict[str, str]:
-    """Parquet bloom-filter write options for point-lookup columns.
-
-    Min/max envelopes (z-order above) prune RANGE predicates; for
-    equality probes on high-cardinality, unclustered keys (content
-    md5s, event ids) the footer bloom filter is the complementary
-    lever: ~1 byte/value for a 1% false-positive rate lets a scan skip
-    a row group without touching data pages. Usage:
-
-        opts = bloom_filter_options({"event_id": 2_000_000})
-        w = df.write.mode("overwrite")
-        for k, v in opts.items():
-            w = w.option(k, v)
-    """
-    opts: dict[str, str] = {}
-    for col, ndv in ndv_by_col.items():
-        opts[f"parquet.bloom.filter.enabled#{col}"] = "true"
-        opts[f"parquet.bloom.filter.expected.ndv#{col}"] = str(int(ndv))
-    return opts
-
-
-def bloom_filter_offsets(spark, file_path: str) -> dict[str, int]:
-    """Per-column bloom-filter footer offsets of one parquet file
-    (-1 = no bloom filter), via parquet-mr on the session classpath —
-    pyarrow/duckdb in this environment do not surface bloom metadata.
-    Introspection/test helper, not a data path."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path(file_path)
-    inf = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
-    rd = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inf)
-    try:
-        out: dict[str, int] = {}
-        cols = rd.getFooter().getBlocks().get(0).getColumns()
-        for i in range(cols.size()):
-            c = cols.get(i)
-            name = ".".join(c.getPath().toArray())
-            out[name] = int(c.getBloomFilterOffset())
-        return out
-    finally:
-        rd.close()

@@ -49,9 +49,8 @@ def bigram_surprisal_scores(
     cross join — the plan stays nested-loop-free suite-wide); a hash
     re-join of counts to the grams on the keys the count shuffle
     already clustered; and a per-doc sum. No UDF, no driver-side state
-    beyond two longs. The trained "model" IS the counts frame —
-    persist it to score future batches without retraining (the CCNet
-    deployment shape)."""
+    beyond two longs. The "model" is the counts frame, rebuilt from
+    the corpus on every call."""
     from pyspark.storagelevel import StorageLevel
 
     from polygon_daily_market_data_pipeline_spark.operators.text_dedup import (
@@ -97,148 +96,6 @@ def bigram_surprisal_scores(
     return unpersist_after_action(out, (grams, counts))
 
 
-# --- persisted, incrementally-maintained model (round 13, VERDICT ----
-# r12 #5): the CCNet deployment shape the docstring above promises.
-# The model IS a versioned table of (g, c) bigram counts, maintained
-# log-structured: ``train_bigram_model(mode="update")`` APPENDS only
-# the new batch's counts (O(batch) write — never touches the stored
-# model), the scorer folds duplicate g rows with one SUM aggregate at
-# read time (integer addition — the merge is exact by construction,
-# the same additivity ``analyze_incremental`` exploits), and
-# ``compact_bigram_model`` periodically rewrites the folded counts so
-# read cost stays O(V) instead of O(appends). Incremental == full
-# retrain EXACTLY (integer counts; pinned as a pytest law), and
-# scoring reads ONLY the model table plus the batch being scored —
-# zero passes over the historical corpus.
-
-
-def _batch_bigram_counts(docs: DataFrame, text_col: str) -> DataFrame:
-    return (
-        docs.select(F.explode(word_ngrams_all(text_col, 2)).alias("g"))
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-
-
-def train_bigram_model(
-    docs: DataFrame,
-    model_dir: str,
-    *,
-    text_col: str = "text",
-    mode: str = "overwrite",
-) -> int:
-    """Train (``mode="overwrite"``) or incrementally extend
-    (``mode="update"``) the persisted bigram model at ``model_dir``.
-    Returns the committed model version.
-
-    Update cost is O(new batch): one gram pass over the NEW docs and
-    an APPEND commit of their (g, c) counts — the stored counts are
-    never read, rewritten, or shuffled. Exactness falls out of integer
-    additivity: Σ over appended count rows per g == the count a full
-    retrain over the union corpus would produce."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        commit_version,
-    )
-
-    if mode not in ("overwrite", "update"):
-        raise ValueError(f"unknown mode {mode!r}")
-    return commit_version(
-        _batch_bigram_counts(docs, text_col),
-        model_dir,
-        mode="append" if mode == "update" else "overwrite",
-        stats_cols=["g", "c"],
-    )
-
-
-def compact_bigram_model(spark, model_dir: str) -> int:
-    """Fold the log-structured appends into one (g, c) row per bigram —
-    the model's OPTIMIZE. Score-invariant by construction (the scorer
-    already folds at read time); run it when the append count grows
-    past a few dozen so scoring's read-side SUM stays O(V)."""
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        commit_version,
-        read_version,
-    )
-
-    folded = (
-        read_version(spark, model_dir)
-        .groupBy("g")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-    return commit_version(folded, model_dir, stats_cols=["g", "c"])
-
-
-def score_with_bigram_model(
-    spark,
-    model_dir: str,
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    model_version: "int | None" = None,
-) -> DataFrame:
-    """Score ``docs`` against the STORED model — one row per doc,
-    ``(id, n_bigrams, surprisal)``, the exact arithmetic of
-    ``bigram_surprisal_scores`` (scoring a training doc against its
-    own model reproduces that function's output bit-for-bit — the
-    consistency law in tests). Bigrams the model never saw take the
-    add-one-smoothed zero-count surprisal ``floor(log2(N + V))``, the
-    rare-sequence ceiling — exactly CCNet's unseen-token posture.
-
-    Inputs are the model table and the batch being scored, nothing
-    else: no pass over the historical corpus, no model write (pin a
-    version with ``model_version`` for replayable scoring under
-    concurrent updates). Scale shape: the model folds in one SUM
-    aggregate (O(appends since compaction)), (N, V) collect as two
-    longs, and the batch's grams hash-join the folded counts."""
-    from pyspark.storagelevel import StorageLevel
-
-    from polygon_daily_market_data_pipeline_spark.operators.text_dedup import (
-        unpersist_after_action,
-    )
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        read_version,
-    )
-
-    counts = (
-        read_version(spark, model_dir, version=model_version)
-        .groupBy("g")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    tot = counts.agg(
-        F.sum("c").alias("N"), F.count(F.lit(1)).alias("V")
-    ).first()
-    nv = int(tot["N"] or 0) + int(tot["V"] or 0)
-    grams = docs.select(
-        F.col(id_col), F.explode(word_ngrams_all(text_col, 2)).alias("g")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    per_doc = (
-        grams.join(counts, "g", "left")
-        .select(
-            id_col,
-            F.expr(
-                f"length(bin(({nv} div (coalesce(c, 0) + 1)))) - 1"
-            ).alias("s"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("s").cast("long").alias("surprisal"),
-        )
-    )
-    out = (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("surprisal", F.lit(0)).cast("long").alias("surprisal"),
-        )
-    )
-    return unpersist_after_action(out, (grams, counts))
-
-
 def dsir_log_weights(
     docs: DataFrame,
     target_docs: DataFrame,
@@ -269,9 +126,7 @@ def dsir_log_weights(
     collect as two longs folded into the scoring expression as
     literals; scoring is two hash joins on the gram key the count
     shuffles already clustered. No UDF, no driver state beyond two
-    longs. For persisted/incrementally-maintained models score twice
-    with ``score_with_bigram_model`` and difference — this in-flight
-    form exists so a selection pass needs no model table writes."""
+    longs, and no model table is written."""
     from pyspark.storagelevel import StorageLevel
 
     from polygon_daily_market_data_pipeline_spark.operators.text_dedup import (

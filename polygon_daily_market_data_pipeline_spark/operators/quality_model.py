@@ -1,130 +1,21 @@
-"""Model-based quality filtering — the trained-classifier stage of
-production LLM data curation (the "fasttext quality classifier"
-pattern: GPT-3's WebText-vs-CommonCrawl LR filter, LLaMA's Wikipedia-
-reference classifier, CCNet's language-model gate). The heuristic
-scores in :mod:`..plans.llm_ops` (length/punct/stopword ratios, LM
-surprisal) are hand-built features; this module closes the family with
-the LEARNED gate: train a sparse logistic-regression classifier to
-separate a REFERENCE ("looks high quality") corpus from the raw
-background, score every document with the model, keep docs above a
-probability threshold.
+"""Model-based quality filtering — the serving half of the trained-
+classifier stage of production LLM data curation (the "fasttext quality
+classifier" pattern: GPT-3's WebText-vs-CommonCrawl LR filter, LLaMA's
+Wikipedia-reference classifier). The heuristic scores in
+:mod:`..plans.llm_ops` (length/punct/stopword ratios, LM surprisal) are
+hand-built features; this module closes the family with a LINEAR gate
+whose coefficients were learned once offline and are served pinned:
+train once on a sample, then score every document with the fixed
+coefficient vector.
 
-Spark-first shape, designed for the 100 TB corpus:
-
-- Features are ``HashingTF`` over the SAME whitespace tokenizer the
-  rest of the engine uses (``functions.text.tokens`` semantics) — a
-  fixed ``num_features`` hash space, so there is NO vocabulary to fit,
-  no second corpus pass, and the trained model is one dense
-  coefficient vector of bounded size (``num_features`` doubles),
-  broadcast to executors at scoring time.
-- Training runs on the JVM (``pyspark.ml`` L-BFGS logistic
-  regression) over the labeled union — reference docs are the
-  positives, a background SAMPLE the negatives. The training set is
-  classifier-sized (typically ≤ millions of rows), never the full
-  corpus: at 100 TB you sample the background, train once, then score
-  everything with the fixed model.
-- Scoring is ``model.transform`` — JVM-side hashing + dot product,
-  one map-shaped pass, no shuffle, no Python in the row path.
-
-Determinism: HashingTF is a pure hash (stable across runs/engines);
-L-BFGS from a fixed zero initialization on a fixed dataset converges
-deterministically for this convex objective, and every test asserts
-ORDERING/separation properties rather than exact coefficients.
-
-This operator family is pytest-evidenced (iterative optimizer — the
-non-SQL-expressible class; same posture as BPE training before its
-r14 audit row).
+Scoring is one codegen'd map pass in exact integer arithmetic, so the
+DuckDB oracle re-derives every score bit-for-bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from polygon_daily_market_data_pipeline_spark.functions.text import tokens
-
-_FEATURES = "qm_features"
-_RAWTOK = "qm_tokens"
-
-
-def _featurize(docs: DataFrame, text_col: str, num_features: int) -> DataFrame:
-    from pyspark.ml.feature import HashingTF
-
-    tok = docs.withColumn(_RAWTOK, tokens(text_col))
-    tf = HashingTF(
-        inputCol=_RAWTOK, outputCol=_FEATURES, numFeatures=num_features
-    )
-    return tf.transform(tok).drop(_RAWTOK)
-
-
-def train_quality_model(
-    reference_docs: DataFrame,
-    background_docs: DataFrame,
-    *,
-    text_col: str = "text",
-    num_features: int = 1 << 18,
-    reg_param: float = 1e-3,
-    max_iter: int = 50,
-):
-    """Train the reference-vs-background classifier. ``reference_docs``
-    are the positives (the distribution you want more of);
-    ``background_docs`` the negatives (a SAMPLE of the raw corpus —
-    pass ``deterministic_sample``'s output at scale, never 100 TB).
-    Returns the fitted ``LogisticRegressionModel`` (its
-    ``.coefficients`` vector is the whole artifact — ``num_features``
-    doubles, broadcastable)."""
-    from pyspark.ml.classification import LogisticRegression
-
-    ref = _featurize(
-        reference_docs.select(F.col(text_col)), text_col, num_features
-    ).withColumn("label", F.lit(1.0))
-    bg = _featurize(
-        background_docs.select(F.col(text_col)), text_col, num_features
-    ).withColumn("label", F.lit(0.0))
-    lr = LogisticRegression(
-        featuresCol=_FEATURES,
-        labelCol="label",
-        regParam=reg_param,
-        maxIter=max_iter,
-        standardization=False,
-    )
-    return lr.fit(ref.unionByName(bg))
-
-
-def quality_model_scores(
-    docs: DataFrame,
-    model,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_features: "int | None" = None,
-) -> DataFrame:
-    """(id, quality_prob) for every document — P(reference | doc)
-    under the trained model. One JVM map pass (hash + broadcast dot
-    product); nothing corpus-sized moves. ``num_features`` must match
-    training when given; defaults to the model's coefficient size."""
-    from pyspark.ml.functions import vector_to_array
-
-    # ADVICE r14: `num_features or model.numFeatures` silently treated
-    # an explicit 0 as unset, and a mismatched value surfaced (if at
-    # all) as an opaque JVM dimension error at transform time
-    n = model.numFeatures if num_features is None else num_features
-    if n != model.numFeatures:
-        raise ValueError(
-            f"num_features={n} does not match the trained model's "
-            f"feature space ({model.numFeatures}) — score with the "
-            "hash width the model was trained on"
-        )
-    feat = _featurize(
-        docs.select(F.col(id_col), F.col(text_col)), text_col, n
-    )
-    # probability is a Vector UDT; element 2 is P(label=1)
-    second = F.element_at(vector_to_array(F.col("probability")), 2)
-    return (
-        model.transform(feat)
-        .select(F.col(id_col), second.alias("quality_prob"))
-    )
-
 
 # The pinned serving coefficients (round 15, VERDICT r14 Next #5):
 # scoring with a FIXED model is a deterministic dot product + monotone
@@ -221,21 +112,3 @@ def pinned_quality_score(
         score.alias("score_ppm"),
         (score >= PINNED_GATE_PPM).alias("keep"),
     )
-
-
-def filter_by_quality_model(
-    docs: DataFrame,
-    model,
-    threshold: float = 0.5,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """``docs`` restricted to documents the model scores at or above
-    ``threshold`` — the Pareto-style keep gate (GPT-3 used a
-    stochastic keep ∝ score; the deterministic threshold form is the
-    reproducible variant). One scoring pass + a semi join on the id."""
-    keep = quality_model_scores(
-        docs, model, id_col=id_col, text_col=text_col
-    ).where(F.col("quality_prob") >= threshold)
-    return docs.join(keep.select(id_col), id_col, "left_semi")

@@ -33,12 +33,6 @@ def _hash_col(key: Column | str) -> Column:
     return F.md5(c.cast("string"))
 
 
-def deterministic_sample(df: DataFrame, key: str, rate: float) -> DataFrame:
-    """Keep ~rate of rows, decided solely by md5(key): no shuffle, no
-    RNG state, identical across engines and re-runs."""
-    return df.where(_hash_col(key) < hex_threshold(rate))
-
-
 def split_column(
     key: Column | str,
     train: float = 0.8,
@@ -93,9 +87,10 @@ def stratified_sample(
     stratum's rows (default_rate elsewhere), decided solely by
     md5(key) — the deterministic per-stratum Bernoulli that training
     mixes need (e.g. keep 90% of high-quality English, 10% of the
-    tail) with every guarantee of :func:`deterministic_sample`:
-    no shuffle, no RNG, engine-portable (the DuckDB oracle reproduces
-    it bit-for-bit), and a kept doc stays kept as the corpus grows."""
+    tail) with every guarantee of the md5-threshold sample (module
+    docstring): no shuffle, no RNG, engine-portable (the DuckDB oracle
+    reproduces it bit-for-bit), and a kept doc stays kept as the
+    corpus grows."""
     return df.where(
         _hash_col(key) < stratified_threshold(strata_col, rates, default_rate)
     )
@@ -121,10 +116,12 @@ def mix_rates_for_token_budget(
 
     A stratum whose SUM is NULL (all-NULL weights) prices as 0
     available — SQL's "no weight" reading, same as an absent stratum
-    (rate 1.0 with shortfall visible); the stats-priced twin reads a
-    recorded-None sidecar sum the same way, so the two planners never
-    diverge."""
-    _check_shares(target_shares)  # fail BEFORE the corpus scan
+    (rate 1.0 with shortfall visible)."""
+    # fail BEFORE the corpus scan
+    if abs(sum(target_shares.values()) - 1.0) > 1e-9:
+        raise ValueError(
+            f"target shares sum to {sum(target_shares.values())}, not 1"
+        )
     if avail is None:
         avail = {
             r[0]: float(r[1]) if r[1] is not None else 0.0
@@ -144,80 +141,11 @@ def mix_rates_for_token_budget(
         avail = {
             k: float(v) if v is not None else 0.0 for k, v in avail.items()
         }
-    return _solve_mix_rates(avail, target_shares, total_budget)
-
-
-def _check_shares(target_shares: "dict[str, float]") -> None:
-    if abs(sum(target_shares.values()) - 1.0) > 1e-9:
-        raise ValueError(
-            f"target shares sum to {sum(target_shares.values())}, not 1"
-        )
-
-
-def _solve_mix_rates(
-    avail: "dict[str, float]",
-    target_shares: "dict[str, float]",
-    total_budget: float,
-) -> "dict[str, float]":
-    """The mixing-plan solver shared by the scan-priced and the
-    stats-priced planners (they must never diverge): validate the
-    shares, then per stratum keep-rate = min(1, want/have) with the
-    under-supply cap at 1.0 (the caller reads rate == 1.0 as the
-    shortfall signal)."""
-    _check_shares(target_shares)
+    # per stratum keep-rate = min(1, want/have); rate 1.0 is the
+    # caller's shortfall signal
     rates = {}
     for stratum, share in target_shares.items():
         have = avail.get(stratum, 0.0)
         want = share * total_budget
         rates[stratum] = 1.0 if have <= want else want / have
     return rates
-
-
-def mix_rates_from_stats(
-    stratum_tables: "dict[str, str]",
-    weight_col: str,
-    target_shares: "dict[str, float]",
-    total_budget: float,
-) -> "dict[str, float]":
-    """:func:`mix_rates_for_token_budget` priced from STATISTICS
-    instead of a scan (round 12, VERDICT r11 #8): each stratum is its
-    own versioned table (the lang-sharded corpus layout), and its
-    available weight is the ANALYZE sidecar's exact integer SUM of
-    ``weight_col`` — a metadata read, zero Spark jobs at any corpus
-    size. Because integer sums merge additively through
-    ``analyze_incremental``, a daily-appended corpus keeps this plan
-    EXACT (law pinned in tests: stats plan == scan plan, before and
-    after appends) — there is no error bound to carry, only a
-    provability gate: a stratum whose sidecar lacks the sum (never
-    analyzed, non-integer weight column, or a legacy sidecar) raises
-    rather than pricing the mix wrong."""
-    import json
-    import os
-
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        _manifests,
-        _stats_path,
-    )
-
-    avail: "dict[str, float]" = {}
-    for stratum, tdir in stratum_tables.items():
-        versions = _manifests(tdir)
-        spath = _stats_path(tdir, versions[-1]) if versions else None
-        if spath is None or not os.path.exists(spath):
-            raise FileNotFoundError(
-                f"stratum {stratum!r}: no ANALYZE sidecar at the latest "
-                f"version of {tdir} — run analyze_version/"
-                f"analyze_incremental first"
-            )
-        with open(spath) as f:
-            st = json.load(f)["columns"].get(weight_col)
-        if st is None or "sum" not in st:
-            raise ValueError(
-                f"stratum {stratum!r}: sidecar records no exact sum for "
-                f"{weight_col!r} (not analyzed, or not an integer column)"
-            )
-        # a RECORDED None is SQL's SUM-over-no-values (empty or
-        # all-NULL stratum): provably 0 available weight — the scan
-        # twin prices it identically (rate 1.0, shortfall visible)
-        avail[stratum] = float(st["sum"]) if st["sum"] is not None else 0.0
-    return _solve_mix_rates(avail, target_shares, total_budget)

@@ -141,31 +141,15 @@ def _index_pass(
     return df.select(id_col, vec_col).mapInPandas(run, ", ".join(schema))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 # NB: a DataType instance, not a DDL string — string return types are
 # parsed eagerly at decoration time and would require a live
 # SparkContext at module import.
 @pandas_udf(DoubleType())
 def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-vectorized pairwise cosine: one numpy pass per batch.
-    The Catalyst HOF `cosine` above is interpreted per element —
-    measured ~10× slower on 10⁵-pair reranks; use this kernel wherever
-    a cosine column is computed over many rows."""
+    The Catalyst HOF form (``cosine_topk_bruteforce``) is interpreted
+    per element — measured ~10× slower on 10⁵-pair reranks; use this
+    kernel wherever a cosine column is computed over many rows."""
     ma = np.array(a.tolist(), dtype=np.float64)
     mb = np.array(b.tolist(), dtype=np.float64)
     num = (ma * mb).sum(axis=1)
@@ -206,6 +190,14 @@ def cosine_topk_bruteforce(
     c = spread_for_compute(corpus, id_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
+
+    def dot(a: str, b: str) -> Column:
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -219,7 +211,10 @@ def cosine_topk_bruteforce(
             # stays JVM-side on codegen'd rows. The BLAS brute force is
             # cosine_topk_pandas below: corpus crosses Arrow ONCE and
             # the |Q| expansion happens inside a numpy matmul.
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
+            (
+                dot("q_vec", "c_vec")
+                / (F.sqrt(dot("q_vec", "q_vec")) * F.sqrt(dot("c_vec", "c_vec")))
+            ).alias("cos"),
         )
     )
     return _rank_k(scored, k)

@@ -19,7 +19,7 @@ skew; these are the explicit tools for the cases AQE can't see:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -92,9 +92,8 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> "list[tuple]":
 
     Returns ``[(value, exact_count), ...]`` sorted by count descending,
     only values above the n/(k+1) threshold — the ACTUAL hot keys, not
-    just ``key_skew_ratio``'s existence signal. Feed them to
-    ``hot_key_salted_join`` for targeted skew mitigation. NULLs are
-    ignored (they never join)."""
+    just ``key_skew_ratio``'s existence signal. NULLs are ignored
+    (they never join)."""
     import pandas as pd
 
     def mg(batches):
@@ -141,65 +140,3 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> "list[tuple]":
         (r[col], r["_n"]) for r in agg if r["_n"] * (k + 1) > n
     ]
     return sorted(out, key=lambda t: (-t[1], str(t[0])))
-
-
-def hot_key_salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    keys: "list[str]",
-    hot_keys: "list",
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """``salted_join`` that replicates ONLY the hot keys' small-side
-    rows (round 13) — the production skew pattern: blanket salting
-    pays n_salts× shuffle on the WHOLE small side, but skew lives in a
-    handful of keys (``heavy_hitters`` names them). Cold keys join
-    with a constant salt (no replication, no fan-out); hot keys fan
-    over ``n_salts`` reducers; results are identical to the plain join
-    for the supported join types (same multiplicity argument as
-    ``salted_join``, and the same right/full-outer refusal).
-
-    ``hot_keys``: scalars for a single key, tuples for composite keys.
-    Replication cost: |small ∩ hot| · n_salts rows — key-count-sized,
-    not table-sized."""
-    h = how.lower().replace("_", "")
-    if h not in (
-        "inner", "left", "leftouter", "leftsemi", "leftanti", "semi", "anti"
-    ):
-        raise ValueError(
-            f"hot_key_salted_join does not support how={how!r}: the "
-            "replicated side's unmatched rows would multiply"
-        )
-    if not hot_keys:
-        raise ValueError("hot_keys is empty — use a plain join")
-    tuples = [
-        tuple(hk) if isinstance(hk, (tuple, list)) else (hk,)
-        for hk in hot_keys
-    ]
-    if any(len(t) != len(keys) for t in tuples):
-        raise ValueError("each hot key must match the key column count")
-
-    def is_hot(frame: DataFrame) -> Column:
-        key_struct = F.struct(*[frame[c] for c in keys])
-        return key_struct.isin(
-            [F.struct(*[F.lit(v) for v in t]) for t in tuples]
-        )
-
-    salt_values = F.array(*[F.lit(i) for i in range(n_salts)])
-    small_rep = small.withColumn(
-        "_salt",
-        F.explode(
-            F.when(is_hot(small), salt_values).otherwise(F.array(F.lit(0)))
-        ),
-    )
-    big_salted = big.withColumn(
-        "_salt",
-        F.when(
-            is_hot(big),
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts)
-            ).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    return big_salted.join(small_rep, keys + ["_salt"], how).drop("_salt")

@@ -494,50 +494,18 @@ def minhash_lsh_pairs(
     return out.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def simhash_32(shingles_or_tokens: Column) -> Column:
-    """32-bit SimHash over an array of strings, built from the 32 md5
-    nibbles: bit p = majority over elements of (nibble p ≥ 8). One
-    linear pass; equal fingerprints ⇒ near-identical token sets.
-    Portable to SQL (same md5 nibble arithmetic).
-
-    Per-row Column form for contexts without a grouped aggregate
-    (streaming micro-batch expressions). The batch path is
-    ``simhash_fingerprints``: this form evaluates 32 interpreted
-    ``aggregate`` traversals each recomputing md5 per element, which
-    the explode→groupBy rewrite measured ~10× faster replaces."""
-    arr = shingles_or_tokens
-
-    def vote(p: int) -> Column:
-        return F.aggregate(
-            arr,
-            F.lit(0),
-            lambda acc, s: acc
-            + F.when(
-                F.conv(F.substring(F.md5(s), p + 1, 1), 16, 10).cast("int") >= 8,
-                F.lit(1),
-            ).otherwise(F.lit(-1)),
-        )
-
-    bits = [
-        F.when(vote(p) > 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**p)
-        for p in range(32)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
 def simhash_fingerprints(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
 ) -> DataFrame:
-    """(doc_id, simhash) — codegen'd plan: explode the shingle set,
-    hash each shingle ONCE (the Column form recomputes md5 32×, once
-    per bit), then 32 whole-stage-codegen SUM(±1) nibble votes in a
-    single grouped aggregate, reassembled into the 32-bit fingerprint.
-    Identical values to ``simhash_32`` (same md5-nibble majority).
-    Map-side combine collapses each doc's votes before the shuffle,
-    so the exchange carries docs × 32 longs."""
+    """(doc_id, simhash) — 32-bit SimHash over each doc's shingle set:
+    bit p = majority over shingles of (md5 nibble p ≥ 8); equal
+    fingerprints ⇒ near-identical shingle sets. Codegen'd plan:
+    explode the shingle set, hash each shingle ONCE, then 32
+    whole-stage-codegen SUM(±1) nibble votes in a single grouped
+    aggregate, reassembled into the 32-bit fingerprint (a per-row
+    ``aggregate`` Column form recomputing md5 per bit measured ~10×
+    slower). Map-side combine collapses each doc's votes before the
+    shuffle, so the exchange carries docs × 32 longs."""
     sh = _with_shingles(df, id_col, text_col, shingle_n)
     ex = sh.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.md5("s").alias("h")

@@ -4896,38 +4896,6 @@ def _branch_fork(bdir: str) -> dict:
         return json.load(f)
 
 
-def list_branches(table_dir: str) -> list[dict]:
-    """Live branches of the table: ``[{name, fork_version, version,
-    publishing}]`` — ``publishing`` marks a branch whose
-    ``publish_branch`` crashed mid-flight (re-run it to complete)."""
-    root = os.path.join(table_dir, _BRANCHES_SUBDIR)
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in sorted(os.listdir(root)):
-        bdir = os.path.join(root, name)
-        versions = _manifests(bdir)
-        if not versions and not os.path.exists(
-            os.path.join(bdir, "_versions", _PUBLISH_INTENT)
-        ):
-            continue  # empty shell (crashed create before clone publish)
-        try:
-            fork_v = _branch_fork(bdir).get("version")
-        except FileNotFoundError:
-            fork_v = None
-        out.append(
-            {
-                "name": name,
-                "fork_version": fork_v,
-                "version": versions[-1] if versions else None,
-                "publishing": os.path.exists(
-                    os.path.join(bdir, "_versions", _PUBLISH_INTENT)
-                ),
-            }
-        )
-    return out
-
-
 def drop_branch(table_dir: str, name: str) -> None:
     """Delete an UNPUBLISHED branch: unregister its vacuum guard on the
     parent and remove the branch subtree (its own data commits die with

@@ -961,10 +961,12 @@ def embedding_ann_ivf(
             f_ivfsq.result(), f_ivfpq.result(), f_sem.result(),
         )
     if eager:
-        # the audits are materialized (checkpointed) — release the
-        # per-call index cache; the lazy frame still reads it, so
-        # tools/plan_audit.py drops it after taking the plan
-        idx.unpersist()
+        # the audits are materialized (local checkpoints, which the
+        # returned frame reads) — release the per-call caches: corpus,
+        # baseline and index. The lazy frame still reads them, so
+        # tools/plan_audit.py drops them after taking the plan
+        for cached in (idx, bf, emb):
+            cached.unpersist()
     return (
         ivf.unionByName(ivfpq)
         .unionByName(pq)

@@ -17,19 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # Dimension-sized tables we always broadcast in star joins.
 SMALL_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
 
@@ -51,9 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -275,18 +275,3 @@ def sessionize_batch(events: DataFrame, gap: dt.timedelta = SESSION_GAP) -> Data
         )
         .drop("session_id")
     )
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exactly-once record dedup on a business key — the
-    streaming analog of the batch W1 window-dedup. State holds one entry
-    per key seen within the watermark horizon and is evicted as event
-    time advances, so state size is bounded by (arrival rate × horizon),
-    not by stream length. Use when upstream retries can re-deliver rows
-    (the reference's HTTP retry + FORCE=TRUE replay semantics)."""
-    keys = key_cols or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)

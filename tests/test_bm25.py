@@ -96,36 +96,6 @@ def test_bm25_prebuilt_index_and_shapes(spark):
     doc_lens.unpersist()
 
 
-def test_rrf_fusion_hand_computed(spark):
-    """RRF: a doc ranked well by BOTH retrievers beats a doc ranked
-    first by only one — hand-checked 1/(c+rank) arithmetic."""
-    from polygon_daily_market_data_pipeline_spark.operators.bm25 import (
-        rrf_fuse,
-    )
-
-    r1 = spark.createDataFrame(
-        [(0, 1, 100), (0, 2, 200), (0, 3, 300)],
-        "query_id long, rank int, doc_id long",
-    )
-    r2 = spark.createDataFrame(
-        [(0, 1, 400), (0, 2, 100), (0, 3, 200)],
-        "query_id long, rank int, doc_id long",
-    )
-    out = rrf_fuse([r1, r2], k=4, c=60).collect()
-    got = [(r["rank"], r["doc_id"]) for r in out]
-    s = {
-        100: 1 / 61 + 1 / 62,
-        200: 1 / 62 + 1 / 63,
-        300: 1 / 63,
-        400: 1 / 61,
-    }
-    want_order = sorted(s, key=lambda d: (-s[d], d))
-    assert [d for _r, d in got] == want_order
-    assert got[0] == (1, 100)  # consistently-good beats single-first
-    for r in out:
-        assert abs(r["rrf_score"] - s[r["doc_id"]]) < 1e-12
-
-
 def test_mmr_demotes_near_duplicates_and_lambda1_is_relevance(spark):
     from polygon_daily_market_data_pipeline_spark.operators.bm25 import (
         mmr_rerank,
@@ -208,26 +178,3 @@ def test_versioned_index_serving_and_incremental_update(spark, tmp_path):
         (r["rank"], r["doc_id"]) for r in inline
     ]
 
-
-def test_prune_postings_gates_stopwords_and_hapax(spark):
-    from polygon_daily_market_data_pipeline_spark.operators.bm25 import (
-        prune_postings,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat"),
-            (2, "the dog ran"),
-            (3, "the cat slept"),
-            (4, "the bird zzrare"),
-        ],
-        "doc_id long, text string",
-    )
-    postings, _dl = bm25_postings(docs)
-    pruned = prune_postings(postings, 4, min_df=2, max_df_ratio=0.9)
-    terms = {r["term"] for r in pruned.select("term").distinct().collect()}
-    assert "the" not in terms      # df=4 > 0.9*4 — stopword gated
-    assert "zzrare" not in terms   # df=1 < 2 — hapax gated
-    assert "cat" in terms          # df=2 survives
-    # default thresholds are the identity
-    assert prune_postings(postings, 4).count() == postings.count()

@@ -17,7 +17,6 @@ from polygon_daily_market_data_pipeline_spark.operators.cbo import (
     key_skew_ratio,
     physical_plan,
     plan_join_with_stats,
-    sidecar_ndv,
     table_size_estimate,
 )
 from polygon_daily_market_data_pipeline_spark.operators.versioned import (
@@ -102,7 +101,6 @@ def test_bytes_threshold_and_planning_runs_zero_jobs(spark, fact_dim):
     sc = spark.sparkContext
     before = sc.statusTracker().getJobIdsForGroup(None)
     table_size_estimate(ddir)
-    sidecar_ndv(ddir, "o_orderpriority")
     key_skew_ratio(fdir, "o_orderpriority")
     fast_aggregate(ddir, "dval")
     assert sc.statusTracker().getJobIdsForGroup(None) == before
@@ -831,63 +829,6 @@ def test_heavy_hitters_exact_with_guarantee(spark):
         spark.range(50).select(F.lit(None).cast("string").alias("k"))
     )
     assert dict(heavy_hitters(withnull, "k", k=16))["hot"] == 4000
-
-
-def test_hot_key_salted_join_targeted_replication(spark):
-    """Only the hot keys' small-side rows replicate; values equal the
-    plain join for every supported join type; right outer refused."""
-    from polygon_daily_market_data_pipeline_spark.operators.skew import (
-        hot_key_salted_join,
-    )
-
-    big = spark.range(5000).select(
-        F.when(F.col("id") < 4000, F.lit("hot"))
-        .otherwise((F.col("id") % 37).cast("string")).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.createDataFrame(
-        [("hot", 1)] + [(str(i), i + 10) for i in range(37)]
-        + [("unmatched", 99)],
-        "k string, attr int",
-    )
-    for how in ("inner", "left", "left_semi", "left_anti"):
-        plain = big.join(
-            small if how not in ("left_semi", "left_anti") else small,
-            "k", how,
-        )
-        salted = hot_key_salted_join(big, small, ["k"], ["hot"], how=how)
-        assert sorted(map(tuple, salted.collect())) == sorted(
-            map(tuple, plain.collect())
-        ), how
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="multiply"):
-        hot_key_salted_join(big, small, ["k"], ["hot"], how="right")
-    with _pytest.raises(ValueError, match="empty"):
-        hot_key_salted_join(big, small, ["k"], [])
-    # the hot key's rows spread over multiple reducers while the cold
-    # keys keep a single salt — probe the salted big side's spread
-    from pyspark.sql import functions as _F
-
-    salted_inner = hot_key_salted_join(
-        big, small, ["k"], ["hot"], n_salts=8
-    )
-    # structural: per-(k) max single-partition share of the hot key
-    # after an explicit repartition on the join keys
-    spread = (
-        big.withColumn(
-            "_salt",
-            _F.when(
-                _F.col("k") == "hot",
-                _F.pmod(_F.xxhash64("k", "v"), _F.lit(8)).cast("int"),
-            ).otherwise(_F.lit(0)),
-        )
-        .groupBy("k", "_salt").count()
-        .where(_F.col("k") == "hot")
-        .agg(_F.max("count"), _F.count(_F.lit(1)))
-        .first()
-    )
-    assert spread[1] == 8 and spread[0] < 4000  # hot key fanned over 8
 
 
 def test_filtered_bound_tolerates_type_mismatched_bound_on_histogram(

@@ -207,6 +207,32 @@ def test_run_suite_reports_a_conf_leak(spark, capsys, monkeypatch):
     ) in capsys.readouterr().out
 
 
+def _cached_plans(spark) -> int:
+    """Plans in the context's shared CacheManager (no public count)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_eager_ann_audit_leaves_no_cached_plans(spark):
+    """Like its conf, a caller's shared cache comes back as it was: the
+    registered embedding_ann_ivf persists its corpus, baseline and
+    shared index for the audits, and the eager call returns a frame
+    that reads only the audits' local checkpoints — and still
+    evaluates."""
+    from polygon_daily_market_data_pipeline_spark.plans.llm_ops import (
+        embedding_ann_ivf,
+    )
+
+    before = _cached_plans(spark)
+    out = embedding_ann_ivf(spark, SF)
+    assert _cached_plans(spark) <= before
+    assert {r["method"] for r in out.collect()} == {
+        "ivf", "ivfpq", "pq", "sq", "ivfsq", "semdedup"
+    }
+
+
 def test_run_union_matches_composed_oracle_at_sf0_001(spark):
     """One warehouse branch through ``_run_union`` against its composed
     DuckDB oracle, compared by fingerprint."""

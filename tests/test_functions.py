@@ -117,19 +117,30 @@ def test_range_join_binned_vs_naive(spark):
     assert got == want == {(1, 5, "a"), (1, 1, "b")}
 
 
+def _md5_sample(df, key, rate):
+    """The flat md5-threshold Bernoulli sample the sampling module
+    builds on: keep a row iff md5(key) < hex_threshold(rate)."""
+    from pyspark.sql import functions as F
+
+    from polygon_daily_market_data_pipeline_spark.operators.sampling import (
+        hex_threshold,
+    )
+
+    return df.where(F.md5(F.col(key).cast("string")) < hex_threshold(rate))
+
+
 def test_deterministic_sample_and_split(spark):
     from polygon_daily_market_data_pipeline_spark.operators.sampling import (
-        deterministic_sample,
         train_val_test_split,
     )
 
     df = spark.range(0, 10000).withColumnRenamed("id", "doc_id")
-    s1 = {r.doc_id for r in deterministic_sample(df, "doc_id", 0.2).collect()}
-    s2 = {r.doc_id for r in deterministic_sample(df, "doc_id", 0.2).collect()}
+    s1 = {r.doc_id for r in _md5_sample(df, "doc_id", 0.2).collect()}
+    s2 = {r.doc_id for r in _md5_sample(df, "doc_id", 0.2).collect()}
     assert s1 == s2  # run-to-run deterministic
     assert 0.17 < len(s1) / 10000 < 0.23  # near the target rate
     # sample nesting: a 10% sample is a subset of the 20% sample
-    s_small = {r.doc_id for r in deterministic_sample(df, "doc_id", 0.1).collect()}
+    s_small = {r.doc_id for r in _md5_sample(df, "doc_id", 0.1).collect()}
     assert s_small <= s1
 
     split = train_val_test_split(df, "doc_id", train=0.8, val=0.1)
@@ -153,7 +164,6 @@ def test_stratified_sample_per_stratum_rates(spark):
     from pyspark.sql import functions as F
 
     from polygon_daily_market_data_pipeline_spark.operators.sampling import (
-        deterministic_sample,
         stratified_sample,
     )
 
@@ -177,7 +187,7 @@ def test_stratified_sample_per_stratum_rates(spark):
     for lang, rate in rates.items():
         want = {
             r.doc_id
-            for r in deterministic_sample(
+            for r in _md5_sample(
                 df.where(F.col("lang") == lang), "doc_id", rate
             ).collect()
         }
@@ -230,32 +240,17 @@ def test_mix_rates_for_token_budget(spark):
         mix_rates_for_token_budget(
             df, "lang", "n_tokens", {"en": 0.7}, 1000
         )
-
-
-def test_char_shingles_cjk(spark):
-    from polygon_daily_market_data_pipeline_spark.functions.text import (
-        char_shingles,
-        word_shingles,
+    # an all-NULL stratum (SUM is NULL) and an absent one both price as
+    # 0 available: rate 1.0, shortfall visible
+    edge = spark.createDataFrame(
+        [(i, "en", 10) for i in range(20)]
+        + [(100 + i, "zz", None) for i in range(5)],
+        "doc_id long, lang string, w long",
     )
-    import pyspark.sql.functions as SF
-
-    df = spark.createDataFrame(
-        [(1, "深度学习模型训练"), (2, "深度学习模型训练数据"), (3, "ab")],
-        "id long, text string",
-    )
-    out = df.select(
-        "id",
-        SF.size(word_shingles("text")).alias("nw"),
-        SF.size(char_shingles("text", 3)).alias("nc"),
-    ).collect()
-    rows = {r.id: (r.nw, r.nc) for r in out}
-    assert rows[1][0] == 0          # word shingles: one giant token, none
-    assert rows[1][1] == 6          # 8 chars → 6 distinct 3-grams
-    assert rows[3] == (0, 0)        # too short for either
-    # near-dup detectable via char shingles: docs 1,2 share 6 of 8 grams
-    a = set(df.where("id=1").select(SF.explode(char_shingles("text", 3))).toPandas().iloc[:, 0])
-    b = set(df.where("id=2").select(SF.explode(char_shingles("text", 3))).toPandas().iloc[:, 0])
-    assert len(a & b) / len(a | b) >= 0.7
+    shares = {"en": 0.5, "zz": 0.25, "missing": 0.25}
+    assert mix_rates_for_token_budget(edge, "lang", "w", shares, 100.0) == {
+        "en": 0.5 * 100 / 200, "zz": 1.0, "missing": 1.0,
+    }
 
 
 def test_calendar_shims_wide_date_sweep(spark):
@@ -311,13 +306,12 @@ def test_orc_roundtrip_format_breadth(spark, tmp_path):
 
 
 def test_sql_api_equivalence(spark):
-    """Every table registers as a temp view and the SQL API produces the
-    same result as the DataFrame plan (same Catalyst underneath)."""
-    from polygon_daily_market_data_pipeline_spark.plans.analytics import QUERIES
-    from polygon_daily_market_data_pipeline_spark.sources.tables import load_tables
+    """A table registered as a temp view gives the SQL API the same
+    result as the DataFrame plan (same Catalyst underneath)."""
+    import __spark_entry__
 
-    for name, df in load_tables(spark, "/root/testdata/sf0.001").items():
-        df.createOrReplaceTempView(name)
+    plan = __spark_entry__.entry(spark)  # pricing_summary over lineitem
+    spark.read.parquet(*plan.inputFiles()).createOrReplaceTempView("lineitem")
     got = spark.sql("""
         SELECT l_returnflag, l_linestatus,
                ROUND(SUM(l_quantity), 2)      AS sum_qty,
@@ -330,7 +324,7 @@ def test_sql_api_equivalence(spark):
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
     """).collect()
-    want = QUERIES["pricing_summary"](spark, "/root/testdata/sf0.001").collect()
+    want = plan.collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 

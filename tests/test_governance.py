@@ -191,60 +191,6 @@ def test_keyed_hash_tokenization(spark, gov_table):
     assert len(ids) == 4 and ids != {1, 2, 3, 4}  # distinct keyed tokens
 
 
-def test_k_anonymity_violations_and_enforcement(spark):
-    from polygon_daily_market_data_pipeline_spark.operators.governance import (
-        enforce_k_anonymity,
-        k_anonymity_violations,
-    )
-
-    rows = (
-        [("30-40", "US", i) for i in range(5)]
-        + [("30-40", "DE", 10), ("30-40", "DE", 11)]
-        + [("40-50", "US", 20)]
-        + [(None, "FR", 30)]
-    )
-    df = spark.createDataFrame(rows, "age string, region string, payload long")
-    viol = k_anonymity_violations(df, ["age", "region"], k=3).collect()
-    assert [(r["age"], r["region"], r["group_size"]) for r in viol] == [
-        (None, "FR", 1),
-        ("40-50", "US", 1),
-        ("30-40", "DE", 2),
-    ]
-    kept = enforce_k_anonymity(df, ["age", "region"], k=3)
-    assert kept.count() == 5
-    assert {r["payload"] for r in kept.collect()} == set(range(5))
-    gen = enforce_k_anonymity(df, ["age", "region"], k=3, mode="generalize")
-    assert gen.count() == 9  # row counts survive
-    nulled = {r["payload"] for r in gen.collect() if r["age"] is None and r["region"] is None}
-    assert nulled == {10, 11, 20, 30}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown mode"):
-        enforce_k_anonymity(df, ["age"], 3, mode="redact")
-
-
-def test_catalog_sql_routes_through_governance(spark, gov_table, tmp_path):
-    from polygon_daily_market_data_pipeline_spark.operators.catalog import (
-        catalog_commit,
-        catalog_sql,
-    )
-
-    set_masking_policy(spark, gov_table, "email", "null", exempt=["auditor"])
-    set_row_access_policy(spark, gov_table, "us", "region = 'US'")
-    cdir = str(tmp_path / "cat")
-    catalog_commit(cdir, {"people": gov_table})
-    q = "SELECT id, email FROM people ORDER BY id"
-    none_rows = catalog_sql(spark, cdir, q, principal=None).collect()
-    assert [r["id"] for r in none_rows] == [1, 3]  # row policy applied
-    assert all(r["email"] is None for r in none_rows)  # mask applied
-    aud = catalog_sql(spark, cdir, q, principal="auditor").collect()
-    assert [r["id"] for r in aud] == [1, 3]  # not exempt from the row policy
-    assert aud[0]["email"] == "alice@example.com"  # exempt from the mask
-    # legacy raw registration (argument omitted) stays available
-    raw = catalog_sql(spark, cdir, q).collect()
-    assert [r["id"] for r in raw] == [1, 2, 3, 4]
-
-
 def test_access_history_audit(spark, gov_table):
     from polygon_daily_market_data_pipeline_spark.operators.governance import (
         access_history,

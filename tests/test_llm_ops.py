@@ -283,43 +283,6 @@ def test_neardup_clusters_split_is_leak_free(spark):
     }
 
 
-def test_training_shard_export_deterministic(spark, tmp_path):
-    import glob
-    import hashlib
-
-    from polygon_daily_market_data_pipeline_spark.operators.export import (
-        write_training_shards,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
-        "doc_id", "lang", "n_chars"
-    )
-
-    def digest(root):
-        parts = sorted(glob.glob(root + "/part-*"))
-        h = hashlib.md5()
-        for p in parts:
-            with open(p, "rb") as f:
-                h.update(f.read())
-        return len(parts), h.hexdigest()
-
-    p1, p2, p3 = (str(tmp_path / n) for n in ("s1", "s2", "s3"))
-    n1 = write_training_shards(docs, p1, "doc_id", rows_per_shard=100, seed=7)
-    write_training_shards(docs, p2, "doc_id", rows_per_shard=100, seed=7)
-    write_training_shards(docs, p3, "doc_id", rows_per_shard=100, seed=8)
-
-    files1, d1 = digest(p1)
-    files2, d2 = digest(p2)
-    _, d3 = digest(p3)
-    assert files1 == files2 == 5  # 500 docs / 100 per shard
-    assert d1 == d2               # same seed → byte-identical shards
-    assert d1 != d3               # different seed → different order
-    # no rows lost or duplicated through the shuffle
-    back = spark.read.json(p1)
-    assert back.count() == 500
-    assert back.select("doc_id").distinct().count() == 500
-
-
 def test_parse_image_header_real_formats():
     """decoder='headers' is a REAL decode: exact dimensions out of
     spec-conformant PNG/GIF/BMP/JPEG headers, None for non-images."""
@@ -1615,137 +1578,6 @@ def _lm_corpus(spark, sf="/root/testdata/sf0.001"):
     )
 
     return load_table(spark, sf, "documents").select("doc_id", "text")
-
-
-def test_lm_model_incremental_equals_full_retrain(spark, tmp_path):
-    """The round-13 law (VERDICT r12 #5), exact by integer counts: an
-    overwrite-train on corpus A extended with update-trains on batches
-    B and C scores every doc IDENTICALLY to a fresh train on A∪B∪C —
-    including docs whose bigrams only one batch saw, and docs with
-    bigrams NO batch saw (the smoothed zero-count ceiling)."""
-    from polygon_daily_market_data_pipeline_spark.operators.lm_score import (
-        score_with_bigram_model,
-        train_bigram_model,
-    )
-
-    docs = _lm_corpus(spark)
-    a = docs.where("doc_id % 3 = 0")
-    b = docs.where("doc_id % 3 = 1")
-    c = docs.where("doc_id % 3 = 2")
-    inc_dir = str(tmp_path / "m_inc")
-    train_bigram_model(a, inc_dir)
-    train_bigram_model(b, inc_dir, mode="update")
-    train_bigram_model(c, inc_dir, mode="update")
-    full_dir = str(tmp_path / "m_full")
-    train_bigram_model(docs, full_dir)
-    probe = docs.limit(40).unionByName(
-        spark.createDataFrame(
-            [(10**9, "zzqx wvut zzqx never seen bigram soup")],
-            "doc_id long, text string",
-        )
-    )
-    key = lambda r: (r.doc_id, r.n_bigrams, r.surprisal)  # noqa: E731
-    got_inc = sorted(
-        key(r)
-        for r in score_with_bigram_model(spark, inc_dir, probe).collect()
-    )
-    got_full = sorted(
-        key(r)
-        for r in score_with_bigram_model(spark, full_dir, probe).collect()
-    )
-    assert got_inc == got_full and len(got_inc) == 41
-
-
-def test_lm_model_scoring_reads_only_model_and_matches_selftrain(
-    spark, tmp_path
-):
-    """Scoring-only path: reads the MODEL TABLE plus the batch being
-    scored and nothing else (every scanned file lives under the model
-    dir), writes no model version — and scoring the training corpus
-    against its own stored model reproduces bigram_surprisal_scores
-    bit-for-bit (the consistency law tying the deployment shape to the
-    registered column)."""
-    from polygon_daily_market_data_pipeline_spark.operators.lm_score import (
-        bigram_surprisal_scores,
-        score_with_bigram_model,
-        train_bigram_model,
-    )
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        _manifests,
-    )
-
-    docs = _lm_corpus(spark).where("doc_id % 7 = 0").localCheckpoint()
-    mdir = str(tmp_path / "model")
-    train_bigram_model(docs, mdir)
-    versions_before = _manifests(mdir)
-    scored = score_with_bigram_model(spark, mdir, docs)
-    # the scoring lineage's only file-backed input is the model table
-    # (the batch is an in-memory checkpoint; the persisted sub-frames
-    # hide their scans from inputFiles, so pin both halves): nothing
-    # under testdata is scanned, and the model read itself touches
-    # only model-dir files
-    assert all("/root/testdata" not in f for f in scored.inputFiles())
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        read_version,
-    )
-
-    mfiles = read_version(spark, mdir).inputFiles()
-    assert mfiles and all(str(tmp_path / "model") in f for f in mfiles)
-    key = lambda r: (r.doc_id, r.n_bigrams, r.surprisal)  # noqa: E731
-    assert sorted(key(r) for r in scored.collect()) == sorted(
-        key(r) for r in bigram_surprisal_scores(docs).collect()
-    )
-    assert _manifests(mdir) == versions_before  # no model write
-
-
-def test_lm_model_compaction_score_invariant(spark, tmp_path):
-    """compact_bigram_model folds the log-structured appends to one
-    row per bigram — scores identical before and after, stored rows
-    drop to V, and a pinned model_version keeps scoring the PRE-update
-    model under concurrent updates (replayable scoring)."""
-    from polygon_daily_market_data_pipeline_spark.operators.lm_score import (
-        compact_bigram_model,
-        score_with_bigram_model,
-        train_bigram_model,
-    )
-    from polygon_daily_market_data_pipeline_spark.operators.versioned import (
-        read_version,
-    )
-
-    docs = _lm_corpus(spark).where("doc_id % 5 = 0").localCheckpoint()
-    a = docs.where("doc_id % 2 = 0")
-    b = docs.where("doc_id % 2 = 1")
-    mdir = str(tmp_path / "model")
-    v0 = train_bigram_model(a, mdir)
-    train_bigram_model(b, mdir, mode="update")
-    probe = docs.limit(25)
-    key = lambda r: (r.doc_id, r.n_bigrams, r.surprisal)  # noqa: E731
-    before = sorted(
-        key(r) for r in score_with_bigram_model(spark, mdir, probe).collect()
-    )
-    raw_rows = read_version(spark, mdir).count()
-    compact_bigram_model(spark, mdir)
-    folded = read_version(spark, mdir)
-    assert folded.count() == folded.select("g").distinct().count() <= raw_rows
-    after = sorted(
-        key(r) for r in score_with_bigram_model(spark, mdir, probe).collect()
-    )
-    assert before == after
-    # pinned-version scoring: the v0 (A-only) model is reproducible
-    # even though the table moved on — and differs from the live model
-    pinned = sorted(
-        key(r)
-        for r in score_with_bigram_model(
-            spark, mdir, probe, model_version=v0
-        ).collect()
-    )
-    a_dir = str(tmp_path / "model_a")
-    train_bigram_model(a, a_dir)
-    assert pinned == sorted(
-        key(r)
-        for r in score_with_bigram_model(spark, a_dir, probe).collect()
-    )
-    assert pinned != after
 
 
 def test_dsir_weights_hand_computed_and_ordering(spark):

@@ -119,7 +119,7 @@ def test_ohlc_bars_hand_computed_with_timestamp_ties(spark):
     import datetime as dt
 
     from polygon_daily_market_data_pipeline_spark.functions.measures import (
-        ohlc_bars,
+        ohlc_aggs,
     )
 
     t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
@@ -144,7 +144,14 @@ def test_ohlc_bars_hand_computed_with_timestamp_ties(spark):
     ).repartition(5)
     bars = {
         (r["bar_start"].hour, r["symbol"]): r
-        for r in ohlc_bars(df, "1 hour", group_cols=["symbol"]).collect()
+        for r in df.groupBy(
+            F.window("ts", "1 hour").start.alias("bar_start"), "symbol"
+        )
+        .agg(
+            *ohlc_aggs("ts", "value", "event_id"),
+            F.count(F.lit(1)).alias("n_ticks"),
+        )
+        .collect()
     }
     a9 = bars[(9, "A")]
     assert (a9["open"], a9["high"], a9["low"], a9["close"], a9["n_ticks"]) \

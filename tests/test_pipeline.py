@@ -402,31 +402,6 @@ def test_zorder_write_prunes_on_both_columns(spark, tmp_path):
     )
 
 
-def test_bloom_filter_write_options(spark, tmp_path):
-    """Bloom filters land in the footer for exactly the configured
-    columns — the point-lookup complement to z-order's range pruning
-    (equality probe on an unclustered high-cardinality key skips row
-    groups via ~1 byte/value filters instead of reading data pages)."""
-    import glob
-
-    from polygon_daily_market_data_pipeline_spark.operators.layout import (
-        bloom_filter_offsets,
-        bloom_filter_options,
-    )
-    from polygon_daily_market_data_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "ev_bloom")
-    w = ev.coalesce(1).write.mode("overwrite")
-    for k, v in bloom_filter_options({"event_id": 1000}).items():
-        w = w.option(k, v)
-    w.parquet(path)
-
-    offs = bloom_filter_offsets(spark, glob.glob(path + "/*.parquet")[0])
-    assert offs["event_id"] >= 0, offs
-    assert all(v == -1 for c, v in offs.items() if c != "event_id"), offs
-
-
 def test_incremental_aggregate_refresh(spark, tmp_path):
     """Incremental materialized-aggregate maintenance: each refresh
     scans ONLY unprocessed partitions (asserted via the scan's

@@ -110,40 +110,6 @@ def test_daily_change_per_key_window_is_key_partitioned(spark):
     assert out_types["date_sk"] == "bigint", out_types
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from polygon_daily_market_data_pipeline_spark.operators.bucketing import (
-        read_table,
-        write_bucketed,
-    )
-
-    li = spark.range(0, 10000).selectExpr(
-        "id % 1000 as orderkey", "id as linenum", "cast(id * 1.5 as double) as price"
-    )
-    orders = spark.range(0, 1000).selectExpr(
-        "id as orderkey", "concat('c', id % 37) as cust"
-    )
-    write_bucketed(li, "b_lineitem", ["orderkey"], n_buckets=4)
-    write_bucketed(orders, "b_orders", ["orderkey"], n_buckets=4)
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = read_table(spark, "b_lineitem").join(
-            read_table(spark, "b_orders"), "orderkey"
-        )
-        from tests.test_plans import explain
-
-        plan = explain(j)
-        # co-located: sort-merge join directly over bucketed scans,
-        # zero Exchange nodes
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert j.count() == 10000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
 def test_asof_join_is_not_nested_loop(spark):
     plan = explain(QUERIES["events_asof_click_view"](spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan

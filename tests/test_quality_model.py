@@ -1,30 +1,11 @@
 """Model-based quality filtering (operators/quality_model.py): the
-trained reference-vs-background classifier gate. Laws pinned here:
-
-- separation: with a marker vocabulary in the reference distribution,
-  every held-out reference-like doc outranks every background-like doc
-  (perfect AUC on a separable synthetic — the classifier learned the
-  distribution, not noise);
-- threshold gate: filter_by_quality_model keeps exactly the >= docs
-  and preserves the input schema;
-- scale shape: scoring the corpus never re-fits anything — the plan is
-  one map pass over the scored frame (no shuffle introduced by the
-  model transform itself);
-- determinism: two trainings on identical data produce identical keep
-  sets (convex objective, fixed init).
+pinned integer-quantized linear gate — DuckDB parity, separation of
+prose from boilerplate soup, and a map-only plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from polygon_daily_market_data_pipeline_spark.operators.quality_model import (
-    filter_by_quality_model,
-    quality_model_scores,
-    train_quality_model,
-)
-
-# reference style: clean prose markers; background style: boilerplate
+# reference style: clean prose markers
 _REF = [
     "the committee published a detailed analysis of the results",
     "researchers describe a careful study of the observed data",
@@ -35,16 +16,6 @@ _REF = [
     "the study presents a detailed review of prior findings",
     "researchers explain the methodology behind the published report",
 ]
-_BG = [
-    "click here buy now free shipping limited offer",
-    "subscribe subscribe subscribe win win win prizes",
-    "cheap deals cheap deals best price click click",
-    "lorem ipsum dolor sit amet consectetur filler filler",
-    "buy cheap prizes now free free free offer offer",
-    "click the link win a prize subscribe for deals",
-    "limited offer best price buy now click here",
-    "free prizes click subscribe win cheap deals now",
-]
 
 
 def _docs(spark, texts, start=0):
@@ -52,83 +23,6 @@ def _docs(spark, texts, start=0):
         [(start + i, t) for i, t in enumerate(texts)],
         "doc_id long, text string",
     )
-
-
-def _model(spark):
-    return train_quality_model(
-        _docs(spark, _REF),
-        _docs(spark, _BG, start=100),
-        num_features=1 << 12,
-    )
-
-
-def test_separates_reference_from_background(spark):
-    model = _model(spark)
-    held_ref = _docs(
-        spark,
-        [
-            "the analysis presents detailed evidence and findings",
-            "a careful study explains the published methodology",
-        ],
-        start=200,
-    )
-    held_bg = _docs(
-        spark,
-        [
-            "click now free offer buy cheap prizes",
-            "subscribe win deals click free now",
-        ],
-        start=300,
-    )
-    corpus = held_ref.unionByName(held_bg)
-    scores = {
-        r["doc_id"]: r["quality_prob"]
-        for r in quality_model_scores(corpus, model).collect()
-    }
-    assert len(scores) == 4
-    # perfect separation on the held-out separable synthetic
-    assert min(scores[200], scores[201]) > max(scores[300], scores[301])
-
-
-def test_threshold_gate_keeps_exactly_at_or_above(spark):
-    model = _model(spark)
-    corpus = _docs(spark, _REF + _BG, start=500)
-    scores = {
-        r["doc_id"]: r["quality_prob"]
-        for r in quality_model_scores(corpus, model).collect()
-    }
-    kept = filter_by_quality_model(corpus, model, threshold=0.5)
-    assert kept.columns == corpus.columns
-    kept_ids = {r["doc_id"] for r in kept.collect()}
-    assert kept_ids == {d for d, p in scores.items() if p >= 0.5}
-    # training members separate at 0.5 on this separable set
-    assert kept_ids == set(range(500, 508))
-
-
-def test_scoring_is_one_map_pass_no_shuffle(spark):
-    model = _model(spark)
-    corpus = _docs(spark, _REF + _BG)
-    plan = (
-        quality_model_scores(corpus, model)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan  # broadcast model, map-only
-
-
-def test_training_is_deterministic(spark):
-    m1, m2 = _model(spark), _model(spark)
-    corpus = _docs(spark, _REF + _BG, start=700)
-    s1 = sorted(
-        (r["doc_id"], round(r["quality_prob"], 9))
-        for r in quality_model_scores(corpus, m1).collect()
-    )
-    s2 = sorted(
-        (r["doc_id"], round(r["quality_prob"], 9))
-        for r in quality_model_scores(corpus, m2).collect()
-    )
-    assert s1 == s2
 
 
 def test_pinned_quality_score_duckdb_parity(spark):
@@ -235,16 +129,3 @@ def test_pinned_quality_score_plan_is_map_only(spark):
     )
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
-
-
-def test_quality_model_scores_rejects_mismatched_num_features(spark):
-    """ADVICE r14: an explicit num_features that differs from the
-    trained model's feature space raises a clear ValueError (and 0 is
-    no longer silently treated as unset)."""
-    import pytest
-
-    model = _model(spark)
-    corpus = _docs(spark, _REF, start=500)
-    for bad in (0, 1 << 10):
-        with pytest.raises(ValueError, match="num_features"):
-            quality_model_scores(corpus, model, num_features=bad)

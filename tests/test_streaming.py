@@ -81,26 +81,6 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     assert [r[2] for r in got_rows if r[0] == 1] == [3, 2]
 
 
-def test_dedup_stream_drops_replayed_events(spark, tmp_path):
-    import pyspark.sql.functions as SF
-    from polygon_daily_market_data_pipeline_spark.plans.streaming_queries import (
-        run_available_now,
-    )
-    from polygon_daily_market_data_pipeline_spark.streaming.events_stream import (
-        dedup_stream,
-    )
-
-    df = _events_df(spark, [(m, 1, 1.0) for m in range(10)])
-    src = str(tmp_path / "dupsrc")
-    df.write.parquet(src)
-    df.limit(4).write.mode("append").parquet(src)  # replayed subset
-
-    ev = spark.readStream.schema(df.schema).parquet(src)
-    out = run_available_now(dedup_stream(ev, ["event_id"]), "t_dedup")
-    assert out.count() == 10
-    assert out.select(SF.countDistinct("event_id")).first()[0] == 10
-
-
 def test_incremental_corpus_dedup(spark, tmp_path):
     from polygon_daily_market_data_pipeline_spark.streaming.corpus_stream import (
         CorpusDedupSink,

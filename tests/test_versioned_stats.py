@@ -447,29 +447,17 @@ def test_truncated_string_envelope_yields_to_sidecar(spark, tmp_path):
     assert envs and all(e is not None and len(e) > 2 and e[2] for e in envs)
 
 
-def test_sidecar_integer_sums_and_stats_fed_mix_plan(spark, tmp_path):
-    """Round 12 (VERDICT r11 #8): ANALYZE records exact integer SUMs
-    that merge ADDITIVELY through analyze_incremental, and
-    mix_rates_from_stats prices the mixing plan from those sidecars
-    alone — the law: stats plan == scan plan, exactly, before AND
-    after a daily append, with zero Spark jobs at planning time."""
-    from polygon_daily_market_data_pipeline_spark.operators.sampling import (
-        mix_rates_for_token_budget,
-        mix_rates_from_stats,
-    )
+def test_sidecar_integer_sums_merge_through_incremental_analyze(spark, tmp_path):
+    """ANALYZE records exact integer SUMs that merge ADDITIVELY through
+    analyze_incremental: per stratum table, a base commit is analyzed,
+    a later append is folded in incrementally, and the described sum
+    equals a scan of the data."""
     from polygon_daily_market_data_pipeline_spark.operators.versioned import (
         analyze_incremental,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     langs = [r[0] for r in docs.select("lang").distinct().collect()]
-    shares = {
-        lang: (0.5 if i == 0 else 0.5 / (len(langs) - 1))
-        for i, lang in enumerate(sorted(langs))
-    }
-    # shard the corpus per stratum (the lang-sharded layout), splitting
-    # each stratum into a base commit + a later "daily" append
-    tables = {}
     for lang in langs:
         tdir = str(tmp_path / f"corpus_{lang}")
         part = docs.where(F.col("lang") == lang).select("doc_id", "n_chars")
@@ -482,33 +470,8 @@ def test_sidecar_integer_sums_and_stats_fed_mix_plan(spark, tmp_path):
         )
         res = analyze_incremental(spark, tdir)
         assert res["mode"] == "incremental"
-        tables[lang] = tdir
-    budget = float(docs.agg(F.sum("n_chars")).first()[0])
-    exact = mix_rates_for_token_budget(docs, "lang", "n_chars", shares, budget)
-    sc = spark.sparkContext
-    before = sc.statusTracker().getJobIdsForGroup(None)
-    from_stats = mix_rates_from_stats(tables, "n_chars", shares, budget)
-    assert sc.statusTracker().getJobIdsForGroup(None) == before  # zero jobs
-    assert from_stats == exact  # EXACT, not within-a-bound
-    # describe surfaces the sum and it equals the scan
-    for lang in langs:
-        row = describe_statistics(spark, tables[lang]).collect()[0]
-        truth = (
-            docs.where(F.col("lang") == lang)
-            .agg(F.sum("n_chars"))
-            .first()[0]
-        )
-        assert row.sum_val == truth
-    # provability gate: a never-analyzed stratum raises, a non-integer
-    # weight column raises
-    bare = str(tmp_path / "bare")
-    commit_version(docs.limit(5).select("doc_id", "n_chars"), bare)
-    with pytest.raises(FileNotFoundError, match="sidecar"):
-        mix_rates_from_stats({langs[0]: bare}, "n_chars", {langs[0]: 1.0}, 1.0)
-    with pytest.raises(ValueError, match="no exact sum"):
-        mix_rates_from_stats(
-            {langs[0]: tables[langs[0]]}, "absent", {langs[0]: 1.0}, 1.0
-        )
+        row = describe_statistics(spark, tdir).collect()[0]
+        assert row.sum_val == part.agg(F.sum("n_chars")).first()[0]
 
 
 def test_sidecar_sum_survives_all_null_and_empty_appends(spark, tmp_path):
@@ -538,35 +501,6 @@ def test_sidecar_sum_survives_all_null_and_empty_appends(spark, tmp_path):
     # and the sidecar equals a full rescan (the standing law)
     full = analyze_version(spark, tdir, ["w"], k=8)
     assert full["columns"]["w"]["sum"] == truth
-
-
-def test_mix_planners_agree_on_empty_and_all_null_strata(spark, tmp_path):
-    """The never-diverge law at its edges (round-12 review): an
-    ANALYZEd stratum with zero rows or all-NULL weights prices as 0
-    available (rate 1.0, shortfall visible) in BOTH planners — the
-    stats side must not raise, the scan side must not crash on
-    SUM = NULL."""
-    from polygon_daily_market_data_pipeline_spark.operators.sampling import (
-        mix_rates_for_token_budget,
-        mix_rates_from_stats,
-    )
-
-    full = spark.createDataFrame(
-        [(i, "en", 10) for i in range(20)]
-        + [(100 + i, "zz", None) for i in range(5)],
-        "doc_id long, lang string, w long",
-    )
-    shares = {"en": 0.5, "zz": 0.25, "missing": 0.25}
-    exact = mix_rates_for_token_budget(full, "lang", "w", shares, 100.0)
-    assert exact == {"en": 0.5 * 100 / 200, "zz": 1.0, "missing": 1.0}
-    tables = {}
-    for lang in ("en", "zz", "missing"):
-        tdir = str(tmp_path / f"s_{lang}")
-        part = full.where(F.col("lang") == lang).select("doc_id", "w")
-        commit_version(part.coalesce(1), tdir)  # 'missing' commits 0 rows
-        analyze_version(spark, tdir, ["w"], k=8)
-        tables[lang] = tdir
-    assert mix_rates_from_stats(tables, "w", shares, 100.0) == exact
 
 
 def test_fast_aggregate_tolerates_empty_files(spark, tmp_path):
